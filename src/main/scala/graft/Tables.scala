@@ -35,11 +35,14 @@ object Tables {
     (String, Long, Long), org.apache.spark.sql.types.StructType]()
 
   /** Memo-key state of `f`: (mtime, length) for a plain file; for a
-    * DIRECTORY table, a hash over every child's (name, mtime, length)
-    * — a part file rewritten in place would otherwise preserve the
-    * dir-level mtime/entry-count and serve a stale schema (r18 verdict
-    * §wrong-4; pinned by TablesSpec's rewrite-in-place test). One
-    * readdir per invocation — still no footer open on a memo hit. */
+    * DIRECTORY table, a hash over every child's (name, state), where
+    * a subdirectory child's state is this hash of ITS children — a
+    * part file rewritten in place, at the top level or inside a
+    * partition subdirectory, would otherwise preserve the dir-level
+    * mtime/entry-count and serve a stale schema (r18 verdict
+    * §wrong-4; pinned by TablesSpec's rewrite-in-place tests). One
+    * readdir per directory per invocation — still no footer open on
+    * a memo hit. */
   private[graft] def fileState(f: java.io.File): (Long, Long) =
     if (!f.isDirectory) (f.lastModified, f.length)
     else {
@@ -47,7 +50,8 @@ object Tables {
       var h = 1469598103934665603L // FNV-1a over the child states
       def mix(x: Long): Unit = { h ^= x; h *= 1099511628211L }
       kids.sortBy(_.getName).foreach { k =>
-        mix(k.getName.hashCode.toLong); mix(k.lastModified); mix(k.length)
+        val (a, b) = fileState(k)
+        mix(k.getName.hashCode.toLong); mix(a); mix(b)
       }
       (h, kids.length.toLong)
     }

@@ -25,20 +25,21 @@ object AsyncPurge {
   private val queue =
     new java.util.concurrent.LinkedBlockingQueue[() => Unit]()
   private val started = new java.util.concurrent.atomic.AtomicBoolean(false)
-  /** True while the worker is executing a task (drain waits on it). */
-  private val workerBusy = new java.util.concurrent.atomic.AtomicBoolean(false)
+  /** Tasks submitted and not yet finished, queued or running: counted
+    * up in [[submit]] BEFORE the enqueue and down only after the task
+    * ran, so a task the worker has dequeued but not started still
+    * counts (drain waits on it). */
+  private val inFlight = new java.util.concurrent.atomic.AtomicInteger(0)
+
+  private def run(task: () => Unit): Unit =
+    try task() catch {
+      case e: Throwable => log.warn(s"async purge failed: $e")
+    } finally inFlight.decrementAndGet()
 
   private def ensureWorker(): Unit =
     if (started.compareAndSet(false, true)) {
-      val t = new Thread(() => {
-        while (true) {
-          val task = queue.take()
-          workerBusy.set(true)
-          try task() catch {
-            case e: Throwable => log.warn(s"async purge failed: $e")
-          } finally workerBusy.set(false)
-        }
-      }, "graft-async-purge")
+      val t = new Thread(() => while (true) run(queue.take()),
+        "graft-async-purge")
       t.setDaemon(true)
       t.start()
       sys.addShutdownHook(drain(30000L))
@@ -48,6 +49,7 @@ object AsyncPurge {
   /** Queue a purge task (idempotent deletion work only). */
   def submit(task: () => Unit): Unit = {
     ensureWorker()
+    inFlight.incrementAndGet()
     queue.put(task)
   }
 
@@ -60,13 +62,11 @@ object AsyncPurge {
     val deadline = System.nanoTime() + timeoutMs * 1000000L
     var task = queue.poll()
     while (task != null) {
-      try task() catch {
-        case e: Throwable => log.warn(s"async purge failed: $e")
-      }
+      run(task)
       task = if (System.nanoTime() < deadline) queue.poll() else null
     }
-    while (workerBusy.get() && System.nanoTime() < deadline)
-      Thread.sleep(5L)
+    while (inFlight.get() > 0 && System.nanoTime() < deadline)
+      Thread.sleep(1L)
   }
 
   /** Pending-task count (test seam). */

@@ -89,6 +89,28 @@ object Lake {
     }
   }
 
+  /** Parsed leading headers of one commit: `ts` = -1 encodes "no ts
+    * header", `op`/`txn` "" = none; `minWriter` = -1 none (pre-gate
+    * commit = version 1 by construction); `dvs` = the RESULTING
+    * deletion-vector count the commit left the table with (0 = none —
+    * the flag that lets dv-less tables skip every dv body read);
+    * `dvc` = this DELTA commit carries `#dv+=`/`#dv-=` change lines. */
+  private[v3] case class Heads(ts: Long, op: String, txn: String,
+                               minWriter: Long, minWriterFeature: String,
+                               dvs: Long, dvc: Boolean) {
+    def tsOpt: Option[Long] = if (ts < 0L) None else Some(ts)
+  }
+
+  private[v3] object Heads {
+    /** A commit written before the headers existed. */
+    val none: Heads = Heads(-1L, "", "", -1L, "", 0L, dvc = false)
+  }
+
+  /** What the per-commit cache keeps of one commit: its heads, and the
+    * bytes a DELTA commit added (None for a checkpoint — its change is
+    * a full-set diff). */
+  private[v3] case class CommitInfo(heads: Heads, addedBytes: Option[Long])
+
   /** Result accounting for one [[Lake.upsert]]: how much of the table
     * the merge actually rewrote — the ScaleProbe contract is that
     * `rewrittenBytes` tracks TOUCHED files, not touched chains. */
@@ -181,7 +203,8 @@ object Lake {
 }
 
 class Lake(spark: SparkSession, val root: String) {
-  import Lake.{ChangeFile, ScanStats, UpsertStats, VacuumStats}
+  import Lake.{ChangeFile, CommitInfo, Heads, ScanStats, UpsertStats,
+    VacuumStats}
 
   private def dir(table: String) = s"$root/$table"
 
@@ -219,37 +242,21 @@ class Lake(spark: SparkSession, val root: String) {
     * Spark list the directory. */
   def read(table: String): DataFrame = {
     val schema = effectiveSchema(table)
-    // ONE metadata read decides both the version and the file set: a
-    // second listing here could observe a racing commit's NEWER state
-    // and cache it under the older key (served forever to v-keyed
-    // readers), or a racing dropTable's absence (NoSuchElement)
-    val (kinds, inc) = manifestState(table)
-    kinds.lastOption match {
-      case Some((v, _)) =>
-        // relation cached per (table, INCARNATION, manifest version,
-        // schema): a manifest version IS a fixed file set and the plan
-        // is immutable, so a warm driver's repeated reads skip the
-        // O(files) index reconstruction (group + sort + FileStatus
-        // per entry — ManifestProbe measured it at seconds per read
-        // on a 10⁶-file table); schema is part of the key because
-        // evolution changes the read plan without a manifest commit;
-        // the incarnation id salts the key because version numbers
-        // RESTART at 1 after dropTable — without it a second
-        // long-lived Lake instance on the same root would serve a
-        // pre-drop cached relation naming deleted files the moment
-        // the new incarnation reaches a previously-cached version
-        Option(relationCache.get((table, inc, v, schema))).getOrElse {
-          val df = readEntries(table, inventoryAt(table, inc, kinds, v),
-            schema, resolveDvMap(table, inc, kinds, v))
-          relationCache.put((table, inc, v, schema), df)
-          // purge superseded versions, dead incarnations, AND
-          // same-version entries under an evolved-away schema
-          // (evolution bumps no manifest version; keeping both
-          // doubles the per-table driver heap)
-          relationCache.keySet.removeIf(k => k._1 == table &&
-            (k._2 != inc || k._3 < v || (k._3 == v && k._4 != schema)))
-          df
-        }
+    // ONE listing decides both the version and the file set: a second
+    // listing here could observe a racing commit's NEWER state, or a
+    // racing dropTable's absence (NoSuchElement)
+    val log = logListing(table)
+    log.latest match {
+      case Some(v) =>
+        // the relation is memoised on the folded state (a version IS a
+        // fixed file set and the plan is immutable), so a warm driver's
+        // repeated reads skip the O(files) index reconstruction (group
+        // + sort + FileStatus per entry — ManifestProbe measured it at
+        // seconds per read on a 10⁶-file table); the memo is per
+        // schema because evolution changes the read plan without a
+        // manifest commit
+        val s = stateAt(table, log, v)
+        s.relation(schema)(readEntries(table, s.inventory, schema, s.dv))
       case None =>
         if (!exists(table))
           spark.createDataFrame(
@@ -260,11 +267,6 @@ class Lake(spark: SparkSession, val root: String) {
             .parquet(dir(table)), schema)
     }
   }
-
-  /** Cached manifest-served relations (see [[read]]), keyed by
-    * (table, incarnation, version, schema). */
-  private val relationCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Long, StructType), DataFrame]()
 
   /** Plan a scan over exactly `entries` from manifest metadata (no
     * driver-side filesystem access), filtering each DV-bearing file's
@@ -547,8 +549,7 @@ class Lake(spark: SparkSession, val root: String) {
     // publish run as ONE unit under the table's commit lock: unlocked,
     // two concurrent CREATEs of the same name could both pass the
     // guards and commit schema v1 and v2 with different column sets
-    val (lock, token) = acquireCommitLock(table)
-    try {
+    withCommitLock(table) { _ =>
       require(schemaVersions(table).isEmpty,
         s"table $table already has a committed schema - use evolveSchema")
       require(!exists(table),
@@ -556,7 +557,8 @@ class Lake(spark: SparkSession, val root: String) {
       require(!hasManifest(table),
         s"table $table already has a committed manifest - cannot re-create it")
       val v = commitSchema(table, next)
-      try publishManifest(table, Seq.empty, what = "create")
+      try publishManifest(table, logListing(table), None, Map.empty,
+        what = "create")
       catch { case e: Throwable =>
         // all-or-nothing: a schema committed without its manifest would
         // strand a table that can never be re-created (the guard above
@@ -566,7 +568,7 @@ class Lake(spark: SparkSession, val root: String) {
         throw e
       }
       v
-    } finally releaseCommitLock(lock, token)
+    }
   }
 
   /** Does the table have a committed registry schema? (True for
@@ -1063,9 +1065,7 @@ class Lake(spark: SparkSession, val root: String) {
       preCommitHook()
       manifestTxn(table, "dropChain", Seq.empty,
           removedFromBase = Some { base =>
-            val rels = base.collect {
-              case (rel, _) if chainSet(chainOfRel(rel)) => rel
-            }
+            val rels = base.keys.filter(r => chainSet(chainOfRel(r))).toSeq
             removedAbs = rels.map(r => s"${dir(table)}/$r")
             rels
           },
@@ -1122,10 +1122,8 @@ class Lake(spark: SparkSession, val root: String) {
         schemaDir(table), propsDir(table), manifestDir(table))
       .foreach(trashOne)
     statsFoldedShards.remove(table)
-    manifestCache.keySet.removeIf(_._1 == table)
-    inventoryCache.keySet.removeIf(_._1 == table)
-    relationCache.keySet.removeIf(_._1 == table)
-    commitHeaderCache.keySet.removeIf(_._1 == table)
+    logStates.remove(table)
+    commitInfos.keySet.removeIf(_._1 == table)
     val existed = fs.exists(p)
     if (existed) trashOne(p)
     existed && !fs.exists(p)
@@ -1177,7 +1175,7 @@ class Lake(spark: SparkSession, val root: String) {
   }
 
   /** Per-file inventory of one table: (chain_name, path, bytes) —
-    * served from the latest committed [[latestManifest manifest]] when
+    * served from the latest committed manifest's [[LogState]] when
     * one exists (every Lake write commits one), falling back to a
     * recursive listing ONLY for tables never written through this API.
     * The small-files problem is what incremental appends produce —
@@ -1186,8 +1184,11 @@ class Lake(spark: SparkSession, val root: String) {
     * open/footer cost dominates scans; the LISTING of those files is
     * the other half of that cost at fleet scale, which is why planning
     * reads the manifest, never the directory. */
-  def fileInventory(table: String): Seq[(String, String, Long)] =
-    manifestInventory(table).getOrElse(listInventory(table))
+  def fileInventory(table: String): Seq[(String, String, Long)] = {
+    val log = logListing(table)
+    log.latest.map(stateAt(table, log, _).inventory)
+      .getOrElse(listInventory(table))
+  }
 
   /** The recursive-listing fallback — O(files) filesystem metadata
     * calls, the exact cost the manifest exists to remove. [[listCalls]]
@@ -1224,6 +1225,15 @@ class Lake(spark: SparkSession, val root: String) {
   // listing, then never again). A table written by a FOREIGN writer
   // after adoption needs [[refreshManifest]] — the manifest is
   // authoritative, exactly as in the published table formats.
+  //
+  // IN MEMORY — one folded state per version: [[stateAt]] folds the
+  // log into an immutable [[LogState]] (entries, deletion-vector map,
+  // heads — the Snapshot of Delta Lake, VLDB 2020), reading each
+  // manifest file once; [[publishManifest]] installs the state it just
+  // wrote, so a writer's read-back opens no manifest file. Two caches
+  // hold the log: [[logStates]] (the current incarnation's newest
+  // [[stateWindow]] versions per table) and [[commitInfos]] (per-commit
+  // heads and added bytes, for history walks that never fold).
   //
   // CONCURRENCY — optimistic multi-writer: the commit lock serializes
   // the land+publish step only; planning and staging run unlocked. A
@@ -1277,143 +1287,302 @@ class Lake(spark: SparkSession, val root: String) {
     * holder crashed and breaks it. */
   private val staleLockMs = 3600000L
 
-  /** The commit log's on-disk versions: (version, isDelta), sorted.
-    * `vNNN.txt` is a CHECKPOINT (the complete file set — also the
+  /** `vNNN.txt` is a CHECKPOINT (the complete file set — also the
     * only kind written before round 11, so old tables read back
     * unchanged); `vNNN.d.txt` is a DELTA carrying only the commit's
     * own adds/removes, so a steady stream of small commits against a
     * huge table writes O(batch) manifest bytes, not O(table files) —
     * the same reason the published formats log deltas and checkpoint
     * periodically. */
-  private def manifestKinds(table: String): Seq[(Long, Boolean)] =
-    manifestState(table)._1
+  private def manifestName(v: Long, isDelta: Boolean): String =
+    if (isDelta) f"v$v%09d.d.txt" else f"v$v%09d.txt"
 
-  /** ONE listing of the commit-log dir: the on-disk versions plus the
-    * table's INCARNATION id — a `.id-<uuid>` marker minted at the
-    * incarnation's first manifest publish. dropTable deletes the
-    * marker with the dir, so a re-created table carries a NEW id even
-    * though its version numbers restart at 1; every version-keyed
-    * cache ([[manifestCache]]/[[inventoryCache]]/[[relationCache]])
-    * salts its key with it, which is what lets a SECOND long-lived
+  /** ONE listing of the commit-log dir: the on-disk versions
+    * (version, isDelta), sorted, plus the table's INCARNATION id — a
+    * `.id-<uuid>` marker minted at the incarnation's first manifest
+    * publish. dropTable deletes the marker with the dir, so a
+    * re-created table carries a NEW id even though its version numbers
+    * restart at 1; both commit-log caches ([[logStates]],
+    * [[commitInfos]]) key on it, which is what lets a SECOND long-lived
     * Lake instance on the same root survive another instance's
     * dropTable+recreate without per-instance invalidation. Tables
     * committed before the marker existed read back as incarnation ""
-    * until their next publish mints one (the "" keys are purged as a
-    * dead incarnation then). */
-  private def manifestState(table: String): (Seq[(Long, Boolean)], String) = {
+    * until their next publish mints one. */
+  private case class LogListing(kinds: Seq[(Long, Boolean)], inc: String) {
+    def latest: Option[Long] = kinds.lastOption.map(_._1)
+    def has(v: Long): Boolean = kinds.exists(_._1 == v)
+    def isDelta(v: Long): Boolean = kinds.exists(k => k._1 == v && k._2)
+  }
+
+  private def logListing(table: String): LogListing = {
     val d = manifestDir(table)
-    if (!fs.exists(d)) return (Seq.empty, "")
+    if (!fs.exists(d)) return LogListing(Seq.empty, "")
     val names = fs.listStatus(d).toSeq.map(_.getPath.getName)
     val kinds = names.collect {
       case n if n.startsWith("v") && n.endsWith(".d.txt") =>
         (n.stripPrefix("v").stripSuffix(".d.txt").toLong, true)
-      case n if n.startsWith("v") && n.endsWith(".txt") &&
-          !n.endsWith(".d.txt") =>
+      case n if n.startsWith("v") && n.endsWith(".txt") =>
         (n.stripPrefix("v").stripSuffix(".txt").toLong, false)
     }.sortBy(_._1)
     // min-sorted for determinism if a foreign copy ever duplicates it
-    (kinds, names.filter(_.startsWith(".id-")).sorted.headOption
+    LogListing(kinds, names.filter(_.startsWith(".id-")).sorted.headOption
       .map(_.stripPrefix(".id-")).getOrElse(""))
   }
 
-  private def manifestVersions(table: String): Seq[Long] =
-    manifestKinds(table).map(_._1)
+  def hasManifest(table: String): Boolean = logListing(table).kinds.nonEmpty
 
-  def hasManifest(table: String): Boolean = manifestVersions(table).nonEmpty
+  /** Heads from a commit's `#` lines (`#dv` body lines are skipped by
+    * their distinct prefixes). */
+  private def parseHeads(lines: Seq[String]): Heads = {
+    def value(key: String): Option[String] =
+      lines.find(_.startsWith(key)).map(_.stripPrefix(key))
+    val (minW, minWFeat) = value("#minWriter=").map { rest =>
+      val cut = rest.indexOf(' ')
+      if (cut < 0) (rest.trim.toLongOption.getOrElse(Long.MaxValue), "")
+      else (rest.substring(0, cut).trim.toLongOption
+        .getOrElse(Long.MaxValue), rest.substring(cut + 1).trim)
+    }.getOrElse((-1L, ""))
+    Heads(value("#ts=").flatMap(_.toLongOption).getOrElse(-1L),
+      value("#op=").getOrElse(""), value("#txn=").getOrElse(""),
+      minW, minWFeat,
+      value("#dvs=").flatMap(_.toLongOption).getOrElse(0L),
+      dvc = value("#dvc=").isDefined)
+  }
 
-  private def readManifestBody(table: String, v: Long,
-                               isDelta: Boolean): String = {
-    val name = if (isDelta) f"v$v%09d.d.txt" else f"v$v%09d.txt"
+  /** One manifest file, parsed from ONE read: its heads; `added` = a
+    * checkpoint's complete entry set or a delta's `+` lines, `removed`
+    * = a delta's `-` lines; `dvSet` = a checkpoint's full `#dv=` map or
+    * a delta's `#dv+=` set/replace lines, `dvDropped` = `#dv-=`. Line
+    * formats: delta `+relB64 TAB bytes` / `-relB64`, checkpoint
+    * `relB64 TAB bytes` (kind-aware: base64 may itself begin with
+    * '+'). */
+  private case class LogFile(heads: Heads, added: Seq[(String, Long)],
+                             removed: Set[String],
+                             dvSet: Map[String, Dv.Ref],
+                             dvDropped: Set[String])
+
+  /** Read and parse one manifest file (gated by the reader protocol),
+    * recording its heads and added bytes in [[commitInfos]]. */
+  private def readLogFile(table: String, inc: String, v: Long,
+                          isDelta: Boolean): LogFile = {
+    val name = manifestName(v, isDelta)
     val in = fs.open(new Path(manifestDir(table), name))
     val body =
       try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
       finally in.close()
     Lake.requireReadable(table, name, body)
-    body
+    def rel(b: String) = new String(unb64(b), "UTF-8")
+    val heads = Seq.newBuilder[String]
+    val added = scala.collection.immutable.ArraySeq.newBuilder[(String, Long)]
+    val removed = Set.newBuilder[String]
+    val dvSet = Map.newBuilder[String, Dv.Ref]
+    val dvDropped = Set.newBuilder[String]
+    body.split("\n").foreach { l =>
+      if (l.startsWith("#dv=") || l.startsWith("#dv+=")) dvSet += dvLine(l)
+      else if (l.startsWith("#dv-=")) dvDropped += rel(l.substring(5))
+      else if (l.startsWith("#")) heads += l
+      else if (l.nonEmpty) {
+        if (isDelta && l.charAt(0) == '-') removed += rel(l.substring(1))
+        else {
+          val i = l.indexOf('\t')
+          added += ((rel(l.substring(if (isDelta) 1 else 0, i)),
+            l.substring(i + 1).toLong))
+        }
+      }
+    }
+    val f = LogFile(parseHeads(heads.result()), added.result(),
+      removed.result(), dvSet.result(), dvDropped.result())
+    rememberCommit(table, inc, v, CommitInfo(f.heads,
+      if (isDelta) Some(f.added.iterator.map(_._2).sum) else None))
+    f
   }
 
-  /** Fold the commit log up to version `v`: walk BACK from `v` to the
-    * nearest reusable base (a cached fold or a checkpoint), then apply
-    * the deltas FORWARD through one mutable map — one pass, one sort,
-    * and only the requested version is cached (intermediate folds are
-    * never materialized as full file sets, and older cache entries for
-    * the table are dropped, so a long-lived read-only driver holds ONE
-    * folded set per table, not one per version it ever polled). A
-    * delta commit's fold costs one small read on a warm driver (the
-    * v−1 state is cached); a fresh driver pays the checkpoint plus at
-    * most `checkpointEvery` delta reads, once. A mid-chain gap (a
-    * delta whose v−1 is missing) fails loudly rather than folding from
-    * the wrong base. Delta line format: `+relB64 TAB bytes` (add) /
-    * `-relB64` (remove); checkpoint lines are `relB64 TAB bytes`. */
-  private def resolveManifest(table: String, inc: String,
-                              kinds: Seq[(Long, Boolean)],
-                              v: Long): Seq[(String, Long)] =
-    Option(manifestCache.get((table, inc, v))).getOrElse {
-      def isDelta(w: Long): Boolean = kinds.find(_._1 == w).exists(_._2)
-      def entryOf(l: String): (String, Long) = {
-        val i = l.indexOf('\t')
-        (new String(unb64(l.substring(0, i)), "UTF-8"),
-          l.substring(i + 1).toLong)
-      }
-      // back to the nearest cached fold or checkpoint
-      var base = v
-      var cached: Seq[(String, Long)] = null
-      while (isDelta(base) && {
-        cached = manifestCache.get((table, inc, base)); cached == null
-      }) {
-        // a delta applies to EXACTLY the preceding version — a gap
-        // means retention or a foreign actor broke the chain; fold
-        // loudly rather than skip a commit
-        require(kinds.exists(_._1 == base - 1),
-          s"manifest delta v$base of $table has no base v${base - 1} " +
-            "- commit-log chain broken; refreshManifest to recover")
-        base -= 1
-      }
-      val state = new java.util.LinkedHashMap[String, Long]()
-      (if (cached != null) cached
-      else readManifestBody(table, base, isDelta = false)
-        .split("\n").toSeq.filter(l => l.nonEmpty && !l.startsWith("#"))
-        .map(entryOf))
-        .foreach { case (rel, b) => state.put(rel, b) }
-      // forward through the deltas in one pass
-      ((base + 1) to v).foreach { w =>
-        readManifestBody(table, w, isDelta = true)
-          .split("\n").filter(l => l.nonEmpty && !l.startsWith("#"))
-          .foreach { l =>
-            if (l.startsWith("-"))
-              state.remove(new String(unb64(l.substring(1)), "UTF-8"))
-            else {
-              val (rel, b) = entryOf(l.substring(1))
-              state.put(rel, b)
-            }
+  /** `tag` + `relB64 TAB name TAB cardinality` per vector, sorted by
+    * rel — the `#dv` line format of checkpoints (`#dv=`), deltas
+    * (`#dv+=`) and snapshots (`#dv=`); [[dvLine]] parses one back. */
+  private def dvLinesOf(tag: String, dv: Map[String, Dv.Ref]): Seq[String] =
+    dv.toSeq.sortBy(_._1).map { case (rel, r) =>
+      s"$tag${b64(rel.getBytes("UTF-8"))}\t${r.name}\t${r.cardinality}" }
+
+  private def dvLine(l: String): (String, Dv.Ref) = {
+    val f = l.substring(l.indexOf('=') + 1).split('\t')
+    (new String(unb64(f(0)), "UTF-8"), Dv.Ref(f(1), f(2).toLong))
+  }
+
+  /** The folded commit log of one table at one version — the
+    * Snapshot shape of the published formats (Delta Lake, VLDB 2020):
+    * `entries` = live data files (rel → bytes), `dv` = the
+    * deletion-vector map, `heads` = the version's commit heads.
+    * Immutable, and the persistent maps share structure with the state
+    * they were folded from, so one delta step costs O(batch).
+    *
+    * Two views derive lazily: the mapped [[inventory]] (chain, absolute
+    * path, bytes — the chain-parse + path-qualify + sort over ALL
+    * entries, ~10 s per call at 10⁶ files before it was cached) and the
+    * DataFrame [[relation]] per schema. The inventory is PATCHED from
+    * an earlier state's when one was computed (`patchBase` plus the net
+    * change since it: drop removed, merge sorted additions — O(table +
+    * batch log batch), no re-parse, no full re-sort; ~5 s per commit at
+    * 10⁶ files otherwise, ManifestProbe r14), else built in full. The
+    * patch base is dropped once the net change outgrows the table
+    * (a full build is then cheaper). */
+  private final class LogState(val table: String, val inc: String,
+      val version: Long, val heads: Heads,
+      val entries: Map[String, Long], val dv: Map[String, Dv.Ref],
+      @volatile private var patchBase: LogState,
+      patchAdded: Map[String, Long], patchRemoved: Set[String]) {
+    @volatile private var inv: Seq[(String, String, Long)] = null
+    @volatile private var rel: (StructType, DataFrame) = null
+
+    /** The state one delta commit later — THE fold step. */
+    def next(v: Long, f: LogFile): LogState =
+      successor(inc, v, f.heads, entries -- f.removed ++ f.added,
+        dv -- f.dvDropped ++ f.dvSet, f.added, f.removed)
+
+    /** The state a commit of (`added`, `removed`) leads to, already
+      * folded by the caller ([[publishManifest]] computes `entries` and
+      * `dv` under the commit lock), carrying the inventory patch base. */
+    def successor(inc1: String, v: Long, heads1: Heads,
+                  entries1: Map[String, Long], dv1: Map[String, Dv.Ref],
+                  added: Seq[(String, Long)],
+                  removed: Set[String]): LogState = {
+      val base = if (inv != null) this else patchBase
+      val (pa, pr) =
+        if (base eq this) (added.toMap, removed)
+        else (patchAdded -- removed ++ added, patchRemoved ++ removed)
+      if (base == null || pa.size + pr.size > entries1.size)
+        new LogState(table, inc1, v, heads1, entries1, dv1, null,
+          Map.empty, Set.empty)
+      else new LogState(table, inc1, v, heads1, entries1, dv1, base, pa, pr)
+    }
+
+    def inventory: Seq[(String, String, Long)] = {
+      val have = inv
+      if (have != null) have
+      else synchronized {
+        if (inv == null) {
+          val base = fs.makeQualified(new Path(dir(table))).toString
+          def mapOne(rel: String, bytes: Long): (String, String, Long) =
+            (chainOfRel(rel), s"$base/$rel", bytes)
+          def sorted(es: Iterator[(String, Long)]) = {
+            val a = es.map { case (r, b) => mapOne(r, b) }.toArray
+            java.util.Arrays.sort(a, byChainPath)
+            scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
           }
+          val from = Option(patchBase).map(_.inv).orNull
+          inv =
+            if (from == null) sorted(entries.iterator)
+            else {
+              val gone = (patchRemoved ++ patchAdded.keys)
+                .map(r => s"$base/$r")
+              mergeByChainPath(
+                if (gone.isEmpty) from else from.filterNot(e => gone(e._2)),
+                sorted(patchAdded.iterator))
+            }
+          patchBase = null
+        }
+        inv
       }
-      import scala.jdk.CollectionConverters._
-      val parsed = state.entrySet().asScala
-        .map(e => (e.getKey, e.getValue.longValue())).toSeq.sortBy(_._1)
-      manifestCache.put((table, inc, v), parsed)
-      manifestCache.keySet.removeIf(k => k._1 == table &&
-        (k._2 != inc || k._3 < v))
-      parsed
     }
 
-  /** Latest committed manifest: (version, entries as (relPath, bytes)).
-    * base64 keeps arbitrary partition values (already Hive-escaped,
-    * but belt and braces) unambiguous. */
-  private[v3] def latestManifest(table: String)
-      : Option[(Long, Seq[(String, Long)])] = {
-    val (kinds, inc) = manifestState(table)
-    kinds.lastOption.map { case (v, _) =>
-      (v, resolveManifest(table, inc, kinds, v))
+    /** The manifest-served relation under `schema`, memoised for the
+      * latest schema asked; building one drops the relations of this
+      * table's older cached states (one plan per table stays live). */
+    def relation(schema: StructType)(build: => DataFrame): DataFrame = {
+      val r = rel
+      if (r != null && r._1 == schema) r._2
+      else {
+        val df = build
+        rel = (schema, df)
+        Option(logStates.get(table)).foreach(_.foreach { o =>
+          if (o.version < version) o.rel = null })
+        df
+      }
     }
   }
 
-  /** Parsed manifest bodies keyed by (table, incarnation, version) —
-    * immutable once published; superseded versions are purged on
-    * publish. */
-  private val manifestCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long),
-      Seq[(String, Long)]]()
+  private val byRel: java.util.Comparator[(String, Long)] =
+    (x, y) => x._1.compareTo(y._1)
+
+  private val byChainPath: java.util.Comparator[(String, String, Long)] =
+    (x, y) => {
+      val c = x._1.compareTo(y._1)
+      if (c != 0) c else x._2.compareTo(y._2)
+    }
+
+  /** How many versions of one table [[logStates]] keeps: the newest
+    * `stateWindow` of the current incarnation — enough for a reader
+    * that listed just before a publish and for the CDC planners'
+    * (v−1, v) pairs. */
+  private val stateWindow = 8
+
+  /** Recent folded states per table, newest first, all of ONE
+    * incarnation (a state of another incarnation replaces the list:
+    * the other one is dead). */
+  private val logStates =
+    new java.util.concurrent.ConcurrentHashMap[String, List[LogState]]()
+
+  private def cachedState(table: String, inc: String, v: Long): LogState =
+    Option(logStates.get(table))
+      .flatMap(_.find(s => s.version == v && s.inc == inc)).orNull
+
+  private def cacheState(s: LogState): Unit =
+    logStates.compute(s.table, (_, cur) => {
+      val all = (s :: Option(cur).getOrElse(Nil)
+        .filter(o => o.inc == s.inc && o.version != s.version))
+        .sortBy(-_.version)
+      all.takeWhile(_.version > all.head.version - stateWindow)
+    })
+
+  /** The commit log folded at retained version `v` of `log` — THE
+    * fold. Walk BACK from `v` to the nearest reusable base (a cached
+    * state or a checkpoint), then apply the deltas FORWARD, reading
+    * each manifest file exactly once; only the requested version is
+    * cached. A delta commit's fold costs one small read on a warm
+    * driver (the v−1 state is cached); a fresh driver pays the
+    * checkpoint plus at most `checkpointEvery` delta reads, once. A
+    * mid-chain gap (a delta whose v−1 is missing) fails loudly rather
+    * than folding from the wrong base. */
+  private def stateAt(table: String, log: LogListing, v: Long): LogState = {
+    val hit = cachedState(table, log.inc, v)
+    if (hit != null) return hit
+    var base = v
+    var start: LogState = null
+    while (log.isDelta(base) && {
+      start = cachedState(table, log.inc, base); start == null
+    }) {
+      // a delta applies to EXACTLY the preceding version — a gap
+      // means retention or a foreign actor broke the chain; fold
+      // loudly rather than skip a commit
+      require(log.has(base - 1),
+        s"manifest delta v$base of $table has no base v${base - 1} " +
+          "- commit-log chain broken; refreshManifest to recover")
+      base -= 1
+    }
+    var s = if (start != null) start else {
+      val f = readLogFile(table, log.inc, base, isDelta = false)
+      new LogState(table, log.inc, base, f.heads,
+        scala.collection.immutable.HashMap.from(f.added), f.dvSet, null,
+        Map.empty, Set.empty)
+    }
+    ((base + 1) to v).foreach { w =>
+      s = s.next(w, readLogFile(table, log.inc, w, isDelta = true))
+    }
+    cacheState(s)
+    s
+  }
+
+  /** The dv map at retained version `v`: a cached state's, else empty
+    * straight from the `#dvs=` head (one cached head read — dv-less
+    * tables never fold for it), else the fold's. */
+  private def dvAt(table: String, log: LogListing, v: Long)
+      : Map[String, Dv.Ref] = {
+    val hit = cachedState(table, log.inc, v)
+    if (hit != null) hit.dv
+    else if (commitInfo(table, log.inc, v, log.isDelta(v)).heads.dvs == 0L)
+      Map.empty
+    else stateAt(table, log, v).dv
+  }
 
   // ── Deletion vectors: the manifest's `#dv` state ───────────────────
   //
@@ -1430,12 +1599,6 @@ class Lake(spark: SparkSession, val root: String) {
   // materialize-without-vector). Tables without vectors publish
   // byte-identical manifests to r17 and skip every dv code path via
   // the `#dvs=` head (zero extra I/O).
-
-  /** Folded dv maps keyed by (table, incarnation, version) — same
-    * immutability and purge rules as [[manifestCache]]. */
-  private val dvMapCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Long),
-      Map[String, Dv.Ref]]()
 
   private def dvDir(table: String) = new Path(s"$root/_dv/$table")
 
@@ -1461,98 +1624,19 @@ class Lake(spark: SparkSession, val root: String) {
     Dv.positions(spark.sparkContext.hadoopConfiguration,
       dvFilePath(table, ref.name))
 
-  private def parseDvFull(body: String): Map[String, Dv.Ref] =
-    body.split("\n").iterator.filter(_.startsWith("#dv="))
-      .map { l =>
-        val f = l.stripPrefix("#dv=").split('\t')
-        (new String(unb64(f(0)), "UTF-8"), Dv.Ref(f(1), f(2).toLong))
-      }.toMap
-
-  private def parseDvDelta(body: String)
-      : (Map[String, Dv.Ref], Set[String]) = {
-    val adds = Map.newBuilder[String, Dv.Ref]
-    val drops = Set.newBuilder[String]
-    body.split("\n").foreach { l =>
-      if (l.startsWith("#dv+=")) {
-        val f = l.stripPrefix("#dv+=").split('\t')
-        adds += ((new String(unb64(f(0)), "UTF-8"),
-          Dv.Ref(f(1), f(2).toLong)))
-      } else if (l.startsWith("#dv-="))
-        drops += new String(unb64(l.stripPrefix("#dv-=")), "UTF-8")
-    }
-    (adds.result(), drops.result())
-  }
-
-  /** The dv map at commit version `v`: rel path → current vector.
-    * Zero body I/O for dv-less tables/versions (the `#dvs=` head,
-    * one cached bounded read, answers "empty" directly); dv-bearing
-    * versions fold from the nearest checkpoint / cached fold through
-    * only the dv-CHANGING delta bodies (`#dvc=` head). `cache=false`
-    * for historical walks (vacuum's pin pass) that must not thrash
-    * the latest-version cache. */
-  private[v3] def resolveDvMap(table: String, inc: String,
-                               kinds: Seq[(Long, Boolean)], v: Long,
-                               cache: Boolean = true)
-      : Map[String, Dv.Ref] = {
-    val cached = dvMapCache.get((table, inc, v))
-    if (cached != null) return cached
-    def isDelta(w: Long): Boolean = kinds.find(_._1 == w).exists(_._2)
-    def headsOf(w: Long): Heads = commitHeads(table, inc, w, isDelta(w))
-    val result: Map[String, Dv.Ref] =
-      if (headsOf(v).dvs == 0L) Map.empty
-      else {
-        // back to the nearest reusable base: a cached fold, a
-        // checkpoint, or any version whose #dvs head says empty
-        var base = v
-        var cachedBase: Map[String, Dv.Ref] = null
-        while (isDelta(base) && headsOf(base).dvs != 0L && {
-          cachedBase = dvMapCache.get((table, inc, base))
-          cachedBase == null
-        }) {
-          require(kinds.exists(_._1 == base - 1),
-            s"manifest delta v$base of $table has no base v${base - 1} " +
-              "- commit-log chain broken; refreshManifest to recover")
-          base -= 1
-        }
-        var state: Map[String, Dv.Ref] =
-          if (cachedBase != null) cachedBase
-          else if (headsOf(base).dvs == 0L) Map.empty
-          else parseDvFull(readManifestBody(table, base, isDelta = false))
-        ((base + 1) to v).foreach { w =>
-          if (!isDelta(w))
-            state = parseDvFull(readManifestBody(table, w, isDelta = false))
-          else if (headsOf(w).dvc) {
-            val (adds, drops) =
-              parseDvDelta(readManifestBody(table, w, isDelta = true))
-            state = state -- drops ++ adds
-          }
-        }
-        state
-      }
-    if (cache) {
-      dvMapCache.put((table, inc, v), result)
-      dvMapCache.keySet.removeIf(k => k._1 == table &&
-        (k._2 != inc || k._3 < v))
-    }
-    result
-  }
-
   /** The CURRENT dv map of a table (rel → vector); empty when the
     * table has no manifest or no vectors. */
   private[graft] def dvMapOf(table: String): Map[String, Dv.Ref] = {
-    val (kinds, inc) = manifestState(table)
-    kinds.lastOption.map { case (v, _) =>
-      resolveDvMap(table, inc, kinds, v)
-    }.getOrElse(Map.empty)
+    val log = logListing(table)
+    log.latest.map(dvAt(table, log, _)).getOrElse(Map.empty)
   }
 
   /** The dv map at a RETAINED commit version — `TIMESTAMP AS OF` /
     * CDC replays resolve historical vectors here. */
   private[graft] def dvMapAtCommit(table: String,
                                    version: Long): Map[String, Dv.Ref] = {
-    val (kinds, inc) = manifestState(table)
-    if (!kinds.exists(_._1 == version)) Map.empty
-    else resolveDvMap(table, inc, kinds, version)
+    val log = logListing(table)
+    if (!log.has(version)) Map.empty else dvAt(table, log, version)
   }
 
   /** The `chain_name=…/file` table-relative tail of any lake path —
@@ -1565,115 +1649,74 @@ class Lake(spark: SparkSession, val root: String) {
 
   // ── Commit-time travel: TIMESTAMP AS OF over the commit log ────────
 
-  /** Parsed leading headers of one commit: `ts` = -1 encodes "no ts
-    * header", `op`/`txn` "" = none; `minWriter` = -1 none (pre-gate
-    * commit = version 1 by construction); `dvs` = the RESULTING
-    * deletion-vector count the commit left the table with (0 = none —
-    * the flag that lets dv-less tables skip every dv body read);
-    * `dvc` = this DELTA commit carries `#dv+=`/`#dv-=` change lines
-    * (the fold reads only such bodies). */
-  private case class Heads(ts: Long, op: String, txn: String,
-                           minWriter: Long, minWriterFeature: String,
-                           dvs: Long, dvc: Boolean)
+  /** Per-commit heads and added bytes keyed by (table, incarnation,
+    * version) — immutable once published. Filled by every manifest
+    * read ([[readLogFile]]) and publish, and by [[commitInfo]]'s
+    * bounded head reads, so history walks (table_history, TIMESTAMP AS
+    * OF, the change feeds' rewrite checks, sink idempotence) never
+    * fold. Bounded by [[evictCommits]]. */
+  private[v3] val commitInfos = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, Long), CommitInfo]()
 
-  /** Commit headers of one manifest version — the `#ts=` wall-clock
-    * and the `#op=` operation kind its publish wrote; None/"" for
-    * versions committed before the headers existed. One bounded read
-    * of the LEADING header lines only — a checkpoint body at 10⁶
-    * files is megabytes, the headers are its first ~100 bytes. Cached
-    * per (table, incarnation, version): immutable once published. */
-  private val commitHeaderCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Long), Heads]()
-
-  private def commitHeaderOf(table: String, inc: String, v: Long,
-                             isDelta: Boolean,
-                             strict: Boolean = false)
-      : (Option[Long], String) = {
-    val h = commitHeads(table, inc, v, isDelta, strict)
-    (if (h.ts < 0L) None else Some(h.ts), h.op)
+  private def rememberCommit(table: String, inc: String, v: Long,
+                             c: CommitInfo): Unit = {
+    commitInfos.put((table, inc, v), c)
+    evictCommits(table, inc, v)
   }
 
-  private def commitHeads(table: String, inc: String, v: Long,
-                          isDelta: Boolean,
-                          strict: Boolean = false): Heads = {
-    val cached = commitHeaderCache.get((table, inc, v))
-    if (cached != null) return cached
-    val name = if (isDelta) f"v$v%09d.d.txt" else f"v$v%09d.txt"
-    // a concurrent checkpoint publish's retention cut can delete the
-    // oldest listed version between the caller's (unlocked) listing
-    // and this open. Informational readers (versionAtTimestamp,
-    // commitHistory) treat it as committed-before-headers rather than
-    // crashing a pure read with a raw FNF; STRICT callers — the churn
-    // guard's rewrite detection, where a header silently read as ""
-    // would hide a rewrite — get the FNF to refuse on.
-    val in = try fs.open(new Path(manifestDir(table), name))
-    catch {
-      case e: java.io.FileNotFoundException =>
-        if (strict) throw e
-        else return Heads(-1L, "", "", -1L, "", 0L, dvc = false)
+  /** The one eviction rule of [[commitInfos]], run when it holds over
+    * 4096 commits: the INSERTING table sheds its dead incarnations
+    * first (dropTable+recreate restarted the version numbers, so their
+    * entries never age out by version), then, if still over, its own
+    * versions older than a 1024-commit window. Another table's entries
+    * are never touched — one busy table must not force a quiet table's
+    * stream to re-read its delta bodies on every latestOffset poll. */
+  private[v3] def evictCommits(table: String, inc: String, v: Long): Unit =
+    if (commitInfos.size > 4096) {
+      commitInfos.keySet.removeIf(k => k._1 == table && k._2 != inc)
+      if (commitInfos.size > 4096)
+        commitInfos.keySet.removeIf(k => k._1 == table && k._3 < v - 1024)
     }
-    // the HEAD lines come first by the publish contract; `#dv`
-    // body lines are also '#'-prefixed, so cap the scan — 10 lines
-    // cover every head the publisher writes
-    val heads = try {
-      val rd = new java.io.BufferedReader(
-        new java.io.InputStreamReader(in, "UTF-8"), 1024)
-      Iterator.continually(Option(rd.readLine()).getOrElse(""))
-        .takeWhile(_.startsWith("#")).take(10).toSeq
-    } finally in.close()
-    val ts = heads.find(_.startsWith("#ts="))
-      .flatMap(_.stripPrefix("#ts=").toLongOption)
-    val op = heads.find(_.startsWith("#op="))
-      .map(_.stripPrefix("#op=")).getOrElse("")
-    val txn = heads.find(_.startsWith("#txn="))
-      .map(_.stripPrefix("#txn=")).getOrElse("")
-    val (minW, minWFeat) = heads.find(_.startsWith("#minWriter="))
-      .map { l =>
-        val rest = l.stripPrefix("#minWriter=")
-        val cut = rest.indexOf(' ')
-        if (cut < 0) (rest.trim.toLongOption.getOrElse(Long.MaxValue), "")
-        else (rest.substring(0, cut).trim.toLongOption
-          .getOrElse(Long.MaxValue), rest.substring(cut + 1).trim)
-      }.getOrElse((-1L, ""))
-    val dvs = heads.find(_.startsWith("#dvs="))
-      .flatMap(_.stripPrefix("#dvs=").toLongOption).getOrElse(0L)
-    val dvc = heads.exists(_.startsWith("#dvc="))
-    val parsed = Heads(ts.getOrElse(-1L), op, txn, minW, minWFeat,
-      dvs, dvc)
-    commitHeaderCache.put((table, inc, v), parsed)
-    if (commitHeaderCache.size > 4096) {
-      // evict this table's dead-incarnation entries first (the key
-      // just inserted survives — the former evict-all-of-this-table
-      // rule deleted it too, making every later lookup of a hot table
-      // a manifest-file open forever; and a version horizon hardcoded
-      // here would thrash any table whose manifest.minRetainedCommits
-      // floor exceeds it); if the cache is still over cap, shed just
-      // the EXCESS in iteration order — the former
-      // evict-every-foreign-table rule made two tables sharing a hot
-      // multi-table history pass ping-pong each other's entries out,
-      // one manifest-file open per commit forever
-      commitHeaderCache.keySet.removeIf(k =>
-        k._1 == table && k._2 != inc)
-      if (commitHeaderCache.size > 4096) {
-        // shed the excess OLDEST-COMMITS-FIRST (lowest version numbers
-        // across tables), never in CHM iteration order - hash-arbitrary
-        // shedding could evict the hot table's freshest headers while
-        // retaining cold foreign entries. O(n log n) over ~4k keys,
-        // paid only on the rare over-cap insert.
-        import scala.jdk.CollectionConverters._
-        val excess = commitHeaderCache.size - 4096
-        commitHeaderCache.keySet.asScala.toSeq
-          .filterNot(k => k._1 == table && k._2 == inc && k._3 == v)
-          .sortBy(_._3).take(excess)
-          .foreach(commitHeaderCache.remove)
+
+  /** Heads (and added bytes) of one commit, cached. A miss reads a
+    * DELTA whole (one small body) and only the LEADING head lines of a
+    * checkpoint — at 10⁶ files its body is megabytes, the heads its
+    * first ~100 bytes. A concurrent checkpoint publish's retention cut
+    * can delete the oldest listed version between the caller's
+    * (unlocked) listing and this open: informational readers
+    * (versionAtTimestamp, commitHistory) read it as committed-before-
+    * headers rather than crashing a pure read with a raw FNF; STRICT
+    * callers — the churn guard's rewrite detection, where a header
+    * silently read as "" would hide a rewrite — get the FNF to refuse
+    * on. */
+  private def commitInfo(table: String, inc: String, v: Long,
+                         isDelta: Boolean,
+                         strict: Boolean = false): CommitInfo = {
+    val hit = commitInfos.get((table, inc, v))
+    if (hit != null) return hit
+    try {
+      if (isDelta) {
+        val f = readLogFile(table, inc, v, isDelta = true)
+        CommitInfo(f.heads, Some(f.added.iterator.map(_._2).sum))
+      } else {
+        val in = fs.open(new Path(manifestDir(table), manifestName(v, false)))
+        // `#dv` body lines are also '#'-prefixed, so cap the scan —
+        // 10 lines cover every head the publisher writes
+        val lines = try {
+          val rd = new java.io.BufferedReader(
+            new java.io.InputStreamReader(in, "UTF-8"), 1024)
+          Iterator.continually(Option(rd.readLine()).getOrElse(""))
+            .takeWhile(_.startsWith("#")).take(10).toSeq
+        } finally in.close()
+        val c = CommitInfo(parseHeads(lines), None)
+        rememberCommit(table, inc, v, c)
+        c
       }
+    } catch {
+      case e: java.io.FileNotFoundException =>
+        if (strict) throw e else CommitInfo(Heads.none, None)
     }
-    parsed
   }
-
-  private def commitTimeOf(table: String, inc: String, v: Long,
-                           isDelta: Boolean): Option[Long] =
-    commitHeaderOf(table, inc, v, isDelta)._1
 
   /** The writer-protocol gate ([[Lake.SupportedWriterVersion]]): the
     * LATEST commit's `#minWriter=N[ feature]` head — stamped on every
@@ -1682,10 +1725,9 @@ class Lake(spark: SparkSession, val root: String) {
     * upsert, delete, compaction, refresh) could corrupt a convention
     * it predates (a DV-ignorant compactor resurrects deleted rows).
     * Checked under the commit lock, before anything lands. */
-  private def requireWritable(table: String, kinds: Seq[(Long, Boolean)],
-                              inc: String): Unit =
-    kinds.lastOption.foreach { case (v, d) =>
-      val h = commitHeads(table, inc, v, d)
+  private def requireWritable(table: String, log: LogListing): Unit =
+    log.kinds.lastOption.foreach { case (v, d) =>
+      val h = commitInfo(table, log.inc, v, d).heads
       if (h.minWriter > Lake.SupportedWriterVersion)
         throw new IllegalStateException(
           s"table $table requires writer protocol version " +
@@ -1706,6 +1748,43 @@ class Lake(spark: SparkSession, val root: String) {
   private[v3] val rewriteOps = Set("compaction", "clustering",
     "dv-materialize")
 
+  /** One retained commit of a history walk, read lazily and at most
+    * once: heads from [[commitInfos]] when cached, a delta's body
+    * parsed once for its heads, sides and dv lines. */
+  private final class CommitView(table: String, log: LogListing,
+                                 val v: Long) {
+    private val isDelta = log.isDelta(v)
+    private lazy val file = readLogFile(table, log.inc, v, isDelta = true)
+
+    /** Strict: a version expired mid-walk throws its FNF. */
+    lazy val heads: Heads =
+      Option(commitInfos.get((table, log.inc, v))).map(_.heads)
+        .getOrElse(if (isDelta) file.heads
+          else commitInfo(table, log.inc, v, isDelta, strict = true).heads)
+
+    /** (added, removed) table-relative files of this commit: a delta's
+      * own lines; a checkpoint's diff against the state before it (the
+      * first commit's against empty). None when that state expired —
+      * the commit's change is no longer replayable. */
+    lazy val sides: Option[(Set[String], Set[String])] =
+      if (isDelta) Some((file.added.map(_._1).toSet, file.removed))
+      else if (v != 1L && !log.has(v - 1)) None
+      else {
+        val prev =
+          if (v == 1L) Set.empty[String]
+          else stateAt(table, log, v - 1).entries.keySet
+        val cur = stateAt(table, log, v).entries.keySet
+        Some((cur -- prev, prev -- cur))
+      }
+
+    /** The dv map after this commit, given the map before it. */
+    def dvAfter(before: Map[String, Dv.Ref]): Map[String, Dv.Ref] =
+      if (heads.dvs == 0L) Map.empty
+      else if (!isDelta) stateAt(table, log, v).dv
+      else if (heads.dvc) before -- file.dvDropped ++ file.dvSet
+      else before
+  }
+
   /** The retained commit log as an operator-facing history: (version,
     * commit wall-clock, operation kind, isDelta), ascending — what a
     * `table_history('cat.tbl')` query lists when deciding what to pin
@@ -1713,21 +1792,18 @@ class Lake(spark: SparkSession, val root: String) {
     * headers existed. Bounded by manifest retention (~two checkpoint
     * generations), like every commit-log read. */
   def commitHistory(table: String): Seq[(Long, Option[Long], String, Boolean)] = {
-    val (kinds, inc) = manifestState(table)
-    kinds.map { case (v, d) =>
-      val (ts, op) = commitHeaderOf(table, inc, v, d)
-      (v, ts, op, d)
+    val log = logListing(table)
+    log.kinds.map { case (v, d) =>
+      val h = commitInfo(table, log.inc, v, d).heads
+      (v, h.tsOpt, h.op, d)
     }
   }
 
-  /** The retained commit log with wall-clocks: (version, commit epoch
-    * millis; None = committed before timestamps existed), ascending.
-    * Bounded by manifest retention (~two checkpoint generations). */
   /** Latest committed manifest version (None = no manifest) — the
     * streaming CDC source's latest-offset probe; ONE commit-log
     * listing, no header reads. */
   def latestCommitVersion(table: String): Option[Long] =
-    manifestState(table)._1.lastOption.map(_._1)
+    logListing(table).latest
 
   /** (incarnation id, latest commit version) in ONE commit-log
     * listing — what the streaming CDC source stamps into its offsets
@@ -1736,8 +1812,8 @@ class Lake(spark: SparkSession, val root: String) {
     * committed manifest. */
   private[graft] def incarnationAndLatest(table: String)
       : Option[(String, Long)] = {
-    val (kinds, inc) = manifestState(table)
-    kinds.lastOption.map { case (v, _) => (inc, v) }
+    val log = logListing(table)
+    log.latest.map((log.inc, _))
   }
 
   /** The manifest incarnation id currently serving `table` (None = no
@@ -1751,10 +1827,11 @@ class Lake(spark: SparkSession, val root: String) {
   def currentIncarnation(table: String): Option[String] =
     incarnationAndLatest(table).map(_._1)
 
-  def commitVersions(table: String): Seq[(Long, Option[Long])] = {
-    val (kinds, inc) = manifestState(table)
-    kinds.map { case (v, d) => (v, commitTimeOf(table, inc, v, d)) }
-  }
+  /** The retained commit log with wall-clocks: (version, commit epoch
+    * millis; None = committed before timestamps existed), ascending.
+    * Bounded by manifest retention (~two checkpoint generations). */
+  def commitVersions(table: String): Seq[(Long, Option[Long])] =
+    commitHistory(table).map(h => (h._1, h._2))
 
   /** Resolve a wall-clock to the manifest version current AT that
     * instant: the latest commit whose `#ts` ≤ `tsMillis`. Commit
@@ -1798,13 +1875,13 @@ class Lake(spark: SparkSession, val root: String) {
     * the same invalidation contract as [[readAt]]. */
   private[graft] def entriesAtCommit(table: String,
                                      version: Long): Seq[(String, Long)] = {
-    val (kinds, inc) = manifestState(table)
-    require(kinds.exists(_._1 == version),
+    val log = logListing(table)
+    require(log.has(version),
       s"commit v$version of $table is not retained (expired by " +
-        s"manifest retention; retained: ${kinds.map(_._1).mkString(",")})")
-    val rels = resolveManifest(table, inc, kinds, version)
+        s"manifest retention; retained: ${log.kinds.map(_._1).mkString(",")})")
+    val rels = stateAt(table, log, version).entries.toSeq.sortBy(_._1)
     val base = fs.makeQualified(new Path(dir(table))).toString
-    if (kinds.last._1 == version)
+    if (log.latest.contains(version))
       rels.map { case (rel, b) => (s"$base/$rel", b) }
     else
       // the shared pinned-read resolution (one getFileStatus per
@@ -1831,16 +1908,15 @@ class Lake(spark: SparkSession, val root: String) {
       : Option[Seq[(Seq[(String, Long)], Set[String])]] = {
     if (toInclusive <= fromExclusive ||
         toInclusive - fromExclusive > 64) return None
-    val (kinds, curInc) = manifestState(table)
-    if (curInc != inc) return None
+    val log = logListing(table)
+    if (log.inc != inc) return None
     val range = (fromExclusive + 1) to toInclusive
-    if (!range.forall(w => kinds.exists(k => k._1 == w && k._2)))
-      return None
+    if (!range.forall(log.isDelta)) return None
     val base = fs.makeQualified(new Path(dir(table))).toString
     try Some(range.map { w =>
-      val (added, removedRel) = readDelta(table, w)
-      (added.map { case (rel, b) => (s"$base/$rel", b) },
-        removedRel.map(r => s"$base/$r"))
+      val f = readLogFile(table, inc, w, isDelta = true)
+      (f.added.map { case (rel, b) => (s"$base/$rel", b) },
+        f.removed.map(r => s"$base/$r"))
     })
     catch { case _: java.io.IOException => None }
   }
@@ -1903,9 +1979,9 @@ class Lake(spark: SparkSession, val root: String) {
     * at 10⁶ files — ManifestProbe's dsv2_plan_pruned_warm). */
   private[graft] def currentEntriesKeyed(table: String)
       : Option[(String, Long, Seq[(String, Long)])] = {
-    val (kinds, inc) = manifestState(table)
-    kinds.lastOption.map { case (v, _) =>
-      (inc, v, inventoryAt(table, inc, kinds, v).map(e => (e._2, e._3)))
+    val log = logListing(table)
+    log.latest.map { v =>
+      (log.inc, v, stateAt(table, log, v).inventory.map(e => (e._2, e._3)))
     }
   }
 
@@ -2010,7 +2086,7 @@ class Lake(spark: SparkSession, val root: String) {
     // the rewrite-set walk below: separate listings would let a
     // retention cut between them expire a rewrite the guard had
     // validated as retained, and its churn would flow silently
-    val (kinds, inc) = manifestState(table)
+    val log = logListing(table)
     // dataChange = false guard: a compaction/clustering between the two
     // snapshots swaps files WITHOUT changing rows — diffing through it
     // would surface every row of the rewritten files as delete+insert
@@ -2030,13 +2106,13 @@ class Lake(spark: SparkSession, val root: String) {
     // retained-rewrites-only check.
     (parseSnapshotAnchor(fromBody), parseSnapshotAnchor(toBody)) match {
       case (Some((incF, cFrom)), Some((incT, cTo))) =>
-        require(incF == inc && incT == inc,
+        require(incF == log.inc && incT == log.inc,
           s"table_changes($fromVersion, $toVersion) of $table: the " +
             "snapshots were pinned under a different manifest " +
             "incarnation (the table has been dropped and recreated) - " +
             "their commit anchors have no relation to the current " +
             "history")
-        val retained = kinds.map(_._1).toSet
+        val retained = log.kinds.map(_._1).toSet
         // (cFrom, cTo], NOT [cFrom, cTo]: a rewrite at or before cFrom
         // is already baked into the from-snapshot's pinned file set -
         // only commits strictly after the from-anchor can hide churn,
@@ -2061,7 +2137,7 @@ class Lake(spark: SparkSession, val root: String) {
     // compaction's OUTPUT is on the diff's removed side, which is fine
     // (the upsert removed it, with real row changes), and would hit a
     // union check forever after one retained compaction.
-    val (rwRemoved, rwAdded) = rewriteSwappedRels(table, kinds, inc,
+    val (rwRemoved, rwAdded) = rewriteSwappedRels(table, log,
       what = s"table_changes($fromVersion, $toVersion)")
     val churned = ((from -- to) & rwRemoved) ++ ((to -- from) & rwAdded)
     require(churned.isEmpty,
@@ -2080,42 +2156,12 @@ class Lake(spark: SparkSession, val root: String) {
     // diff, which a bare file-set diff cannot see
     val dvFrom = parseSnapshotDvMap(fromBody)
     val dvTo = parseSnapshotDvMap(toBody)
-    def files(rels: Seq[String], dvPin: Map[String, Dv.Ref],
-              include: Map[String, Array[Long]] = Map.empty)
-        : Seq[ChangeFile] =
-      resolveLiveOrRetired(table, rels.sorted,
-        s"table_changes($fromVersion, $toVersion)")
-        .map { case (p, b) =>
-          val rel = relAnywhere(p)
-          include.get(rel) match {
-            case Some(ps) => ChangeFile(chainOfRel(p), p, b,
-              include = Some(ps))
-            case None => ChangeFile(chainOfRel(p), p, b,
-              exclude = dvPin.get(rel))
-          }
-        }
+    val (delFiles, insFiles) = changeSides(table,
+      s"table_changes($fromVersion, $toVersion)", (from -- to).toSeq,
+      (to -- from).toSeq, from & to, dvFrom, dvTo)
     def side(fs0: Seq[ChangeFile], kind: String): DataFrame =
       readChangeFiles(table, fs0, schema)
         .withColumn("_change_type", lit(kind))
-    val common = (from & to).toSeq
-    val grown = common.flatMap { rel =>
-      if (dvFrom.get(rel) == dvTo.get(rel)) None
-      else {
-        val cur = dvTo.get(rel).map(dvPositions(table, _))
-          .getOrElse(Array.empty[Long])
-        val prev = dvFrom.get(rel).map(dvPositions(table, _))
-          .getOrElse(Array.empty[Long])
-        Some((rel, Dv.minus(cur, prev), Dv.minus(prev, cur)))
-      }
-    }
-    val delFiles = files((from -- to).toSeq, dvFrom) ++
-      files(grown.collect { case (r, d, _) if d.nonEmpty => r },
-        dvFrom, grown.collect { case (r, d, _) if d.nonEmpty =>
-          (r, d) }.toMap)
-    val insFiles = files((to -- from).toSeq, dvTo) ++
-      files(grown.collect { case (r, _, u) if u.nonEmpty => r },
-        dvTo, grown.collect { case (r, _, u) if u.nonEmpty =>
-          (r, u) }.toMap)
     side(delFiles, "delete").unionByName(side(insFiles, "insert"))
   }
 
@@ -2123,41 +2169,31 @@ class Lake(spark: SparkSession, val root: String) {
     * pre-dv snapshots). */
   private def parseSnapshotDvMap(body: Seq[String])
       : Map[String, Dv.Ref] =
-    body.filter(_.startsWith("#dv=")).map { l =>
-      val f = l.stripPrefix("#dv=").split('\t')
-      (new String(unb64(f(0)), "UTF-8"), Dv.Ref(f(1), f(2).toLong))
-    }.toMap
+    body.filter(_.startsWith("#dv=")).map(dvLine).toMap
 
   /** Table-relative paths swapped by RETAINED rewrite-only commits,
     * split by side: (what rewrites REMOVED, what they ADDED) —
     * [[tableChanges]]' churn guard matches each diff side against the
     * corresponding rewrite side, and [[changesBetweenCommits]] skips
-    * the commits wholesale. Walks the CALLER's `kinds` listing (the
-    * guard validated its range against the same one — a second
-    * listing here would race a retention cut into a silent gap).
-    * O(retained commits) cached header reads; delta bodies are read
-    * only for rewrite commits. A version deleted by a concurrent
-    * retention cut MID-WALK refuses loudly — skipping it would hide
-    * a rewrite from the churn guard, and treating it as header-less
-    * would do the same silently. */
-  private def rewriteSwappedRels(table: String,
-      kinds: Seq[(Long, Boolean)], inc: String, what: String)
-      : (Set[String], Set[String]) = {
+    * the commits wholesale. Walks the CALLER's listing (the guard
+    * validated its range against the same one — a second listing
+    * here would race a retention cut into a silent gap). O(retained
+    * commits) cached header reads; bodies are read only for rewrite
+    * commits. A version deleted by a concurrent retention cut
+    * MID-WALK refuses loudly — skipping it would hide a rewrite from
+    * the churn guard, and treating it as header-less would do the
+    * same silently. */
+  private def rewriteSwappedRels(table: String, log: LogListing,
+      what: String): (Set[String], Set[String]) = {
     val rm = Set.newBuilder[String]
     val ad = Set.newBuilder[String]
-    kinds.foreach { case (v, isDelta) =>
+    log.kinds.foreach { case (v, _) =>
+      val c = new CommitView(table, log, v)
       try {
-        if (rewriteOps(
-            commitHeaderOf(table, inc, v, isDelta, strict = true)._2)) {
-          if (isDelta) {
-            val (added, removed) = readDelta(table, v)
-            ad ++= added.map(_._1); rm ++= removed
-          } else if (kinds.exists(_._1 == v - 1)) {
-            val prev = resolveManifest(table, inc, kinds, v - 1).map(_._1).toSet
-            val cur = resolveManifest(table, inc, kinds, v).map(_._1).toSet
-            rm ++= (prev -- cur); ad ++= (cur -- prev)
-          } // else: base expired - nothing diffable survives either
-        }
+        // a checkpoint whose base expired has nothing diffable left
+        if (rewriteOps(c.heads.op) && v != 1L)
+          c.sides.foreach { case (added, removed) =>
+            ad ++= added; rm ++= removed }
       } catch {
         case _: java.io.FileNotFoundException =>
           throw new IllegalArgumentException(
@@ -2216,48 +2252,18 @@ class Lake(spark: SparkSession, val root: String) {
   /** Bytes a commit ADDED (the published formats' maxBytesPerTrigger
     * accounting unit) — the streaming CDC source's admission-control
     * estimate. Cheap only for DELTA commits (one small body read,
-    * cached); None for checkpoint commits (their change is a full-set
-    * diff — the caller treats None as batch-breaking, which just ends
-    * the micro-batch at the every-16th checkpoint) and for expired
-    * versions. */
-  private[graft] val deltaBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      (String, String, Long), java.lang.Long]()
-
+    * cached in [[commitInfos]]); None for checkpoint commits (their
+    * change is a full-set diff — the caller treats None as
+    * batch-breaking, which just ends the micro-batch at the every-16th
+    * checkpoint) and for expired versions. */
   private[graft] def commitAddedBytes(table: String, v: Long)
       : Option[Long] = {
-    val (kinds, inc) = manifestState(table)
-    if (!kinds.exists(k => k._1 == v && k._2)) return None
-    val cached = deltaBytesCache.get((table, inc, v))
-    if (cached != null) return Some(cached.longValue)
-    val bytes =
-      try readDelta(table, v)._1.map(_._2).sum
-      catch { case _: java.io.IOException => return None }
-    deltaBytesCache.put((table, inc, v), bytes)
-    evictDeltaBytes(table, inc, v)
-    Some(bytes)
+    val log = logListing(table)
+    if (!log.isDelta(v)) None
+    else try commitInfo(table, log.inc, v, isDelta = true,
+      strict = true).addedBytes
+    catch { case _: java.io.IOException => None }
   }
-
-  /** Evict ONLY the inserting table's old versions from
-    * [[deltaBytesCache]]: one table with high commit versions must
-    * not continually purge a low-version table's still-hot entries
-    * (that would force the other table's stream to re-read its delta
-    * bodies on every latestOffset poll). A FOREIGN incarnation of the
-    * SAME table is dead history (dropTable+recreate restarted the
-    * version numbers) and is evicted regardless of version — without
-    * that, a recreated table's old-incarnation entries never match
-    * `v - 1024` against the new low versions and pin the cache until
-    * the global stop-loss wipes every live table at once. */
-  private[graft] def evictDeltaBytes(table: String, inc: String,
-                                     v: Long): Unit =
-    if (deltaBytesCache.size > 4096) {
-      deltaBytesCache.keySet.removeIf(k =>
-        k._1 == table && (k._2 != inc || k._3 < v - 1024))
-      // hard bound regardless of table mix (hundreds of tables each
-      // under their own 1024-version window): entries are cheap
-      // (tuple key + boxed Long), so the stop-loss just resets
-      if (deltaBytesCache.size > 65536) deltaBytesCache.clear()
-    }
 
   /** Row-grain CDC enrichment — the published formats' "enriched"
     * change-data-feed mode (Delta CDF's update_preimage/postimage)
@@ -2374,108 +2380,59 @@ class Lake(spark: SparkSession, val root: String) {
     require(fromVersion <= toVersion,
       s"changesBetweenCommits of $table needs fromVersion <= toVersion " +
         s"(got $fromVersion > $toVersion)")
-    val (kinds, inc) = manifestState(table)
+    val log = logListing(table)
     // the incarnation check runs against the SAME listing the plan
     // reads from — a separate pre-check would leave a window where a
     // dropTable+recreate lands in between and the plan silently reads
     // the NEW table's commits under the old feed's version numbers
     expectedIncarnation.foreach { want =>
-      require(inc == want,
+      require(log.inc == want,
         s"changesBetweenCommits($fromVersion, $toVersion) of $table: " +
           s"the stored versions belong to manifest incarnation $want, " +
           s"but the table has been dropped and recreated (current: " +
-          s"$inc) - the version numbers have no relation to this " +
+          s"${log.inc}) - the version numbers have no relation to this " +
           "table's history; restart the feed from a current snapshot")
     }
     if (fromVersion == toVersion) return Seq.empty
-    val retained = kinds.map(_._1).toSet
+    val what = s"changesBetweenCommits($fromVersion, $toVersion)"
     val wanted = (fromVersion + 1) to toVersion
-    val missing = wanted.filterNot(retained)
+    val missing = wanted.filterNot(log.has)
     require(missing.isEmpty,
-      s"changesBetweenCommits($fromVersion, $toVersion) of $table: " +
-        s"commit version(s) ${missing.take(5).mkString(", ")} expired by " +
-        "manifest retention - that history is gone; restart the change " +
-        "feed from a current snapshot of the table")
+      s"$what of $table: commit version(s) " +
+        s"${missing.take(5).mkString(", ")} expired by manifest " +
+        "retention - that history is gone; restart the change feed " +
+        "from a current snapshot of the table")
+    // the dv map threads forward through every commit, rewrites
+    // included (a dv-materialize changes it); `#dvs` heads keep it free
+    // for dv-less history
+    var dv =
+      if (fromVersion > 0L && log.has(fromVersion)) dvAt(table, log, fromVersion)
+      else Map.empty[String, Dv.Ref]
     wanted.flatMap { v =>
-      val isDelta = kinds.find(_._1 == v).exists(_._2)
-      // STRICT header read: a version expired by a concurrent
-      // retention cut mid-plan must refuse loudly — read as
-      // header-less it would be misclassified as data-changing, and a
-      // cached fold could then emit the rewrite's file swap as
-      // delete+insert churn
-      val op = try commitHeaderOf(table, inc, v, isDelta, strict = true)._2
-      catch {
-        case _: java.io.FileNotFoundException =>
-          throw new IllegalArgumentException(
-            s"changesBetweenCommits($fromVersion, $toVersion) of " +
-              s"$table: commit v$v was expired by a concurrent " +
-              "retention cut mid-read - retry from a current snapshot")
-      }
+      val c = new CommitView(table, log, v)
+      // STRICT reads: a version expired by a concurrent retention cut
+      // mid-plan must refuse loudly — read as header-less it would be
+      // misclassified as data-changing, and a cached fold could then
+      // emit the rewrite's file swap as delete+insert churn
+      val (op, dvPrev, dvCur) =
+        try { val prev = dv; dv = c.dvAfter(prev); (c.heads.op, prev, dv) }
+        catch {
+          case _: java.io.FileNotFoundException =>
+            throw new IllegalArgumentException(
+              s"$what of $table: commit v$v was expired by a concurrent " +
+                "retention cut mid-read - retry from a current snapshot")
+        }
       if (rewriteOps(op)) Seq.empty
       else {
-        val (added, removed): (Seq[String], Seq[String]) =
-          if (isDelta) {
-            val (a, r) = readDelta(table, v)
-            (a.map(_._1), r.toSeq)
-          } else {
-            // a checkpoint commit carries the FULL set; its change is
-            // the diff against the previous version's fold
-            require(v == 1 || kinds.exists(_._1 == v - 1),
-              s"changesBetweenCommits($fromVersion, $toVersion) of " +
-                s"$table: v${v - 1} (the base of checkpoint v$v) expired " +
-                "by manifest retention - restart the change feed from a " +
-                "current snapshot")
-            val prev = if (v == 1) Set.empty[String]
-              else resolveManifest(table, inc, kinds, v - 1).map(_._1).toSet
-            val cur = resolveManifest(table, inc, kinds, v).map(_._1).toSet
-            ((cur -- prev).toSeq, (prev -- cur).toSeq)
-          }
-        // deletion-vector state around the commit: a removed file's
-        // rows read through the vector it carried BEFORE the commit
-        // (already-deleted rows must not re-emit as deletes); a
-        // surviving file whose vector CHANGED emits its position
-        // diffs — newly-deleted rows as deletes, restore-resurrected
-        // rows as inserts. `#dvs` heads make this free for dv-less
-        // history (both maps resolve empty without body reads).
-        val dvPrev = if (v == 1) Map.empty[String, Dv.Ref]
-          else resolveDvMap(table, inc, kinds, v - 1)
-        val dvCur = resolveDvMap(table, inc, kinds, v)
-        val addedSet = added.toSet
-        val removedSet = removed.toSet
-        val grown = (dvPrev.keySet ++ dvCur.keySet).toSeq.sorted
-          .filterNot(r => addedSet(r) || removedSet(r))
-          .flatMap { rel =>
-            if (dvPrev.get(rel) == dvCur.get(rel)) None
-            else {
-              val cur = dvCur.get(rel).map(dvPositions(table, _))
-                .getOrElse(Array.empty[Long])
-              val prev = dvPrev.get(rel).map(dvPositions(table, _))
-                .getOrElse(Array.empty[Long])
-              Some((rel, Dv.minus(cur, prev), Dv.minus(prev, cur)))
-            }
-          }
-        def files(rels: Seq[String], dvPin: Map[String, Dv.Ref],
-                  include: Map[String, Array[Long]] = Map.empty)
-            : Seq[ChangeFile] =
-          resolveLiveOrRetired(table, rels.sorted,
-            s"changesBetweenCommits($fromVersion, $toVersion)")
-            .map { case (p, b) =>
-              val rel = relAnywhere(p)
-              include.get(rel) match {
-                case Some(ps) => ChangeFile(chainOfRel(p), p, b,
-                  include = Some(ps))
-                case None => ChangeFile(chainOfRel(p), p, b,
-                  exclude = dvPin.get(rel))
-              }
-            }
-        val delFiles = files(removed, dvPrev) ++
-          files(grown.collect { case (r, d, _) if d.nonEmpty => r },
-            dvPrev, grown.collect { case (r, d, _) if d.nonEmpty =>
-              (r, d) }.toMap)
-        val insFiles = files(added, dvCur) ++
-          files(grown.collect { case (r, _, u) if u.nonEmpty => r },
-            dvCur, grown.collect { case (r, _, u) if u.nonEmpty =>
-              (r, u) }.toMap)
+        // a checkpoint commit carries the FULL set; its change is the
+        // diff against the previous version's fold
+        val (added, removed) = c.sides.getOrElse(throw
+          new IllegalArgumentException(s"$what of $table: v${v - 1} " +
+            s"(the base of checkpoint v$v) expired by manifest " +
+            "retention - restart the change feed from a current snapshot"))
+        val (delFiles, insFiles) = changeSides(table, what,
+          removed.toSeq, added.toSeq,
+          (dvPrev.keySet ++ dvCur.keySet) -- added -- removed, dvPrev, dvCur)
         def side(fs0: Seq[ChangeFile], kind: String)
             : Option[(Long, String, Seq[ChangeFile])] =
           if (fs0.isEmpty) None else Some((v, kind, fs0))
@@ -2484,99 +2441,42 @@ class Lake(spark: SparkSession, val root: String) {
     }
   }
 
-  /** Mapped-inventory cache keyed by (table, version) — the
-    * chain-parse + path-qualify + sort over ALL entries is O(n log n)
-    * PER CALL otherwise, and at 10⁶ files that is ~10 s on every
-    * read/plan (ManifestProbe measured it; the fold itself is cached,
-    * this was the uncached half). A manifest version IS a fixed file
-    * set, so the mapped view is immutable too. */
-  private val inventoryCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Long), Seq[(String, String, Long)]]()
-
-  /** Manifest-served inventory in [[fileInventory]]'s shape (qualified
-    * absolute paths — callers strip against a qualified base). The
-    * table dir is qualified ONCE and rel paths appended as strings —
-    * per-entry `fs.makeQualified` costs a Path object per file per
-    * call. */
-  private[v3] def manifestInventory(table: String)
-      : Option[Seq[(String, String, Long)]] = {
-    val (kinds, inc) = manifestState(table)
-    kinds.lastOption.map { case (v, _) => inventoryAt(table, inc, kinds, v) }
-  }
-
-  /** The mapped inventory at a SPECIFIC version from already-listed
-    * `kinds` — the version-pinned half of [[manifestInventory]], so
-    * callers that must pair a version with its exact file set
-    * ([[read]]'s relation cache) never perform a second listing that
-    * could observe a racing commit's newer state.
-    *
-    * INCREMENTAL: when an earlier version's mapped inventory is still
-    * cached and every version between it and `v` is a DELTA, the new
-    * inventory is the cached one patched with the deltas (drop
-    * removed, merge sorted additions) — O(table + batch log batch)
-    * with NO per-entry re-parse and NO full re-sort. The steady-state
-    * CDC consumer therefore pays O(batch)-ish per commit instead of
-    * the full map+sort (~5 s per commit at 10⁶ files — ManifestProbe
-    * r14); a cold driver (nothing cached) or a checkpoint boundary
-    * falls back to the full rebuild. */
-  private def inventoryAt(table: String, inc: String,
-                          kinds: Seq[(Long, Boolean)],
-                          v: Long): Seq[(String, String, Long)] =
-    Option(inventoryCache.get((table, inc, v))).getOrElse {
-      val base = fs.makeQualified(new Path(dir(table))).toString
-      def mapOne(rel: String, bytes: Long): (String, String, Long) =
-        (chainOfRel(rel), s"$base/$rel", bytes)
-      def isDelta(w: Long): Boolean = kinds.find(_._1 == w).exists(_._2)
-      // walk back through consecutive deltas to the nearest cached
-      // inventory (a checkpoint or a missing version stops the walk)
-      var w = v - 1
-      var prevInv: Seq[(String, String, Long)] = null
-      var walking = isDelta(v)
-      while (walking && prevInv == null && kinds.exists(_._1 == w)) {
-        prevInv = inventoryCache.get((table, inc, w))
-        if (prevInv == null) { walking = isDelta(w); w -= 1 }
+  /** The (delete, insert) sides of one change: `removed` files read
+    * through the vector they carried BEFORE it (already-deleted rows
+    * must not re-emit as deletes), `added` through the new map, and
+    * each `common` file whose vector CHANGED emits its position diffs
+    * — newly-deleted rows as deletes, restore-resurrected rows as
+    * inserts (the merge-on-read delete's change, which a bare
+    * file-set diff cannot see). Files resolve live-or-retired. */
+  private def changeSides(table: String, what: String,
+      removed: Seq[String], added: Seq[String], common: Iterable[String],
+      dvPrev: Map[String, Dv.Ref], dvCur: Map[String, Dv.Ref])
+      : (Seq[ChangeFile], Seq[ChangeFile]) = {
+    val grown = common.toSeq.sorted.flatMap { rel =>
+      if (dvPrev.get(rel) == dvCur.get(rel)) None
+      else {
+        val cur = dvCur.get(rel).map(dvPositions(table, _))
+          .getOrElse(Array.empty[Long])
+        val prev = dvPrev.get(rel).map(dvPositions(table, _))
+          .getOrElse(Array.empty[Long])
+        Some((rel, Dv.minus(cur, prev), Dv.minus(prev, cur)))
       }
-      val mapped =
-        if (prevInv != null) {
-          var cur = prevInv
-          ((w + 1) to v).foreach { d =>
-            val (added, removedRel) = readDelta(table, d)
-            val removedAbs = removedRel.map(r => s"$base/$r")
-            val add = added.map { case (rel, b) => mapOne(rel, b) }
-              .sortBy(t => (t._1, t._2))
-            val kept =
-              if (removedAbs.isEmpty) cur
-              else cur.filterNot(e => removedAbs.contains(e._2))
-            cur = mergeByChainPath(kept, add)
-          }
-          cur
-        } else resolveManifest(table, inc, kinds, v)
-          .map { case (rel, bytes) => mapOne(rel, bytes) }
-          .sortBy(t => (t._1, t._2))
-      inventoryCache.put((table, inc, v), mapped)
-      inventoryCache.keySet.removeIf(k => k._1 == table &&
-        (k._2 != inc || k._3 < v))
-      mapped
     }
-
-  /** One delta commit's body: (added (rel, bytes), removed rels). */
-  private def readDelta(table: String,
-                        v: Long): (Seq[(String, Long)], Set[String]) = {
-    val added = Seq.newBuilder[(String, Long)]
-    val removed = Set.newBuilder[String]
-    readManifestBody(table, v, isDelta = true).split("\n").foreach { l =>
-      if (l.nonEmpty && !l.startsWith("#")) {
-        if (l.startsWith("-"))
-          removed += new String(unb64(l.substring(1)), "UTF-8")
-        else {
-          val t = l.substring(1)
-          val i = t.indexOf('\t')
-          added += ((new String(unb64(t.substring(0, i)), "UTF-8"),
-            t.substring(i + 1).toLong))
+    def files(rels: Seq[String], dvPin: Map[String, Dv.Ref],
+              include: Map[String, Array[Long]] = Map.empty)
+        : Seq[ChangeFile] =
+      resolveLiveOrRetired(table, rels.sorted, what).map { case (p, b) =>
+        val rel = relAnywhere(p)
+        include.get(rel) match {
+          case Some(ps) => ChangeFile(chainOfRel(p), p, b, include = Some(ps))
+          case None => ChangeFile(chainOfRel(p), p, b,
+            exclude = dvPin.get(rel))
         }
       }
-    }
-    (added.result(), removed.result())
+    val dels = grown.collect { case (r, d, _) if d.nonEmpty => (r, d) }
+    val ins = grown.collect { case (r, _, u) if u.nonEmpty => (r, u) }
+    (files(removed, dvPrev) ++ files(dels.map(_._1), dvPrev, dels.toMap),
+      files(added, dvCur) ++ files(ins.map(_._1), dvCur, ins.toMap))
   }
 
   /** Merge two (chain, path, bytes) seqs each sorted by (chain, path)
@@ -2605,7 +2505,7 @@ class Lake(spark: SparkSession, val root: String) {
       }
       ia.foreach(out += _)
       ib.foreach(out += _)
-      out.toSeq
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(out.toArray)
     }
 
   /** Acquire the table's commit lock (create-exclusive file carrying
@@ -2694,6 +2594,16 @@ class Lake(spark: SparkSession, val root: String) {
   private def releaseCommitLock(lock: Path, token: String): Unit =
     if (ownsLock(lock, token)) fs.delete(lock, false)
 
+  /** Run `body` holding the table's commit lock — the ONE caller of
+    * [[acquireCommitLock]]. `body` gets the publish fence: a check
+    * that the claim is still ours (false once a waiter broke it as
+    * stale). */
+  private def withCommitLock[A](table: String)(body: (() => Boolean) => A): A = {
+    val (lock, token) = acquireCommitLock(table)
+    try body(() => ownsLock(lock, token))
+    finally releaseCommitLock(lock, token)
+  }
+
   // Manifests are PLANNING state — time travel is [[snapshot]]'s job;
   // version files write-temp-then-rename so readers never observe a
   // torn manifest, and retention is checkpoint-anchored (below).
@@ -2704,18 +2614,23 @@ class Lake(spark: SparkSession, val root: String) {
     * to roughly two checkpoint generations of small files. */
   private val checkpointEvery = 16
 
-  /** Publish version `next = last + 1` of the commit log. `entries`
-    * is the COMPLETE folded file set (always known to callers — they
-    * just computed it); `delta = Some((added, removedRel))` lets the
-    * commit land as an O(batch)-byte delta file. A checkpoint (full
-    * set) is written instead when the caller has no delta
-    * (adoption/refresh), the log is empty, or `checkpointEvery` deltas
-    * have stacked since the last checkpoint — at which point every
-    * version older than the PREVIOUS checkpoint is deleted (two
-    * checkpoint generations stay readable, so a reader that listed
-    * versions just before this publish still folds its chain). */
-  private def publishManifest(table: String,
-                              entries: Seq[(String, Long)],
+  /** Publish version `next = last + 1` of the commit log `log` (the
+    * caller's listing, taken under the commit lock). `entries` is the
+    * COMPLETE folded file set (always known to callers — they just
+    * computed it); `delta = Some((added, removedRel))` lets the commit
+    * land as an O(batch)-byte delta file. A checkpoint (full set) is
+    * written instead when the caller has no delta (adoption/refresh),
+    * the log is empty, or `checkpointEvery` deltas have stacked since
+    * the last checkpoint — at which point every version older than
+    * the PREVIOUS checkpoint is deleted (two checkpoint generations
+    * stay readable, so a reader that listed versions just before this
+    * publish still folds its chain). The new version's [[LogState]]
+    * (a successor of `base`, the latest state, when the commit is a
+    * delta of it) is installed in [[logStates]], so this instance's
+    * read-back opens no manifest file. */
+  private def publishManifest(table: String, log: LogListing,
+                              base: Option[LogState],
+                              entries: Map[String, Long],
                               delta: Option[(Seq[(String, Long)],
                                 Set[String])] = None,
                               what: String = "",
@@ -2723,16 +2638,16 @@ class Lake(spark: SparkSession, val root: String) {
                               dvChanges: Map[String, Dv.Ref] = Map.empty,
                               dvDrops: Set[String] = Set.empty): Long = {
     val d = manifestDir(table)
-    val (kinds, inc0) = manifestState(table)
+    val kinds = log.kinds
     // first publish of this incarnation: mint the `.id-` marker the
-    // version-keyed caches salt their keys with (runs under the commit
-    // lock, so exactly one writer mints it)
-    val inc = if (inc0.nonEmpty) inc0 else {
+    // commit-log caches key on (runs under the commit lock, so exactly
+    // one writer mints it)
+    val inc = if (log.inc.nonEmpty) log.inc else {
       val u = java.util.UUID.randomUUID().toString
       fs.create(new Path(d, s".id-$u"), false).close()
       u
     }
-    val v = kinds.lastOption.map(_._1).getOrElse(0L) + 1
+    val v = log.latest.getOrElse(0L) + 1
     val deltasSinceCheckpoint =
       kinds.reverse.takeWhile(_._2).size
     // a full-table rewrite's "delta" (compact/clusterCompact/dropChain
@@ -2749,17 +2664,16 @@ class Lake(spark: SparkSession, val root: String) {
     // have lost files behind the manifest's back). The data file of
     // every CHANGED vector must be in the final set — a dangling ref
     // is a planning-time wrong result, refuse at the source.
-    val entryRelSet = entries.map(_._1).toSet
-    require(dvChanges.keySet.subsetOf(entryRelSet),
+    val outside = dvChanges.keys.filterNot(entries.contains)
+    require(outside.isEmpty,
       s"dv publish of $table names data file(s) outside the manifest: " +
-        dvChanges.keySet.diff(entryRelSet).take(3).mkString(", "))
-    val prevDv: Map[String, Dv.Ref] = kinds.lastOption.map {
-      case (pv, _) => resolveDvMap(table, inc0, kinds, pv)
-    }.getOrElse(Map.empty)
+        outside.take(3).mkString(", "))
+    val prevDv: Map[String, Dv.Ref] = base.map(_.dv)
+      .getOrElse(log.latest.map(dvAt(table, log, _)).getOrElse(Map.empty))
     val removedRelSet = delta.map(_._2).getOrElse(Set.empty)
     val dropSet = dvDrops ++ prevDv.keySet.intersect(removedRelSet)
     val resultDv = (prevDv -- dropSet ++ dvChanges)
-      .filter { case (rel, _) => entryRelSet(rel) }
+      .filter { case (rel, _) => entries.contains(rel) }
     val dvGated = resultDv.nonEmpty
     val dvChanged = dvChanges.nonEmpty || dropSet.nonEmpty
     // every commit leads with `#ts=<epoch-millis>` (the wall-clock
@@ -2775,7 +2689,7 @@ class Lake(spark: SparkSession, val root: String) {
     // skip-safe (`#` heads are ignored by old parsers, delta bodies
     // are versioned by file NAME, sidecar/stats are derived caches),
     // so N is pinned at [[Lake.SupportedReaderVersion]] = 1.
-    // [[readManifestBody]] refuses a higher N loudly, naming the
+    // [[readLogFile]] refuses a higher N loudly, naming the
     // feature the writer recorded after the number.
     // the reader gate records what the table REQUIRES, not what this
     // build supports: 2 only while deletion vectors exist (the first
@@ -2802,15 +2716,10 @@ class Lake(spark: SparkSession, val root: String) {
     // checkpoints carry the FULL map, deltas only this commit's
     // changes — and only when it has any (#dvc)
     val dvLines =
-      if (!asDelta)
-        resultDv.toSeq.sortBy(_._1).map { case (rel, r) =>
-          s"#dv=${b64(rel.getBytes("UTF-8"))}\t${r.name}\t${r.cardinality}"
-        }
+      if (!asDelta) dvLinesOf("#dv=", resultDv)
       else if (dvChanged)
         dropSet.toSeq.sorted.map(r => s"#dv-=${b64(r.getBytes("UTF-8"))}") ++
-          dvChanges.toSeq.sortBy(_._1).map { case (rel, r) =>
-            s"#dv+=${b64(rel.getBytes("UTF-8"))}\t${r.name}\t${r.cardinality}"
-          }
+          dvLinesOf("#dv+=", dvChanges)
       else Seq.empty
     val body =
       if (asDelta) {
@@ -2819,10 +2728,15 @@ class Lake(spark: SparkSession, val root: String) {
           (removedRel.toSeq.sorted.map(r => s"-${b64(r.getBytes("UTF-8"))}") ++
           added.sortBy(_._1).map { case (rel, b) =>
             s"+${b64(rel.getBytes("UTF-8"))}\t$b" })).mkString("\n")
-      } else (heads ++ dvLines ++ entries.sortBy(_._1).map { case (rel, b) =>
-        s"${b64(rel.getBytes("UTF-8"))}\t$b"
-      }).mkString("\n")
-    val name = if (asDelta) f"v$v%09d.d.txt" else f"v$v%09d.txt"
+      } else {
+        // the entry map iterates in hash order: sort it on all cores,
+        // this runs under the commit lock every checkpointEvery commits
+        val sorted = entries.toArray
+        java.util.Arrays.parallelSort(sorted, byRel)
+        (heads.iterator ++ dvLines ++ sorted.iterator.map { case (rel, b) =>
+          s"${b64(rel.getBytes("UTF-8"))}\t$b" }).mkString("\n")
+      }
+    val name = manifestName(v, asDelta)
     val tmp = new Path(d, s".m-tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, false)
     try out.write(body.getBytes("UTF-8")) finally out.close()
@@ -2831,12 +2745,17 @@ class Lake(spark: SparkSession, val root: String) {
       throw new java.io.IOException(
         s"manifest publish of $table v$v failed to rename into place")
     }
-    manifestCache.put((table, inc, v), entries.sortBy(_._1))
-    manifestCache.keySet.removeIf(k => k._1 == table &&
-      (k._2 != inc || k._3 <= v - 8))
-    dvMapCache.put((table, inc, v), resultDv)
-    dvMapCache.keySet.removeIf(k => k._1 == table &&
-      (k._2 != inc || k._3 <= v - 8))
+    val parsedHeads = parseHeads(heads)
+    val state = (base, delta) match {
+      case (Some(b), Some((added, removed))) =>
+        b.successor(inc, v, parsedHeads, entries, resultDv, added, removed)
+      case _ =>
+        new LogState(table, inc, v, parsedHeads, entries, resultDv, null,
+          Map.empty, Set.empty)
+    }
+    cacheState(state)
+    rememberCommit(table, inc, v, CommitInfo(parsedHeads,
+      if (asDelta) Some(delta.get._1.iterator.map(_._2).sum) else None))
     if (!asDelta) {
       // retention anchored to checkpoints, never mid-chain, with a
       // MINIMUM trailing window: the cut is the newest checkpoint
@@ -2856,8 +2775,7 @@ class Lake(spark: SparkSession, val root: String) {
         .filter(_ <= v - minRetain).lastOption
       cut.foreach { p =>
         kinds.filter(_._1 < p).foreach { case (old, wasDelta) =>
-          fs.delete(new Path(d,
-            if (wasDelta) f"v$old%09d.d.txt" else f"v$old%09d.txt"), false)
+          fs.delete(new Path(d, manifestName(old, wasDelta)), false)
         }
       }
     }
@@ -2867,17 +2785,23 @@ class Lake(spark: SparkSession, val root: String) {
   /** Probe seam: publish a synthetic manifest version under the commit
     * lock — the exact lock-held serialize+write every real commit pays
     * — without materializing data files. [[publishManifest]] and
-    * [[resolveManifest]] operate on entry LISTS, so the million-file
-    * probe ([[graft.ManifestProbe]]) sizes the metadata layer without
-    * synthesizing a million parquet files. */
+    * [[stateAt]] operate on entry maps, so the million-file probe
+    * ([[graft.ManifestProbe]]) sizes the metadata layer without
+    * synthesizing a million parquet files. A `delta` applies to the
+    * latest state (`entries` then only matters for a checkpoint). */
   private[graft] def publishSynthetic(table: String,
       entries: Seq[(String, Long)],
       delta: Option[(Seq[(String, Long)], Set[String])] = None,
-      what: String = "synthetic"): Long = {
-    val (lock, token) = acquireCommitLock(table)
-    try publishManifest(table, entries, delta, what)
-    finally releaseCommitLock(lock, token)
-  }
+      what: String = "synthetic"): Long =
+    withCommitLock(table) { _ =>
+      val log = logListing(table)
+      val base = log.latest.map(stateAt(table, log, _))
+      val next = (base, delta) match {
+        case (Some(b), Some((added, removed))) => b.entries -- removed ++ added
+        case _ => entries.toMap
+      }
+      publishManifest(table, log, base, next, delta, what)
+    }
 
   /** Test/probe seam: runs after a write has staged its output but
     * before it takes the commit lock — the window a concurrent writer
@@ -2939,7 +2863,7 @@ class Lake(spark: SparkSession, val root: String) {
                           // not a pre-planned file list; such writes
                           // can never lose the optimistic race
                           removedFromBase:
-                            Option[Seq[(String, Long)] => Seq[String]] = None,
+                            Option[Map[String, Long] => Seq[String]] = None,
                           extraHeads: Seq[String] = Seq.empty,
                           // deletion-vector transaction state: new or
                           // replaced vectors (rel → ref), explicit
@@ -2955,35 +2879,31 @@ class Lake(spark: SparkSession, val root: String) {
                           dvExpected: Map[String, Option[Dv.Ref]] = Map.empty)
                          (land: => Seq[(String, Long)])
       : Seq[(String, Long)] = {
-    val (lock, token) = acquireCommitLock(table)
-    val added = try {
+    val added = withCommitLock(table) { stillOurs =>
       // ONE metadata listing decides the gate, the base entries and
       // the dv state this transaction validates against
-      val (kindsTx, incTx) = manifestState(table)
-      requireWritable(table, kindsTx, incTx)
-      val base: Seq[(String, Long)] = kindsTx.lastOption.map {
-        case (bv, _) => resolveManifest(table, incTx, kindsTx, bv)
-      }.getOrElse {
+      val log = logListing(table)
+      requireWritable(table, log)
+      val baseState = log.latest.map(stateAt(table, log, _))
+      val base: Map[String, Long] = baseState.map(_.entries).getOrElse {
           val adopted =
             listInventory(table).map(f => (relOf(table, f._2), f._3))
           requireLakeLayout(table, adopted)
-          adopted
+          adopted.toMap
         }
       val removedRel = removedFromBase match {
         case Some(f) => f(base)
         case None => removedAbs.map(relOf(table, _))
       }
-      val baseSet = base.map(_._1).toSet
-      val gone = removedRel.filterNot(baseSet)
+      val gone = removedRel.filterNot(base.contains)
       if (gone.nonEmpty) throw new Lake.ConcurrentWriteException(
         s"$what of $table conflicts with a concurrent commit - " +
           s"${gone.size} file(s) this write planned against were " +
           s"already retired by another writer (re-plan and retry): " +
           gone.take(3).mkString(", "))
       if (dvChanges.nonEmpty || dvExpected.nonEmpty || dvDrops.nonEmpty) {
-        val curDv = kindsTx.lastOption.map { case (bv, _) =>
-          resolveDvMap(table, incTx, kindsTx, bv) }.getOrElse(Map.empty)
-        val dvGone = dvChanges.keys.filterNot(baseSet)
+        val curDv = baseState.map(_.dv).getOrElse(Map.empty)
+        val dvGone = dvChanges.keys.filterNot(base.contains)
         if (dvGone.nonEmpty) throw new Lake.ConcurrentWriteException(
           s"$what of $table conflicts with a concurrent commit - " +
             s"${dvGone.size} file(s) this write planned deletion " +
@@ -2999,7 +2919,7 @@ class Lake(spark: SparkSession, val root: String) {
             "stale; re-plan and retry): " + dvStale.take(3).mkString(", "))
       }
       if (plannedChains.nonEmpty) {
-        val intruders = base.collect {
+        val intruders = base.toSeq.collect {
           case (rel, b) if plannedChains(chainOfRel(rel)) &&
               !plannedRel(rel) => (chainOfRel(rel), rel, b)
         }
@@ -3013,18 +2933,17 @@ class Lake(spark: SparkSession, val root: String) {
       // publishing now would race its manifest read. Abort instead:
       // the landed files stay unmanifested orphans (invisible;
       // vacuum-sweepable) and the caller retries.
-      if (!ownsLock(lock, token)) throw new Lake.ConcurrentWriteException(
+      if (!stillOurs()) throw new Lake.ConcurrentWriteException(
         s"$what of $table lost its commit claim mid-transaction " +
           "(broken as stale) - nothing published; retry")
       val removedSet = removedRel.toSet
-      publishManifest(table,
-        base.filterNot(e => removedSet(e._1)) ++ added,
+      publishManifest(table, log, baseState, base -- removedSet ++ added,
         delta = Some((added, removedSet)), what = what,
         extraHeads = extraHeads, dvChanges = dvChanges,
         dvDrops = dvDrops)
       afterPublish()
       added
-    } finally releaseCommitLock(lock, token)
+    }
     // data-skipping stats warm-up for the just-landed files — OUTSIDE
     // the commit lock (the transaction is durable; footer reads of
     // our own immutable files must not stretch the critical section
@@ -3054,16 +2973,14 @@ class Lake(spark: SparkSession, val root: String) {
     * escape hatch for tables a FOREIGN writer appended to behind the
     * manifest's back (the manifest is otherwise authoritative: files
     * it doesn't name are invisible to reads and planning). */
-  def refreshManifest(table: String): Long = {
-    val (lock, token) = acquireCommitLock(table)
-    try {
-      val (kindsR, incR) = manifestState(table)
-      requireWritable(table, kindsR, incR)
+  def refreshManifest(table: String): Long =
+    withCommitLock(table) { _ =>
+      val log = logListing(table)
+      requireWritable(table, log)
       val entries = listInventory(table).map(f => (relOf(table, f._2), f._3))
       requireLakeLayout(table, entries)
-      publishManifest(table, entries, what = "refresh")
-    } finally releaseCommitLock(lock, token)
-  }
+      publishManifest(table, log, None, entries.toMap, what = "refresh")
+    }
 
   /** Has any chain fragmented past `maxChainFiles` live files? THE
     * check a maintenance hook polls after each write — manifest-served,
@@ -4259,10 +4176,10 @@ class Lake(spark: SparkSession, val root: String) {
         s.toLongOption.getOrElse(-1L)
       } catch { case _: java.io.FileNotFoundException => -1L }
     }
-    val (kinds, inc) = manifestState(table)
+    val log = logListing(table)
     val pre = s"$appId:"
-    val fromHeaders = kinds.iterator
-      .map { case (v, d) => commitHeads(table, inc, v, d).txn }
+    val fromHeaders = log.kinds.iterator
+      .map { case (v, d) => commitInfo(table, log.inc, v, d).heads.txn }
       .filter(_.startsWith(pre))
       .flatMap(_.stripPrefix(pre).toLongOption)
       .foldLeft(-1L)(math.max)
@@ -5164,8 +5081,8 @@ class Lake(spark: SparkSession, val root: String) {
             }
         },
         removedFromBase = Some { base =>
-          removedAbs = base.map { case (rel, _) => s"${dir(table)}/$rel" }
-          base.map(_._1)
+          removedAbs = base.keys.map(rel => s"${dir(table)}/$rel").toSeq
+          base.keys.toSeq
         }) {
       Seq.empty
     }
@@ -5469,7 +5386,7 @@ class Lake(spark: SparkSession, val root: String) {
     // stable loop survives only for manifest-less foreign tables,
     // where a racing writer's half-renamed job commit is observable
     // anchor the pin to the manifest commit it was taken at (one
-    // manifestState read decides both, so the pair cannot straddle a
+    // listing decides both, so the pair cannot straddle a
     // racing commit): the `#inc=`/`#commit=` headers let tableChanges
     // prove whether any maintenance rewrite could hide in the
     // (fromCommit, toCommit] range after retention expires it —
@@ -5477,12 +5394,11 @@ class Lake(spark: SparkSession, val root: String) {
     // rewrite's churn would flow through silently (parsers skip `#`
     // lines, so pre-anchor snapshots read back unchanged)
     val (files, anchor, pinnedDv) = {
-      val (kinds, inc) = manifestState(table)
-      kinds.lastOption match {
-        case Some((mv, _)) =>
-          (resolveManifest(table, inc, kinds, mv).map(_._1).sorted,
-            Some((inc, mv)),
-            resolveDvMap(table, inc, kinds, mv))
+      val log = logListing(table)
+      log.latest match {
+        case Some(mv) =>
+          val s = stateAt(table, log, mv)
+          (s.entries.keys.toSeq.sorted, Some((log.inc, mv)), s.dv)
         case None =>
           val base = fs.makeQualified(new Path(dir(table))).toString
           def listing(): Seq[String] = listInventory(table).map(_._2)
@@ -5505,9 +5421,7 @@ class Lake(spark: SparkSession, val root: String) {
     // CURRENT AT PIN TIME, not whatever grew later
     val body = anchor.toSeq.flatMap { case (inc, mv) =>
       Seq(s"#inc=$inc", s"#commit=$mv") } ++
-      pinnedDv.toSeq.sortBy(_._1).map { case (rel, r) =>
-        s"#dv=${b64(rel.getBytes("UTF-8"))}\t${r.name}\t${r.cardinality}"
-      } ++ files
+      dvLinesOf("#dv=", pinnedDv) ++ files
     fs.mkdirs(snapDir(table))
     var v = math.max(snapshotVersions(table).lastOption.getOrElse(0L),
       expiredHighWater(table)) + 1
@@ -5830,8 +5744,8 @@ class Lake(spark: SparkSession, val root: String) {
     val added = manifestTxn(table, "restore",
       removedAbs = Seq.empty,
       removedFromBase = Some { base =>
-        baseRels = base.map(_._1).toSet
-        removedRels = base.map(_._1).filterNot(targetSet)
+        baseRels = base.keySet
+        removedRels = base.keys.filterNot(targetSet).toSeq
         removedRels
       },
       dvChanges = dvChangesR, dvDrops = dvDropsR,
@@ -5908,39 +5822,26 @@ class Lake(spark: SparkSession, val root: String) {
     val keptRefs: Set[String] = {
       val b = Set.newBuilder[String]
       remaining.foreach(v => b ++= manifestFiles(table, v))
-      val (kinds, inc) = manifestState(table)
-      kinds.foreach { case (v, isDelta) =>
+      val log = logListing(table)
+      log.kinds.foreach { case (v, _) =>
         // rewrite-only commits (compaction/clustering) are INVISIBLE
         // to the change feeds — changePlanBetween skips them — so
         // their swapped-out files need no replay pin; only
-        // DATA-CHANGING commits' sides do. Header-less legacy commits
-        // read op "" and pin conservatively.
-        val op = commitHeaderOf(table, inc, v, isDelta)._2
-        if (!rewriteOps(op)) {
-          if (isDelta) {
-            try {
-              val (a, r) = readDelta(table, v)
-              b ++= a.map(_._1); b ++= r
-            } catch {
-              // a racing retention cut deleted this version mid-walk:
-              // its change is no longer replayable, so not pinning
-              // its files is correct (FNF only — any other IO failure
-              // aborts the vacuum rather than GC a replayable pin)
-              case _: java.io.FileNotFoundException => ()
-            }
-          } else if (v == 1L) {
-            // the table's first publish: its change IS its full set
-            // (changePlanBetween diffs v1 against empty), so a from-0
-            // replay needs every file it named
-            b ++= resolveManifest(table, inc, kinds, 1L).map(_._1)
-          } else if (kinds.exists(_._1 == v - 1)) {
-            val prev = resolveManifest(table, inc, kinds, v - 1)
-              .map(_._1).toSet
-            val cur = resolveManifest(table, inc, kinds, v).map(_._1).toSet
-            b ++= (prev -- cur); b ++= (cur -- prev)
-          }
-          // a checkpoint whose BASE (v-1) has expired is unreplayable
-          // (changePlanBetween refuses the range) - no pin needed
+        // DATA-CHANGING commits' sides do (the first commit's side is
+        // its full set: a from-0 replay needs every file it named).
+        // Header-less legacy commits read op "" and pin conservatively;
+        // a checkpoint whose BASE (v-1) has expired is unreplayable
+        // (changePlanBetween refuses the range) - no pin needed
+        val c = new CommitView(table, log, v)
+        try {
+          if (!rewriteOps(c.heads.op))
+            c.sides.foreach { case (a, r) => b ++= a; b ++= r }
+        } catch {
+          // a racing retention cut deleted this version mid-walk: its
+          // change is no longer replayable, so not pinning its files
+          // is correct (FNF only — any other IO failure aborts the
+          // vacuum rather than GC a replayable pin)
+          case _: java.io.FileNotFoundException => ()
         }
       }
       b.result()
@@ -5998,24 +5899,24 @@ class Lake(spark: SparkSession, val root: String) {
     // manifest's back. One recursive listing supplies each file's
     // mtime and length (no per-file re-stat, which costs a round-trip
     // and throws if a racer already removed the file).
-    if (sweepOrphans && hasManifest(table)) {
-      val (lock, token) = acquireCommitLock(table)
-      try latestManifest(table).foreach { case (_, entries) =>
-        val live = entries.map(_._1).toSet
+    if (sweepOrphans && hasManifest(table)) withCommitLock(table) { _ =>
+      val log = logListing(table)
+      log.latest.foreach { lv =>
+        val live = stateAt(table, log, lv).entries
         val now = System.currentTimeMillis()
         val it = fs.listFiles(new Path(dir(table)), true)
         while (it.hasNext) {
           val f = it.next()
           val name = f.getPath.getName
           if (f.isFile && !name.startsWith("_") && !name.startsWith(".") &&
-              !live(relOf(table, f.getPath.toString)) &&
+              !live.contains(relOf(table, f.getPath.toString)) &&
               now - f.getModificationTime > staleCommitMs &&
               fs.delete(f.getPath, false)) {
             files += 1
             bytes += f.getLen
           }
         }
-      } finally releaseCommitLock(lock, token)
+      }
     }
     val rdir = retiredDir(table)
     if (fs.exists(rdir)) {
@@ -6049,12 +5950,16 @@ class Lake(spark: SparkSession, val root: String) {
     // published yet (they're unreferenced until their commit lands).
     val dvd = dvDir(table)
     if (fs.exists(dvd)) {
-      val (kindsV, incV) = manifestState(table)
+      val log = logListing(table)
       val pinnedDvNames: Set[String] = {
         val b = Set.newBuilder[String]
-        kindsV.foreach { case (v, _) =>
-          resolveDvMap(table, incV, kindsV, v, cache = false)
-            .values.foreach(r => b += r.name)
+        // one forward walk: each retained commit's map from the one
+        // before it (a racing retention cut's victim keeps the map)
+        var dv = Map.empty[String, Dv.Ref]
+        log.kinds.foreach { case (v, _) =>
+          try dv = new CommitView(table, log, v).dvAfter(dv)
+          catch { case _: java.io.FileNotFoundException => () }
+          dv.values.foreach(r => b += r.name)
         }
         remaining.foreach(v =>
           parseSnapshotDvMap(snapshotBody(table, v))

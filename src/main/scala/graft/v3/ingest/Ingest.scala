@@ -81,8 +81,10 @@ object Ingest {
             connector.findSegment(table, remoteMax, minSeg, pool, chain, tgtMaxRows),
             remoteMax)
           val df = connector.read(table, maxSeg, minSeg, pool, chain)
-          val maxPulled = df.agg(max(col("block_number"))).first()
-          if (maxPulled.isNullAt(0)) {
+          // ONE job sizes the segment: its max block (the resume
+          // point) and its row count
+          val seg = df.agg(max(col("block_number")), count(lit(1))).first()
+          if (seg.isNullAt(0)) {
             // nothing in this segment; skip forward
             minSeg = maxSeg + 1
           } else {
@@ -92,11 +94,13 @@ object Ingest {
                   ovmMapping.getOrElse(throw new IllegalArgumentException(
                     "ovm ingest needs the address mapping")))
               else df
-            val n = out.count()
+            // the OVM rewrite left-joins the address map, which fans a
+            // row out if the map repeats an address: count what lands
+            val n = if (out eq df) seg.getLong(1) else out.count()
             lake.append(out, table)
             segments += 1
             rows += n
-            minSeg = maxPulled.getLong(0) + 1L
+            minSeg = seg.getLong(0) + 1L
           }
           continue = remoteMax >= minSeg
         }

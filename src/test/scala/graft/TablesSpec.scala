@@ -52,4 +52,42 @@ class TablesSpec extends SparkSpec {
     val third = Tables.read(spark, dir, "memoprobe").schema
     assert(third == second)
   }
+
+  test("in-place rewrite inside a partition subdirectory re-infers the schema") {
+    val root = java.nio.file.Files
+      .createTempDirectory("graft-tablesspec-nested").toFile
+    val dir = root.getAbsolutePath
+    val tbl = new File(root, "nestedprobe.parquet")
+    def scrubCrc(d: File): Unit =
+      Option(d.listFiles()).getOrElse(Array.empty).foreach { f =>
+        if (f.isDirectory) scrubCrc(f)
+        else if (f.getName.endsWith(".crc")) f.delete()
+      }
+
+    Seq((1L, 2L, "x")).toDF("a", "b", "p").coalesce(1)
+      .write.mode("overwrite").partitionBy("p").parquet(tbl.getAbsolutePath)
+    scrubCrc(tbl)
+    val first = Tables.read(spark, dir, "nestedprobe").schema
+    assert(first("b").dataType == LongType)
+
+    // rewrite the part file inside p=x in place; restore BOTH directory
+    // mtimes, so a key that stops at the table's immediate children
+    // (name, mtime, length of `p=x`) would still hit
+    val sub = new File(tbl, "p=x")
+    val part = sub.listFiles().filter(_.getName.startsWith("part-")).head
+    val subMtime = sub.lastModified
+    val tblMtime = tbl.lastModified
+    val tmp = new File(root, "rewrite.parquet")
+    Seq((1L, "y")).toDF("a", "b").coalesce(1)
+      .write.mode("overwrite").parquet(tmp.getAbsolutePath)
+    val newPart = tmp.listFiles().filter(_.getName.startsWith("part-")).head
+    java.nio.file.Files.copy(newPart.toPath, part.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    assert(sub.setLastModified(subMtime) && tbl.setLastModified(tblMtime))
+
+    val second = Tables.read(spark, dir, "nestedprobe").schema
+    assert(second("b").dataType == StringType,
+      s"stale schema served after a nested in-place rewrite: $second")
+    assert(Tables.read(spark, dir, "nestedprobe").schema == second)
+  }
 }

@@ -31,6 +31,23 @@ class AsyncPurgeSpec extends AnyFunSuite with graft.SparkSpec {
     assert(!java.nio.file.Files.exists(base))
   }
 
+  test("drain returns only after a task the worker already dequeued has run") {
+    // the window between the worker's dequeue and the task starting
+    // is a few instructions wide, so this is a stress loop, not a
+    // deterministic replay: each round hands the worker a task while
+    // drain races it for the queue, and drain must not return before
+    // the task has finished wherever it ran
+    val rounds = 3000
+    val missed = (1 to rounds).count { _ =>
+      val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+      AsyncPurge.submit(() => done.set(true))
+      AsyncPurge.drain(10000L)
+      !done.get()
+    }
+    assert(missed == 0,
+      s"drain returned before $missed of $rounds dequeued tasks ran")
+  }
+
   test("dropTable: paths gone on return, recreate clean, trash purged") {
     import graft.v3.{Lake, Schemas}
     val root = java.nio.file.Files.createTempDirectory("droplake").toString

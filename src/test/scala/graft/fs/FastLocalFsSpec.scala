@@ -157,6 +157,28 @@ class FastLocalFsSpec extends AnyFunSuite {
     assert(!Files.exists(Paths.get(s"$dir/tmp.log")))
   }
 
+  test("getFileLinkStatus of a symlink to a directory matches the stock status") {
+    // the link branch reports isDirectory = false for a link to a
+    // directory; stock RawLocalFileSystem builds the link status the
+    // same way, so this pins parity rather than a defect
+    val dir = tmpDir()
+    val fastRaw = new FastRawLocalFileSystem
+    fastRaw.initialize(new java.net.URI("file:///"), new Configuration())
+    val stock = newStockRaw()
+    val target = Files.createDirectory(Paths.get(s"$dir/target-dir"))
+    Files.write(target.resolve("f.txt"), "abc".getBytes("UTF-8"))
+    val link = Paths.get(s"$dir/dir-link")
+    Files.createSymbolicLink(link, target)
+    val fl = fastRaw.getFileLinkStatus(new Path(link.toString))
+    val sl = stock.getFileLinkStatus(new Path(link.toString))
+    assert(fl.isSymlink && sl.isSymlink)
+    assert(fl.isDirectory == sl.isDirectory,
+      s"isDirectory: fast ${fl.isDirectory}, stock ${sl.isDirectory}")
+    assert(fl.getSymlink.toString == sl.getSymlink.toString)
+    assert(fl.getPath == sl.getPath)
+    assert(fl.getLen == sl.getLen)
+  }
+
   test("FileSystem.get with fs.file.impl serves the fast class for file://") {
     val conf = new Configuration()
     conf.set("fs.file.impl", classOf[FastLocalFileSystem].getName)

@@ -25,28 +25,75 @@ class LakeManifestSpec extends SparkSpec {
   test("incremental inventory patching equals the cold full rebuild, commit by commit") {
     val root = Files.createTempDirectory("lake-inc").toString
     val lake = new Lake(spark, root)
-    // interleave commit kinds so the warm instance's inventory is
-    // patched through delta chains (appends, a cross-file upsert, a
-    // chain drop) and falls back over checkpoint boundaries
-    // (dropChain's full rewrite) — after EVERY commit the warm
-    // (patched) inventory must equal a fresh instance's full
-    // fold+map+sort bit-for-bit
+    // vectors on, so the folded dv map is exercised too
+    lake.setTableProperties(Schemas.Nfp, Map("dv.maxFraction" -> "0.5"))
+    // interleave commit kinds so the warm instance's state is patched
+    // through delta chains (appends, a cross-file upsert, a vector
+    // delete, a chain drop) and across checkpoint boundaries
+    // (dropChain's full rewrite, then more than 16 deltas) — after
+    // EVERY commit the writer's warm inventory and dv map must equal
+    // a fresh instance's cold fold bit-for-bit
     def check(tag: String): Unit = {
       val warm = lake.fileInventory(Schemas.Nfp)
-      val cold = new Lake(spark, root).fileInventory(Schemas.Nfp)
-      assert(warm == cold, s"$tag: patched inventory diverged from " +
-        s"the full rebuild (${warm.size} vs ${cold.size} entries)")
+      val cold = new Lake(spark, root)
+      assert(warm == cold.fileInventory(Schemas.Nfp), s"$tag: patched " +
+        s"inventory diverged from the full rebuild (${warm.size} entries)")
+      assert(lake.dvMapOf(Schemas.Nfp) == cold.dvMapOf(Schemas.Nfp),
+        s"$tag: warm dv map diverged from the cold fold")
     }
     lake.append(rows(0 until 20), Schemas.Nfp); check("append-1")
     lake.append(rows(100 until 110, chain = "base"), Schemas.Nfp)
     check("append-2")
+    lake.append(rows(40 until 60), Schemas.Nfp); check("append-3")
+    // no check between these two: the patch spans the upsert's
+    // removals and the append's additions
     lake.upsert(rows(0 until 5, amt = i => s"u$i"), Schemas.Nfp,
-      Seq("chain_name", "transaction_hash")); check("upsert")
-    lake.append(rows(20 until 25), Schemas.Nfp); check("append-3")
+      Seq("chain_name", "transaction_hash"))
+    lake.append(rows(20 until 30).coalesce(1), Schemas.Nfp)
+    check("upsert+append")
+    lake.deleteWhere(Schemas.Nfp, col("block_number") === 1021L)
+    assert(lake.dvMapOf(Schemas.Nfp).nonEmpty, "the delete took no vector")
+    check("dv-delete")
     lake.dropChain(Schemas.Nfp, "base"); check("dropChain")
     lake.append(rows(200 until 205, chain = "base"), Schemas.Nfp)
     check("append-4")
-    assert(lake.read(Schemas.Nfp).count() == 30L)
+    // checked every SECOND commit: the patch then spans two deltas
+    (0 until 18).foreach { i =>
+      lake.append(rows(300 + i * 2 until 302 + i * 2).coalesce(1),
+        Schemas.Nfp)
+      if (i % 2 == 1) check(s"append-${5 + i}")
+    }
+    assert(lake.commitHistory(Schemas.Nfp).count(!_._4) >= 2,
+      "the run never crossed a checkpoint")
+    assert(lake.read(Schemas.Nfp).count() == 90L)
+  }
+
+  test("a fold opens each manifest file at most once; a writer's read-back opens none") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.countopen.impl", classOf[OpenCountingTestFs].getName)
+    conf.setBoolean("fs.countopen.impl.disable.cache", true)
+    val root =
+      s"countopen:${Files.createTempDirectory("lake-opens").toString}"
+    val writer = new Lake(spark, root)
+    def entry(i: Int) = (s"chain_name=c${i % 3}/part-$i.parquet", 100L + i)
+    writer.publishSynthetic(Schemas.Nfp, (0 until 50).map(entry))
+    // 20 deltas: crosses the every-16th checkpoint
+    (1 to 20).foreach { d =>
+      writer.publishSynthetic(Schemas.Nfp, Seq.empty,
+        delta = Some((Seq(entry(100 + d)), Set(entry(d)._1))))
+      OpenCountingTestFs.opens.clear()
+      val inv = writer.fileInventory(Schemas.Nfp)
+      assert(inv.size == 50, s"writer fold diverged at delta $d")
+      assert(OpenCountingTestFs.manifestOpens.isEmpty,
+        s"read-back of v${d + 1} opened ${OpenCountingTestFs.manifestOpens}")
+    }
+    OpenCountingTestFs.opens.clear()
+    val cold = new Lake(spark, root)
+    assert(cold.fileInventory(Schemas.Nfp) ==
+      writer.fileInventory(Schemas.Nfp))
+    val opened = OpenCountingTestFs.manifestOpens
+    assert(opened.nonEmpty && opened.values.forall(_ == 1),
+      s"a cold fold opened manifest files more than once: $opened")
   }
 
   test("a Lake-managed table's whole lifecycle performs ZERO listings") {
@@ -727,5 +774,40 @@ class LakeManifestSpec extends SparkSpec {
     // delta bodies and pre-gate manifests (no header) still pass
     Lake.requireReadable("t", "v000000002.d.txt", "#ts=1\n+abc\t1")
     Lake.requireReadable("t", "v000000001.txt", "abc\t1")
+  }
+}
+
+/** A local store that counts `open` calls per file name — what the
+  * fold's read-once contract is measured with. Registered under the
+  * `countopen:` scheme via `fs.countopen.impl`. */
+class OpenCountingTestFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "countopen"
+  override def getUri: java.net.URI = java.net.URI.create("countopen:///")
+  // eager statuses: RawLocalFileSystem's lazy ones reject any scheme
+  // but file: (same as NonAtomicTestFs)
+  private def plain(st: org.apache.hadoop.fs.FileStatus) =
+    new org.apache.hadoop.fs.FileStatus(st.getLen, st.isDirectory,
+      st.getReplication, st.getBlockSize, st.getModificationTime,
+      st.getPath)
+  override def getFileStatus(p: org.apache.hadoop.fs.Path) =
+    plain(super.getFileStatus(p))
+  override def listStatus(p: org.apache.hadoop.fs.Path) =
+    super.listStatus(p).map(plain)
+  override def open(p: org.apache.hadoop.fs.Path, bufferSize: Int) = {
+    OpenCountingTestFs.opens.computeIfAbsent(p.getName,
+      _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
+    super.open(p, bufferSize)
+  }
+}
+
+object OpenCountingTestFs {
+  val opens = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.atomic.AtomicInteger]()
+  /** Opens of commit-log versions (`vNNN.txt` / `vNNN.d.txt`). */
+  def manifestOpens: Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    opens.asScala.collect {
+      case (n, c) if n.startsWith("v") && n.endsWith(".txt") => n -> c.get
+    }.toMap
   }
 }

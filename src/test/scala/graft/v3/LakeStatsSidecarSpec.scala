@@ -133,31 +133,44 @@ class LakeStatsSidecarSpec extends SparkSpec {
       .filter(col("block_number") === 1005L).count() == 1L)
   }
 
-  test("deltaBytesCache eviction is scoped to the inserting table") {
+  test("per-commit cache eviction is scoped to the inserting table") {
     // regression: eviction removed EVERY table's versions below
     // v - 1024, so one high-version table continually purged a
     // low-version table's still-hot entries (forcing that stream to
     // re-read its delta bodies on every latestOffset poll)
     val root = Files.createTempDirectory("lake-dbc").toString
     val lake = new Lake(spark, root)
+    val info = Lake.CommitInfo(Lake.Heads.none, Some(1L))
     (1L to 8L).foreach(v =>
-      lake.deltaBytesCache.put(("hot_low_version_table", "i1", v), 1L))
+      lake.commitInfos.put(("hot_low_version_table", "i1", v), info))
     (1L to 4200L).foreach(v =>
-      lake.deltaBytesCache.put(("busy_table", "i2", v), 1L))
+      lake.commitInfos.put(("busy_table", "i2", v), info))
     // plus a DEAD incarnation of the busy table (drop+recreate left
     // its high-version entries behind)
     (5000L to 5010L).foreach(v =>
-      lake.deltaBytesCache.put(("busy_table", "i_old", v), 1L))
-    lake.evictDeltaBytes("busy_table", "i2", 4200L)
-    assert((1L to 8L).forall(v => lake.deltaBytesCache
+      lake.commitInfos.put(("busy_table", "i_old", v), info))
+    lake.evictCommits("busy_table", "i2", 4200L)
+    assert((1L to 8L).forall(v => lake.commitInfos
         .containsKey(("hot_low_version_table", "i1", v))),
       "a foreign table's hot entries were evicted")
-    assert(!lake.deltaBytesCache.containsKey(("busy_table", "i2", 1L)),
+    assert(!lake.commitInfos.containsKey(("busy_table", "i2", 1L)),
       "the inserting table's stale entries survived")
-    assert(lake.deltaBytesCache.containsKey(("busy_table", "i2", 4200L)))
-    assert(!(5000L to 5010L).exists(v => lake.deltaBytesCache
+    assert(lake.commitInfos.containsKey(("busy_table", "i2", 4200L)))
+    assert(!(5000L to 5010L).exists(v => lake.commitInfos
         .containsKey(("busy_table", "i_old", v))),
       "a dead incarnation's entries survived the table-scoped eviction")
+
+    // dead incarnations go FIRST: when dropping them brings the cache
+    // back under its bound, the live incarnation keeps its old versions
+    lake.commitInfos.clear()
+    (1L to 4090L).foreach(v =>
+      lake.commitInfos.put(("busy_table", "i2", v), info))
+    (1L to 20L).foreach(v =>
+      lake.commitInfos.put(("busy_table", "i_old", v), info))
+    lake.evictCommits("busy_table", "i2", 4090L)
+    assert(lake.commitInfos.size == 4090,
+      s"expected only the dead incarnation shed, ${lake.commitInfos.size} left")
+    assert(lake.commitInfos.containsKey(("busy_table", "i2", 1L)))
   }
 
   test("deferStats suspends per-commit collection and backfills ONCE at scope exit") {
