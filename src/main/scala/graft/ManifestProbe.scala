@@ -19,12 +19,16 @@ import org.apache.spark.sql.functions._
   *    grouping) of a full-table scan over the manifest-served index
   *  - `manifest_plan_pruned` same with a one-chain partition filter
   *  - `manifest_heap_mb`     approximate driver heap held by the
-  *    folded entry list (the per-table steady-state cost)
+  *    folded entry list (the per-table steady-state cost): the median
+  *    of [[HeapReps]] held/dropped readings, each reading printed too
   *
   * Emits one JSON line per (probe, n). Usage:
   * runMain graft.ManifestProbe [n,n,…] (default 10000,100000,1000000)
   */
 object ManifestProbe {
+  /** Held/dropped heap readings per size; the median is reported. */
+  private val HeapReps = 5
+
   def main(args: Array[String]): Unit = {
     val ns = args.headOption
       .map(_.split(",").map(_.trim.toInt).toSeq)
@@ -302,18 +306,25 @@ object ManifestProbe {
       // 6. retained heap of the folded per-table state: measure used
       // memory with a fresh fold HELD, then again after dropping the
       // reference — the difference is what one warm table costs a
-      // long-lived driver
+      // long-lived driver. One System.gc difference swings several-fold
+      // run to run (collector timing, concurrent Spark threads), so the
+      // held/dropped pair repeats and the median is the figure
       val rt = Runtime.getRuntime
-      var heldLake = new graft.v3.Lake(spark, root)
-      var held = heldLake.fileInventory(table)
-      require(held.size == n + 15)
-      System.gc(); Thread.sleep(300L)
-      val withHeld = rt.totalMemory() - rt.freeMemory()
-      held = null; heldLake = null
-      System.gc(); Thread.sleep(300L)
-      val without = rt.totalMemory() - rt.freeMemory()
-      println(f"""{"probe":"manifest_heap_mb","n":$n,""" +
-        f""""mb":${math.max(0L, withHeld - without) / 1e6}%.1f}""")
+      def heldMb(): Double = {
+        var heldLake = new graft.v3.Lake(spark, root)
+        var held = heldLake.fileInventory(table)
+        require(held.size == n + 15)
+        System.gc(); Thread.sleep(300L)
+        val withHeld = rt.totalMemory() - rt.freeMemory()
+        held = null; heldLake = null
+        System.gc(); Thread.sleep(300L)
+        val without = rt.totalMemory() - rt.freeMemory()
+        math.max(0L, withHeld - without) / 1e6
+      }
+      val readings = Seq.fill(HeapReps)(heldMb())
+      val median = readings.sorted.apply(readings.length / 2)
+      println(f"""{"probe":"manifest_heap_mb","n":$n,"mb":$median%.1f,""" +
+        s""""readings":[${readings.map(r => f"$r%.1f").mkString(",")}]}""")
       }
       org.apache.commons.io.FileUtils
         .deleteDirectory(new java.io.File(root))

@@ -113,10 +113,13 @@ object Curation {
   }
 
   /** Exact-dedup keeper rule, shared for the same reason: keep the
-    * minimum id per cleaned-text digest. */
+    * minimum id per cleaned-text digest — one window over the digest
+    * partition, so `kept` is read once and shuffled once. */
   private[graft] def keepMinPerDigest(kept: DataFrame, id: String): DataFrame =
-    kept.join(kept.groupBy(col("clean_md5")).agg(min(col(id)).as(id)),
-      Seq(id, "clean_md5"), "left_semi")
+    kept.withColumn("__min", min(col(id)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("clean_md5"))))
+      .filter(col("clean_md5").isNotNull && col(id) === col("__min"))
+      .drop("__min")
 
   /** A near-dup candidate-pair generator for [[pipelineNearDup]]'s
     * fuzzy stage: (exact-surviving docs with cleaned `text`, text col,
@@ -174,21 +177,30 @@ object Curation {
     * Output: (id, clean_md5, order_key, shard, pos), one row per
     * surviving document.
     *
-    * Cost profile (sf0.1, local[32]): ≈ the exact [[pipeline]] (clean
-    * + gate + keeper, ~2 s) + the jaccard shingle pass (~2 s) + CC and
-    * assembly (~1 s) — the fuzzy stage roughly doubles curation cost,
-    * which is the published experience with fuzzy dedup, and the 20×
-    * probe (5.0 s) shows the composition staying sub-linear. */
+    * Cost profile: at the sizes tests and benches run, Spark jobs, not
+    * data, set the cost — each job is a scheduling and AQE stage-wait
+    * round trip — so every intermediate is computed once and no action
+    * runs only to measure a size. The exact survivors are checkpointed
+    * once and read by both the shingle pass and the final survivor
+    * join. Per collected run with a driver-sized pair set (CurationSpec
+    * corpus, default pair source): clean 2 jobs (1 when the input
+    * already has the session's width), gate + exact keeper 6, pairs 5
+    * (posting lists with their candidate bound, the list pull, the
+    * rerank), clusters 0 (the rerank's pairs arrive as a LocalRelation)
+    * and the caller's collect 3 — 16 in all (CurationSpec pins the
+    * budget). Above the driver-pairs bound the pair and cluster stages
+    * go fully distributed ([[Dedup.duplicateClusters]]). */
   def pipelineNearDup(df: DataFrame, text: String, id: String,
                       shards: Int = 8, k: Int = 5, maxDf: Int = 5,
                       minJaccard: Double = 0.5,
                       pairSource: PairSource = null): DataFrame = {
-    // phase labels (guide §1.5): the row runs ~40 jobs; labeling the
-    // EAGER stages is what lets BenchProfile attribute them
+    // phase labels (guide §1.5) are what lets BenchProfile attribute
+    // the EAGER stages; the caller's own description comes back after
     val sc = df.sparkSession.sparkContext
     def phase[T](p: String)(f: => T): T = {
+      val prev = sc.getLocalProperty("spark.job.description")
       sc.setJobDescription(s"neardup:$p")
-      try f finally sc.setJobDescription(null)
+      try f finally sc.setJobDescription(prev)
     }
     // clean-stage checkpoint kept: an r19 A/B with NoMaterialize
     // (recompute the fused clean in both consumers) measured SLOWER
@@ -202,13 +214,18 @@ object Curation {
     // materialization — same rule, no checkpoint
     val gate = TextAnalysis.qualityGate(cleaned, text, id)
       .select(col(id), col("keep"))
-    // keep the TEXT through the exact stage: the fuzzy stage shingles it
-    val keptTxt = phase("gate+kept-ckpt")(cleaned
+    // the exact survivors WITH their text, materialized once: the
+    // fuzzy stage shingles them and the final survivor join reads them.
+    // The keeper's shuffle takes an explicit partition count, which AQE
+    // leaves uncoalesced, so the checkpoint keeps the session's width
+    // and its narrow consumers need no repartition of their own
+    val exactSurv = phase("gate+kept-ckpt")(keepMinPerDigest(cleaned
       .join(gate.filter(col("keep")).select(col(id)), Seq(id))
       .select(col(id), col(text),
         md5(col(text).cast("binary")).as("clean_md5"))
-      .localCheckpoint()) // fans into the exact keeper and the shingle pass
-    val exactSurv = keepMinPerDigest(keptTxt, id)
+      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+        col("clean_md5")), id)
+      .localCheckpoint())
     val src = if (pairSource != null) pairSource
       else defaultPairSource(k, maxDf, minJaccard)
     val pairs = phase("pairs")(

@@ -435,48 +435,39 @@ object Dedup {
   }
 
   /** [[minhashLsh]] candidates + EXACT Jaccard rerank — the FLEET-SCALE
-    * near-dup pair source: the sketch join proposes, the exact measure
-    * disposes. Candidates come from one (band, sig) equi-join over the
-    * minhash signatures (one shuffle whose key cardinality is
-    * corpus-sized but whose matches are the near-dup set — never an
-    * all-pairs comparison and never posting lists over raw shingles, so
-    * unlike [[ngramJaccardPairs]] there is no maxDf recall cliff: a
-    * shingle shared by 10⁶ documents costs nothing because only its
-    * 8-hash sketch is ever joined); the rerank recomputes true Jaccard
-    * over the candidates' DISTINCT shingle sets, so every emitted pair
-    * carries its exact score and sketch false positives are filtered
-    * out. False negatives are the LSH recall curve (P[candidate] =
-    * 1-(1-j^rows)^bands) — the documented sketch trade every published
-    * fuzzy-dedup pipeline (C4, RefinedWeb, Gopher) makes.
+    * near-dup pair source: the sketch proposes, the exact measure
+    * disposes. Candidates are the documents sharing a (band, sig)
+    * bucket of the minhash signatures (one shuffle whose key
+    * cardinality is corpus-sized but whose buckets are the near-dup set
+    * — never an all-pairs comparison and never posting lists over raw
+    * shingles, so unlike [[ngramJaccardPairs]] there is no maxDf recall
+    * cliff: a shingle shared by 10⁶ documents costs nothing because
+    * only its 8-hash sketch is ever grouped); the rerank recomputes
+    * true Jaccard over the candidates' DISTINCT shingle sets, so every
+    * emitted pair carries its exact score and sketch false positives
+    * are filtered out. False negatives are the LSH recall curve
+    * (P[candidate] = 1-(1-j^rows)^bands) — the documented sketch trade
+    * every published fuzzy-dedup pipeline (C4, RefinedWeb, Gopher)
+    * makes.
     *
-    * 100 TB story: shingles shuffle once (partitioned by shingle, reused
-    * by the signature aggregate and the rerank's intersection counts);
-    * the band join shuffles sketch-width rows only; the rerank touches
-    * candidate documents only (broadcast semi on the tiny candDocs).
-    * Output: (a, b, jacc_bp), a < b, Jaccard ≥ `minJaccard`. */
+    * 100 TB story: the signature aggregate shuffles sketch-width rows
+    * per document, the bucket aggregate shuffles ids only, and the
+    * rerank re-shingles candidate documents only. Output: (a, b,
+    * jacc_bp), a < b, Jaccard ≥ `minJaccard`; `id` must be unique. */
   def minhashLshReranked(df: DataFrame, text: String, id: String,
                          shingleK: Int = 5, numPerms: Int = 8,
                          bands: Int = 4,
                          minJaccard: Double = 0.5): DataFrame = {
     require(numPerms % bands == 0, "bands must divide numPerms")
-    // ONE shuffle of the exploded shingles to per-document DISTINCT
-    // sets, checkpointed: min-wise hashing is duplicate-invariant, so
-    // the SAME distinct frame feeds the signature aggregate and the
-    // rerank's intersection counts (see ngramJaccardPairs for why the
-    // eager checkpoint, not cache)
-    val shD = shinglesFromToks(tokenize(df, text, id), id, shingleK,
-        dedup = false)
-      .repartition(col("shingle")).dropDuplicates("shingle", id)
-      .localCheckpoint()
-    val cand = lshCandidatePairs(minhashSignatures(shD, id, numPerms),
-      id, bands, numPerms / bands)
-    // jaccardRerank consumes `cand` exactly once (one bounded take) —
-    // no cache needed since r19; sizes are computed inside the rerank
-    // over candidate docs only
-    val out = jaccardRerank(shD, cand, id, minJaccard)
-    // materialize the (tiny) result eagerly (same rule as
-    // ngramJaccardPairs)
-    out.localCheckpoint()
+    // one posting list per band bucket: the lists of the band join, kept
+    // grouped so the candidate bound Σ C(n_b, 2) is read off them
+    val buckets = bandSignatures(minhashSignatures(
+        distinctShingles(df, text, id, shingleK), id, numPerms), id,
+        bands, numPerms / bands)
+      .groupBy(col("band"), col("sig"))
+      .agg(sort_array(collect_set(col(id))).as("ids"))
+      .filter(size(col("ids")) >= 2)
+    rerankPostings(df, text, id, shingleK, buckets, minJaccard)
   }
 
   /** [[minhashLshReranked]] with (bands, rowsPerBand) chosen by the
@@ -500,12 +491,6 @@ object Dedup {
       minJaccard = minJaccard)
   }
 
-  /** Exact Jaccard near-dup pairs with a rare-shingle candidate filter:
-    * only document pairs sharing a shingle whose document frequency is
-    * ≤ `maxDf` are compared (common shingles would otherwise explode
-    * the self-join quadratically — this cap is the scale lever).
-    * Output: (a, b, jacc_bp) with Jaccard ≥ `minJaccard`, as exact
-    * basis points. */
   /** Session-scoped memo of materialized pair sets: within one session,
     * a semantically-equal input plan with identical parameters returns
     * the already-checkpointed result. Duplicate-cluster queries
@@ -523,9 +508,9 @@ object Dedup {
     new graft.ops.PlanMemo[(Int, String, String, Int, Int, Long), DataFrame]()
 
   /** Unordered (a, b) pairs generated row-locally from a sorted
-    * posting list (a < b because the list is sorted). The lambda is
-    * interpreted, but it only ever touches posting lists — never the
-    * corpus-sized frames. */
+    * posting list `ids` of two or more entries (a < b because the list
+    * is sorted). The lambda is interpreted, but it only ever touches
+    * posting lists — never the corpus-sized frames. */
   private def listPairs(postings: DataFrame): DataFrame = {
     val pairIdx = flatten(transform(
       sequence(lit(0), size(col("ids")) - 2),
@@ -536,30 +521,22 @@ object Dedup {
       .select(col("p.a").as("a"), col("p.b").as("b"))
   }
 
-  /** EXACT Jaccard over a candidate pair set — the shared rerank stage
-    * of [[ngramJaccardPairs]] (posting-list candidates) and
-    * [[minhashLshReranked]] (banded-LSH candidates). Intersection
-    * counts only touch candidate documents: restricting `shD` to
-    * candidate docs first keeps the pair expansion linear in the
-    * candidate set instead of the whole corpus. Every shared shingle
-    * of a candidate pair contributes one posting-list pair, so the
-    * per-pair count is exactly |S_a ∩ S_b|. `shD` must hold DISTINCT
-    * (id, shingle) rows. Output: (a, b, jacc_bp) with Jaccard ≥
-    * `minJaccard`, exact basis points.
-    *
-    * r19: the candidate set is pulled to the driver ONCE (bounded by
-    * [[MaxDriverPairs]], the same near-dup-sized bound
-    * [[duplicateClusters]] already relies on for its union-find — the
-    * pairs emitted here end up on the driver there anyway). What that
-    * buys at this job's scale is JOB COUNT, the measured bottleneck
-    * (BenchProfile: the pair stage ran ~20 sub-second jobs = ~70% of
-    * llm_curation_neardup's wall with a near-empty task load): the
-    * candidate-doc restriction becomes an InSet filter pushed into the
-    * checkpoint scan, the pair semi-join builds from a LocalRelation
-    * (no scan job, no AQE subquery round), and doc sizes are computed
-    * over candidate docs only (their only consumer) instead of a
-    * corpus-wide aggregate. Above the bound, the pre-r19 fully
-    * distributed shape runs unchanged — that is the 100 TB path. */
+  /** The DISTINCT word k-shingles of a token array, built row-locally.
+    * Rows with fewer than `k` tokens must be filtered out first. */
+  private def shingleSet(toks: Column, k: Int): Column =
+    array_distinct(transform(sequence(lit(1), size(toks) - (k - 1)),
+      i => concat_ws(" ", slice(toks, i, lit(k)))))
+
+  /** (id, shingle): one row per DISTINCT k-shingle of each document. */
+  private def distinctShingles(df: DataFrame, text: String, id: String,
+                               k: Int): DataFrame =
+    tokenize(df, text, id).filter(size(col("toks")) >= k)
+      .select(col(id), explode(shingleSet(col("toks"), k)).as("shingle"))
+
+  /** The driver-pairs bound of the near-dup stage: the candidate-pair
+    * estimate at or below which [[rerankPostings]] pulls its candidates
+    * to the driver, and the edge count at or below which
+    * [[duplicateClusters]] runs its union-find on the driver. */
   private[graft] val MaxDriverPairs = 1000000
 
   /** The driver-pairs bound, conf-overridable
@@ -570,96 +547,127 @@ object Dedup {
     spark.conf.getOption("spark.graft.rerank.driverPairs.max")
       .map(_.toInt).getOrElse(MaxDriverPairs)
 
-  private def jaccardRerank(shD: DataFrame, cand: DataFrame,
-                            id: String,
-                            minJaccard: Double): DataFrame = {
-    val spark = shD.sparkSession
-    val bound = math.max(maxDriverPairs(spark), 0)
-    val candRows = cand.select(col("a"), col("b")).take(bound + 1)
-    val abSchema = org.apache.spark.sql.types.StructType(
-      cand.select(col("a"), col("b")).schema.fields)
-    if (candRows.isEmpty)
-      return spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-        abSchema.add("jacc_bp", org.apache.spark.sql.types.LongType))
-    val small = candRows.nonEmpty && candRows.length <= bound
-    // the pair set every consumer below joins against: a LocalRelation
-    // when driver-sized, the distributed frame above the bound
-    val candL =
-      if (small) spark.createDataFrame(
-        java.util.Arrays.asList(candRows: _*), abSchema)
-      else cand.select(col("a"), col("b"))
-    val shC =
+  /** EXACT Jaccard over the candidate pairs of `postings` (one sorted
+    * `ids` list per shingle or band bucket, two or more ids each) — the
+    * shared rerank stage of [[ngramJaccardPairs]] and
+    * [[minhashLshReranked]]; `df` is their input corpus.
+    *
+    * The path is chosen from the candidate bound Σ C(n, 2) over the
+    * lists, observed in the same pass that materializes them — before
+    * any candidate is pulled, and with no size probe:
+    *
+    *  - at or below [[maxDriverPairs]], the lists are collected, the
+    *    distinct pairs are generated on the driver, and each candidate
+    *    document looks its pairs up in a broadcast map. The scored pairs
+    *    come back as a LocalRelation, which [[duplicateClusters]] reads
+    *    without a job.
+    *  - above it, nothing is pulled: the candidate pairs are generated
+    *    from the lists on the executors and materialized once (each
+    *    pair tags both of its documents), and the scored pairs are
+    *    checkpointed.
+    *
+    * Each candidate document's shingle set is built once, row-locally
+    * from its text, and travels to its pairs; a pair's two sets meet in
+    * one group, where |S_a ∩ S_b|, |S_a| and |S_b| are exact set sizes.
+    * Output: (a, b, jacc_bp) with Jaccard ≥ `minJaccard`, exact basis
+    * points. */
+  private def rerankPostings(df: DataFrame, text: String, id: String,
+                             k: Int, postings: DataFrame,
+                             minJaccard: Double): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{ArrayType, LongType, StructType}
+    val spark = df.sparkSession
+    val idField = df.schema(id)
+    val pairType = StructType(Seq(idField.copy(name = "a"), idField.copy(name = "b")))
+    val outSchema = pairType.add("jacc_bp", LongType)
+    val sizes = new org.apache.spark.sql.Observation()
+    val lists = postings.select(col("ids"))
+      .observe(sizes, sum(size(col("ids")).cast("long") *
+        (size(col("ids")) - 1)).as("twice_pairs"))
+      .localCheckpoint()
+    val estimate = Option(sizes.get("twice_pairs"))
+      .fold(0L)(_.asInstanceOf[Long] / 2)
+    if (estimate == 0L)
+      return spark.createDataFrame(java.util.Collections.emptyList[Row](),
+        outSchema)
+    val small = estimate <= math.max(maxDriverPairs(spark), 0)
+    // (id, text, ps): every candidate document with the pairs it is in
+    val tagged =
       if (small) {
-        val docs: Seq[Any] =
-          candRows.flatMap(r => Seq(r.get(0), r.get(1))).distinct.toSeq
-        shD.filter(col(id).isInCollection(docs))
+        val pairs = lists.collect().iterator.flatMap { r =>
+          val ids = r.getSeq[Any](0)
+          for (i <- ids.indices.iterator; j <- (i + 1 until ids.length).iterator)
+            yield Row(ids(i), ids(j))
+        }.toSet
+        // a broadcast variable, not a broadcast join: shipping it starts
+        // no Spark job
+        val byDoc = spark.sparkContext.broadcast(pairs.toSeq
+          .flatMap(p => Seq(p.get(0) -> p, p.get(1) -> p))
+          .groupMap(_._1)(_._2))
+        val pairsOf = udf(new org.apache.spark.sql.api.java.UDF1[Any, Seq[Row]] {
+          def call(d: Any): Seq[Row] = byDoc.value.getOrElse(d, null)
+        }, ArrayType(pairType, containsNull = false))
+        df.select(col(id), col(text), pairsOf(col(id)).as("ps"))
+          .filter(col("ps").isNotNull)
       } else {
-        val candDocs = candL.select(col("a").as(id))
-          .union(candL.select(col("b").as(id))).distinct()
-        shD.join(broadcast(candDocs), Seq(id), "left_semi")
+        val cand = listPairs(lists).distinct().localCheckpoint()
+        val p = struct(col("a"), col("b"))
+        df.join(cand.select(col("a").as(id), p.as("p"))
+          .union(cand.select(col("b").as(id), p.as("p")))
+          .groupBy(col(id)).agg(collect_list(col("p")).as("ps")), Seq(id))
       }
-    // per-candidate-doc distinct-shingle counts — the only sizes the
-    // jaccard denominator ever reads (inter's a/b ⊆ candidate docs)
-    val sizes = shC.groupBy(col(id)).agg(count(lit(1)).as("n"))
-    // broadcast hints only on the driver-sized path; the fallback keeps
-    // the planner's choice (a >1M-pair relation must not be forced)
-    def maybeB(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val interPost = shC.groupBy(col("shingle"))
-      .agg(sort_array(collect_set(col(id))).as("ids"))
-      .filter(size(col("ids")) >= 2)
-    val inter = listPairs(interPost)
-      .join(maybeB(candL), Seq("a", "b"), "left_semi")
-      .groupBy(col("a"), col("b")).agg(count(lit(1)).as("c"))
-    inter
-      .join(maybeB(sizes.select(col(id).as("a"), col("n").as("na"))), Seq("a"))
-      .join(maybeB(sizes.select(col(id).as("b"), col("n").as("nb"))), Seq("b"))
-      .withColumn("jacc", lit(1.0) * col("c") / (col("na") + col("nb") - col("c")))
+    val out = tagged
+      .select(col(id), col("ps"),
+        shingleSet(split(col(text), " "), k).as("sh"))
+      .select(col(id), explode(col("ps")).as("p"), col("sh"))
+      .groupBy(col("p"))
+      .agg(sort_array(collect_list(struct(col(id), col("sh")))).as("d"))
+      .select(col("p.a").as("a"), col("p.b").as("b"),
+        col("d").getItem(0).getField("sh").as("sa"),
+        col("d").getItem(1).getField("sh").as("sb"))
+      .withColumn("c", size(array_intersect(col("sa"), col("sb"))))
+      .withColumn("jacc", lit(1.0) * col("c") /
+        (size(col("sa")) + size(col("sb")) - col("c")))
       .filter(col("jacc") >= minJaccard)
       .select(col("a"), col("b"),
         floor(col("jacc") * 10000 + 0.5).cast("long").as("jacc_bp"))
+    // materialize the (tiny) pair set eagerly — callers
+    // (duplicateClusters chief among them) otherwise re-run the pair
+    // stage per action
+    if (small) spark.createDataFrame(out.collect().toSeq.asJava, outSchema)
+    else out.localCheckpoint()
   }
 
+  /** Exact Jaccard near-dup pairs with a rare-shingle candidate filter:
+    * only document pairs sharing a shingle whose document frequency is
+    * ≤ `maxDf` are compared (common shingles would otherwise explode
+    * the candidate set quadratically — this cap is the scale lever).
+    * Output: (a, b, jacc_bp) with Jaccard ≥ `minJaccard`, as exact
+    * basis points; `id` must be unique. */
   def ngramJaccardPairs(df: DataFrame, text: String, id: String,
                         k: Int = 5, maxDf: Int = 5,
                         minJaccard: Double = 0.5): DataFrame = {
     val memoKey = (System.identityHashCode(df.sparkSession), text, id, k, maxDf,
       java.lang.Double.doubleToLongBits(minJaccard))
     pairsMemo.getOrCompute(memoKey, df) {
-    // ONE shuffle of the raw exploded shingles, dedup to per-document
-    // DISTINCT shingles (set semantics — an exchange-free hash
-    // aggregate once partitioned on shingle, so it runs in the same
-    // job), then an EAGER localCheckpoint. The checkpoint does two
-    // load-bearing things: (a) every consumer below — including the
-    // concurrently-submitted AQE broadcast subqueries, which race past
-    // a lazily-populated .cache() and each recompute the lineage —
-    // reads materialized blocks instead of re-running the scan+shingle
-    // pipeline (measured 6× recompute without it); (b) the shingle
-    // partitioning survives, so the frequency/posting aggregates and
-    // the intersection join below are exchange-free.
-    val shD = shinglesFromToks(tokenize(df, text, id), id, k, dedup = false)
-      .repartition(col("shingle")).dropDuplicates("shingle", id)
-      .localCheckpoint()
-    // candidate pairs via per-shingle posting lists: only shingles
-    // shared by 2..maxDf distinct documents contribute, so list state
-    // is bounded by maxDf and pairs are generated ROW-LOCALLY from
-    // each sorted list — no self-join, no unbounded aggregation state
-    // (frequent shingles are dropped by the df filter BEFORE any
-    // posting list is built)
-    val dfreq = shD.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val rare = dfreq.filter(col("df").between(2, maxDf)).select("shingle")
-    val postings = shD.join(rare.hint("shuffle_hash"), Seq("shingle"))
-      .groupBy(col("shingle")).agg(sort_array(collect_set(col(id))).as("ids"))
-    // jaccardRerank consumes `cand` exactly once (one bounded take) —
-    // no cache needed since r19; sizes are computed inside the rerank
-    // over candidate docs only
-    val cand = listPairs(postings).distinct()
-    val out = jaccardRerank(shD, cand, id, minJaccard)
-    // materialize the (tiny) pair set eagerly — callers
-    // (duplicateClusters chief among them) otherwise re-trigger the
-    // shingle pipeline per action. sh's checkpoint blocks are released
-    // by the ContextCleaner once the frame goes out of scope.
-    out.localCheckpoint()
+    // candidate pairs via per-shingle posting lists, built in one
+    // grouping pass: the row_number cap (planned as a window group
+    // limit) keeps at most maxDf + 1 ids per shingle, so list state is
+    // bounded by maxDf however common a shingle is, and lists longer
+    // than maxDf drop. The shuffle takes an explicit partition count,
+    // which AQE leaves uncoalesced: the sort and the grouping after it
+    // run at the session's width, not in one task
+    val postings = distinctShingles(df, text, id, k)
+      .repartition(df.sparkSession.sessionState.conf.numShufflePartitions,
+        col("shingle"))
+      .withColumn("__r", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy(col("shingle"))
+          .orderBy(col(id))))
+      .filter(col("__r") <= maxDf + 1)
+      .groupBy(col("shingle")).agg(sort_array(collect_list(col(id))).as("ids"))
+      .filter(size(col("ids")).between(2, maxDf))
+    rerankPostings(df, text, id, k, postings, minJaccard)
     }
   }
 
@@ -1111,28 +1119,35 @@ object Dedup {
 
   /** Connected components over near-dup pairs → duplicate clusters:
     * every document labeled with the minimum id in its component, so
-    * "keep one per cluster" = keep rows where id == cluster. Iterative
-    * min-label propagation on DataFrames (converges in O(component
-    * diameter) rounds — near-dup clusters are shallow); lineage cut per
-    * round with localCheckpoint so plans stay bounded. Output:
-    * (id, cluster) for every id appearing in `pairs`. */
+    * "keep one per cluster" = keep rows where id == cluster. Output:
+    * (id, cluster) for every id appearing in `pairs`.
+    *
+    * The path follows the pair frame's plan statistics — no size probe.
+    * Pairs the statistics put at or below `driverThreshold` (negative:
+    * the session's `spark.graft.rerank.driverPairs.max`, the rerank's
+    * bound) are collected and merged by a driver-side union-find; a
+    * LocalRelation — what the pair sources' driver path returns — is
+    * counted exactly and collected without a job. Anything else runs
+    * iterative min-label propagation on DataFrames (converges in
+    * O(component diameter) rounds — near-dup clusters are shallow),
+    * lineage cut per round with localCheckpoint so plans stay bounded.
+    * Both give the same min-id labels. */
   def duplicateClusters(pairs: DataFrame, maxIter: Int = 20,
-                        driverThreshold: Long = 1000000L): DataFrame = {
-    val edges = pairs.select(col("a").as("src"), col("b").as("dst"))
-      .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
-      .distinct()
-    // near-dup graphs are tiny relative to their corpus; below the
-    // threshold a driver-side union-find beats O(diameter) Spark rounds
-    // (same min-id labels either way — the distributed path is the
-    // fleet-scale fallback, exercised in LlmSpec with threshold 0).
-    // ONE bounded take probes the size AND fetches the edges (r19: the
-    // old count-then-collect pair ran two jobs over the same frame)
+                        driverThreshold: Long = -1L): DataFrame = {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val probe = edges.as[(Long, Long)]
-      .take(math.min(driverThreshold, Int.MaxValue - 1L).toInt + 1)
-    if (probe.length <= driverThreshold) {
-      val es = probe
+    val ab = pairs.select(col("a"), col("b"))
+    val bound =
+      if (driverThreshold >= 0) driverThreshold
+      else math.max(maxDriverPairs(spark), 0).toLong
+    // row estimate: the row count when known (local relations report
+    // theirs through sizeInBytes, caches once built), else bytes over
+    // the row width — without CBO Spark's size estimates only overshoot
+    val plan = ab.queryExecution.optimizedPlan
+    val rows = plan.stats.rowCount.getOrElse(plan.stats.sizeInBytes /
+      org.apache.spark.sql.catalyst.plans.logical.statsEstimation
+        .EstimationUtils.getSizePerRow(plan.output))
+    if (rows <= bound) {
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -1141,7 +1156,7 @@ object Dedup {
         while (parent.getOrElse(c, c) != c) { val n = parent(c); parent(c) = r; c = n }
         r
       }
-      es.foreach { case (a, b) =>
+      ab.as[(Long, Long)].collect().foreach { case (a, b) =>
         parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
@@ -1149,6 +1164,9 @@ object Dedup {
       val out = parent.keys.toSeq.sorted.map(n => (n, find(n)))
       return out.toDF("id", "cluster")
     }
+    val edges = ab.select(col("a").as("src"), col("b").as("dst"))
+      .unionByName(ab.select(col("b").as("src"), col("a").as("dst")))
+      .distinct()
     // fleet-scale distributed path: cache edges — every propagation
     // round below re-reads them
     edges.cache()

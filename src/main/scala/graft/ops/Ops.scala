@@ -31,9 +31,28 @@ object Ops {
     * round-robin. */
   def parallelizeInput(df: DataFrame, keys: Column*): DataFrame = {
     val target = df.sparkSession.sessionState.conf.numShufflePartitions
-    if (df.rdd.getNumPartitions >= target) df
+    if (outputPartitions(df) >= target) df
     else if (keys.nonEmpty) df.repartition(target, keys: _*)
     else df.repartition(target)
+  }
+
+  /** `df`'s partition count, read without running it. `df.rdd` on an
+    * adaptive plan executes every shuffle stage just to count (2 jobs
+    * on an aggregate plus semi-join), so a plan with an exchange or a
+    * subquery answers from its physical partitioning instead: a plan
+    * that ends in a shuffle has the exchange's count, and an unknown
+    * partitioning (0) counts as too narrow. Only a plan with neither —
+    * a scan, a cached frame, a checkpoint, a local relation — builds
+    * its RDD, which starts no job. */
+  private def outputPartitions(df: DataFrame): Int = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    df.queryExecution.executedPlan match {
+      case aqe: AdaptiveSparkPlanExec => aqe.executedPlan.outputPartitioning.numPartitions
+      case p if p.exists(_.isInstanceOf[Exchange]) || p.subqueriesAll.nonEmpty =>
+        p.outputPartitioning.numPartitions
+      case _ => df.rdd.getNumPartitions
+    }
   }
 
   /** Running sum over `order` within `partition` — the reference's

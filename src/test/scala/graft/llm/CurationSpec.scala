@@ -427,6 +427,27 @@ class CurationSpec extends SparkSpec {
     assert(badShards == 0L)
   }
 
+  test("pipelineNearDup: the caller's job description survives the call") {
+    val sc = spark.sparkContext
+    sc.setJobDescription("caller")
+    try {
+      Curation.pipelineNearDup(
+        Curation.withPlantedEverything(docs, "text", "doc_id"), "text", "doc_id")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+    } finally sc.setJobDescription(null)
+  }
+
+  test("pipelineNearDup: one collected run stays within its Spark job budget") {
+    // the count with the exact keeper materialized once and no size
+    // probe in the pair or cluster stage: a reintroduced probe or
+    // recomputation shows up here
+    val planted = Curation.withPlantedEverything(docs, "text", "doc_id")
+    planted.count()
+    val jobs = jobsStarted(
+      Curation.pipelineNearDup(planted, "text", "doc_id").collect())
+    assert(jobs <= 16, s"pipelineNearDup ran $jobs Spark jobs")
+  }
+
   test("pipelineClassified: accept-all model ≡ pipeline, reject-all drops everything") {
     val planted = Curation.withPlantedEverything(docs, "text", "doc_id")
     // uniform positive weights keep every doc (logit = n_feats > 0):

@@ -394,6 +394,46 @@ class LlmSpec extends SparkSpec {
     assert(fast == distributed && fast.nonEmpty)
   }
 
+  test("driver-pairs bound: the over-bound rerank and cluster paths equal the driver paths") {
+    val key = "spark.graft.rerank.driverPairs.max"
+    // the pairs memo keys on the input plan, not on the bound, so each
+    // run reads its own freshly built frame — a shared one would serve
+    // the first side's memoized pairs to the second
+    var salt = 0L
+    def corpus() = { salt += 1; docs.filter(col("doc_id") =!= -salt) }
+    def planted() = Curation.withPlantedEverything(corpus(), "text", "doc_id")
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    def runAll() = {
+      val jacc = Dedup.ngramJaccardPairs(corpus(), "text", "doc_id")
+      val lsh = Dedup.minhashLshReranked(corpus(), "text", "doc_id")
+      val local = jacc.queryExecution.optimizedPlan
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+      (local, Seq(sorted(jacc), sorted(lsh),
+        sorted(Curation.pipelineNearDup(planted(), "text", "doc_id")),
+        sorted(Curation.pipelineNearDup(planted(), "text", "doc_id",
+          pairSource = Curation.lshPairSource()))))
+    }
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.unset(key)
+      val (fastLocal, fast) = runAll()
+      spark.conf.set(key, "1")
+      val (slowLocal, slow) = runAll()
+      // the two sides really took different paths
+      assert(fastLocal && !slowLocal)
+      Seq("ngramJaccardPairs", "minhashLshReranked", "pipelineNearDup",
+          "pipelineNearDup/lsh").zip(fast.zip(slow)).foreach { case (what, (f, s)) =>
+        assert(f.nonEmpty, s"$what: empty at the default bound")
+        assert(f == s, s"$what: over-bound rows differ from the driver path")
+      }
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val pairs = Dedup.ngramJaccardPairs(corpus(), "text", "doc_id")
+    val clusters = sorted(Dedup.duplicateClusters(pairs))
+    assert(clusters.nonEmpty &&
+      clusters == sorted(Dedup.duplicateClusters(pairs, driverThreshold = 1L)))
+  }
+
   test("ann lsh results are bucket-consistent, correctly scored, deterministic") {
     val queries = emb.filter(col("vec_id") < 10)
     def run() = Similarity.annTopK(emb, queries, "vec_id", "embedding",
