@@ -136,6 +136,22 @@ object Lake {
       bytes: Long, exclude: Option[Dv.Ref] = None,
       include: Option[Array[Long]] = None)
 
+  /** What a [[Lake.txn]] body commits: the files it landed (rel → bytes),
+    * the rels it removes, its new or replaced deletion vectors and
+    * explicit vector drops (restore), extra commit heads (`#txn=`),
+    * the step that runs under the lock after the publish (retire or
+    * delete replaced files, drop emptied chain dirs), and the step
+    * that rolls back the body's side effects when the fence or the
+    * publish fails (only schema creation has any; landed data files
+    * stay invisible orphans for [[Lake.vacuum]]'s sweep). */
+  private case class Commit(added: Seq[(String, Long)] = Seq.empty,
+                            removed: Set[String] = Set.empty,
+                            dvChanges: Map[String, Dv.Ref] = Map.empty,
+                            dvDrops: Set[String] = Set.empty,
+                            heads: Seq[String] = Seq.empty,
+                            after: () => Unit = () => (),
+                            undo: () => Unit = () => ())
+
   /** A write lost the optimistic-concurrency race: another writer's
     * commit retired files this write had planned against. The write
     * changed NOTHING (staged output discarded, no manifest published);
@@ -203,8 +219,8 @@ object Lake {
 }
 
 class Lake(spark: SparkSession, val root: String) {
-  import Lake.{ChangeFile, CommitInfo, Heads, ScanStats, UpsertStats,
-    VacuumStats}
+  import Lake.{ChangeFile, Commit, CommitInfo, Heads, ScanStats,
+    UpsertStats, VacuumStats}
 
   private def dir(table: String) = s"$root/$table"
 
@@ -403,60 +419,10 @@ class Lake(spark: SparkSession, val root: String) {
     * ([[graft.streaming.LakeSink]]; the Delta-style txn action). */
   private[graft] def append(df: DataFrame, table: String,
                             txn: Option[(String, Long)]): Unit = {
-    val tmp = stagingDir(s"append-$table")
-    applyWritePolicies(df, table).write.mode("overwrite")
-      .options(writeOptions(table))
-      .partitionBy("chain_name")
-      .parquet(tmp.toString)
-    try landPartitioned(tmp, table, "part", "append", removedAbs = Seq.empty,
-      extraHeads = txn.toSeq.map { case (a, b) => s"#txn=$a:$b" })
-    finally trashOne(tmp)
+    val tmp = stage(table, "append", applyWritePolicies(df, table))
+    landCommit(table, "append", "part", tmp, Seq.empty, retain = false,
+      Map.empty, heads = txn.toSeq.map { case (a, b) => s"#txn=$a:$b" })
     ()
-  }
-
-  /** Land a `partitionBy("chain_name")`-staged directory into the
-    * table inside one manifest transaction: each staged chain dir
-    * renames in via [[landStaged]]; any failure rolls back every chain
-    * landed so far and aborts with nothing published. Shared by
-    * [[append]] and [[upsert]]. */
-  private def landPartitioned(tmp: Path, table: String, prefix: String,
-                              what: String, removedAbs: Seq[String],
-                              plannedChains: Set[String] = Set.empty,
-                              plannedRel: Set[String] = Set.empty,
-                              intruderGuard: Seq[(String, String, Long)] => Unit =
-                                _ => (),
-                              afterPublish: () => Unit = () => (),
-                              extraHeads: Seq[String] = Seq.empty,
-                              dvChanges: Map[String, Dv.Ref] = Map.empty,
-                              dvExpected: Map[String, Option[Dv.Ref]] =
-                                Map.empty)
-      : Seq[(String, Long)] = {
-    val stagedParts =
-      if (!fs.exists(tmp)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(tmp).filter(_.isDirectory)
-        .filter(_.getPath.getName.startsWith("chain_name="))
-    preCommitHook()
-    manifestTxn(table, what, removedAbs, plannedChains, plannedRel,
-        intruderGuard, afterPublish, extraHeads = extraHeads,
-        dvChanges = dvChanges, dvExpected = dvExpected) {
-      val landed = scala.collection.mutable.ArrayBuffer.empty[(Path, Long)]
-      val allLanded = stagedParts.forall { part =>
-        // the staged dir name is already Hive-escaped by Spark's write
-        // - reuse it verbatim as the target dir name
-        val chainDir = part.getPath.getName
-        landStaged(part.getPath,
-            new Path(s"${dir(table)}/$chainDir"), prefix) match {
-          case Some(ps) => landed ++= ps; true
-          case None => false
-        }
-      }
-      if (!allLanded) { // roll back, leave the table untouched
-        landed.foreach(p => fs.delete(p._1, false))
-        throw new java.io.IOException(
-          s"write to $table failed to land staged files - rolled back")
-      }
-      landed.toSeq.map { case (p, b) => (relOf(table, p.toString), b) }
-    }
   }
 
   // ── Schema evolution ───────────────────────────────────────────────
@@ -546,28 +512,23 @@ class Lake(spark: SparkSession, val root: String) {
   def createTable(table: String, next: StructType): Long = {
     validateEvolution(table, None, next)
     // the existence guards, the schema commit and the empty-manifest
-    // publish run as ONE unit under the table's commit lock: unlocked,
-    // two concurrent CREATEs of the same name could both pass the
-    // guards and commit schema v1 and v2 with different column sets
-    withCommitLock(table) { _ =>
+    // publish run as ONE transaction: unlocked, two concurrent CREATEs
+    // of the same name could both pass the guards and commit schema v1
+    // and v2 with different column sets
+    txn(table, "create") { base =>
       require(schemaVersions(table).isEmpty,
         s"table $table already has a committed schema - use evolveSchema")
       require(!exists(table),
         s"table $table already has data files - cannot re-create it")
-      require(!hasManifest(table),
+      require(base.state.isEmpty,
         s"table $table already has a committed manifest - cannot re-create it")
       val v = commitSchema(table, next)
-      try publishManifest(table, logListing(table), None, Map.empty,
-        what = "create")
-      catch { case e: Throwable =>
-        // all-or-nothing: a schema committed without its manifest would
-        // strand a table that can never be re-created (the guard above
-        // would refuse forever) — roll back exactly the version this
-        // create wrote
-        fs.delete(new Path(schemaDir(table), f"v$v%09d.json"), false)
-        throw e
-      }
-      v
+      // all-or-nothing: a schema committed without its manifest would
+      // strand a table that can never be re-created (the guard above
+      // would refuse forever) — roll back exactly the version this
+      // create wrote
+      (Commit(undo = () =>
+        fs.delete(new Path(schemaDir(table), f"v$v%09d.json"), false)), v)
     }
   }
 
@@ -1018,15 +979,15 @@ class Lake(spark: SparkSession, val root: String) {
     * fixing the reference's whole-file deletion that could take other
     * chains' rows with it (SURVEY.md §7.4 bug list).
     *
-    * CONCURRENCY: the removed set is computed INSIDE the manifest
-    * transaction from the fresh base manifest (`removedFromBase`),
-    * never from a pre-lock inventory read — an append to the same
-    * chain that commits between planning and the lock is therefore
-    * either fully dropped with the chain (it's in the fresh base) or
-    * serializes after the drop and re-creates the chain; a stale
-    * removed set would delete the racer's file from disk while its
-    * manifest entry survived the publish, breaking every read. */
-  /** `retain = true` (manifest-backed tables only) moves the chain's
+    * CONCURRENCY: the removed set is computed INSIDE the transaction
+    * from its base state, never from a pre-lock inventory read — an
+    * append to the same chain that commits between planning and the
+    * lock is therefore either fully dropped with the chain (it's in
+    * the base) or serializes after the drop and re-creates the chain;
+    * a stale removed set would delete the racer's file from disk while
+    * its manifest entry survived the publish, breaking every read.
+    *
+    * `retain = true` (manifest-backed tables only) moves the chain's
     * files into the retention area instead of deleting them — still
     * metadata-only (same-filesystem renames), and pinned snapshots /
     * `TIMESTAMP AS OF` reads taken before the drop stay readable
@@ -1044,8 +1005,8 @@ class Lake(spark: SparkSession, val root: String) {
     * statement half-applied.
     *
     * Physical removal (retire-or-delete plus the shell-dir cleanup)
-    * runs in `afterPublish`, AFTER the manifest commits — the
-    * [[removeReplaced]] ordering every other rewrite uses. Before the
+    * runs in the transaction's post-publish step — the
+    * [[retireReplaced]] ordering every other rewrite uses. Before the
     * publish nothing has moved, so an aborted transaction (lost
     * publish fence, racing commit) truly changes nothing; after it the
     * files are invisible to every manifest reader, so a partial
@@ -1061,34 +1022,26 @@ class Lake(spark: SparkSession, val root: String) {
     if (dirs.forall(p => !fs.exists(p))) return false
     if (hasManifest(table)) {
       val chainSet = wanted.toSet
-      var removedAbs: Seq[String] = Seq.empty
-      preCommitHook()
-      manifestTxn(table, "dropChain", Seq.empty,
-          removedFromBase = Some { base =>
-            val rels = base.keys.filter(r => chainSet(chainOfRel(r))).toSeq
-            removedAbs = rels.map(r => s"${dir(table)}/$r")
-            rels
-          },
-          afterPublish = () => {
-            if (retain) retire(table, removedAbs.filter(a =>
-              fs.exists(new Path(a))))
-            // the recursive delete clears what remains: the shell
-            // dirs, unmanifested stragglers, and (retain = false) the
-            // dropped data files themselves. Checked: a refused
-            // delete leaves orphans the manifest no longer names —
-            // invisible to readers, but they cost storage and would
-            // resurface via refreshManifest, so fail loudly
-            val leftover = dirs.filter { p =>
-              fs.delete(p, true); fs.exists(p)
-            }
-            if (leftover.nonEmpty) throw new java.io.IOException(
-              s"dropChain of $table committed but ${leftover.size} " +
-                s"chain dir(s) could not be fully removed - leftover " +
-                s"files are orphans: ${leftover.take(3).mkString(", ")}")
-          }) {
-        Seq.empty
+      txn(table, "dropChain") { base =>
+        val rels = base.entries.keySet.filter(r => chainSet(chainOfRel(r)))
+        (Commit(removed = rels, after = () => {
+          if (retain) retire(table, rels.toSeq.map(r => s"${dir(table)}/$r")
+            .filter(a => fs.exists(new Path(a))))
+          // the recursive delete clears what remains: the shell dirs,
+          // unmanifested stragglers, and (retain = false) the dropped
+          // data files themselves. Checked: a refused delete leaves
+          // orphans the manifest no longer names — invisible to
+          // readers, but they cost storage and would resurface via
+          // refreshManifest, so fail loudly
+          val leftover = dirs.filter { p =>
+            fs.delete(p, true); fs.exists(p)
+          }
+          if (leftover.nonEmpty) throw new java.io.IOException(
+            s"dropChain of $table committed but ${leftover.size} " +
+              s"chain dir(s) could not be fully removed - leftover " +
+              s"files are orphans: ${leftover.take(3).mkString(", ")}")
+        }), rels.nonEmpty)
       }
-      removedAbs.nonEmpty
     } else dirs.map(p => fs.delete(p, true)).exists(identity)
   }
 
@@ -1130,7 +1083,7 @@ class Lake(spark: SparkSession, val root: String) {
   }
 
   /** Dead-tree disposal for [[dropTable]] and every staging-tree
-    * cleanup ([[landStaged]], [[replaceStaged]], the write finallys —
+    * cleanup ([[landCommit]]'s finally, [[dropStaging]] —
     * after landing renames the parquet out, the staged dir still holds
     * `_SUCCESS`/`_temporary`/`.crc` trees whose recursive delete was a
     * measured ~140 ms stall inside the DSv2 commit): the caller's
@@ -1235,10 +1188,11 @@ class Lake(spark: SparkSession, val root: String) {
   // [[stateWindow]] versions per table) and [[commitInfos]] (per-commit
   // heads and added bytes, for history walks that never fold).
   //
-  // CONCURRENCY — optimistic multi-writer: the commit lock serializes
-  // the land+publish step only; planning and staging run unlocked. A
-  // rewrite declares the files it read (`removed`); under the lock it
-  // verifies every one is still in the CURRENT manifest and fails with
+  // CONCURRENCY — optimistic multi-writer: every commit is one [[txn]],
+  // and the commit lock serializes its land+publish step only; planning
+  // and staging run unlocked. A rewrite declares the files it read
+  // (`removed`); under the lock it verifies every one is still in the
+  // CURRENT manifest and fails with
   // [[Lake.ConcurrentWriteException]] if a concurrent commit retired
   // any (overlapping file sets = a real merge conflict; the loser
   // re-plans and retries). Disjoint writers commit in either order —
@@ -1265,7 +1219,7 @@ class Lake(spark: SparkSession, val root: String) {
   //      a breaker's rename can displace a FRESH claim instead of
   //      the crashed one. The protocol stays safe-but-louder: every
   //      commit re-reads the lock's owner token AFTER landing (the
-  //      publish fence in [[manifestTxn]]) and ABORTS if the claim
+  //      publish fence in [[txn]]) and ABORTS if the claim
   //      changed hands, so a displaced writer publishes nothing and
   //      surfaces [[Lake.ConcurrentWriteException]] — one winner,
   //      never a silent lost update (LakeStoreContractSpec proves
@@ -2017,20 +1971,6 @@ class Lake(spark: SparkSession, val root: String) {
       (st.getPath.toString, st.getLen)
     }
 
-  /** File-granularity CDC between two pinned snapshots — the
-    * `table_changes(from, to)` read: every row of a file the `to`
-    * snapshot dropped surfaces as `_change_type = 'delete'`, every
-    * row of a file it added as `'insert'` (an update is its
-    * delete+insert pair, exactly how the published formats
-    * reconstruct changes when no per-row change log was written).
-    * Both sides resolve live-or-retired, so a retain-mode
-    * upsert/compact keeps the delta replayable until [[vacuum]];
-    * missing files fail loudly ([[resolveLiveOrRetired]]). The diff
-    * itself is a manifest set-difference — zero listings, O(files)
-    * driver work only for the CHANGED files. Downstream incremental
-    * consumers join deletes against their state by key; pure-append
-    * history yields inserts only ([[readSince]] is the cheaper
-    * special case). */
   /** Whether a planned batch needs deletion-vector handling at all —
     * the streaming source's fast-path test (a DV-free range keeps the
     * zero-copy per-file partition plan). */
@@ -2071,6 +2011,20 @@ class Lake(spark: SparkSession, val root: String) {
     parts.result().reduce(_.unionByName(_))
   }
 
+  /** File-granularity CDC between two pinned snapshots — the
+    * `table_changes(from, to)` read: every row of a file the `to`
+    * snapshot dropped surfaces as `_change_type = 'delete'`, every
+    * row of a file it added as `'insert'` (an update is its
+    * delete+insert pair, exactly how the published formats
+    * reconstruct changes when no per-row change log was written).
+    * Both sides resolve live-or-retired, so a retain-mode
+    * upsert/compact keeps the delta replayable until [[vacuum]];
+    * missing files fail loudly ([[resolveLiveOrRetired]]). The diff
+    * itself is a manifest set-difference — zero listings, O(files)
+    * driver work only for the CHANGED files. Downstream incremental
+    * consumers join deletes against their state by key; pure-append
+    * history yields inserts only ([[readSince]] is the cheaper
+    * special case). */
   def tableChanges(table: String, fromVersion: Long,
                    toVersion: Long): DataFrame = {
     require(fromVersion <= toVersion,
@@ -2558,7 +2512,7 @@ class Lake(spark: SparkSession, val root: String) {
     * do) re-opens the two-writers hole the rename protocol closes. If
     * the restore itself loses a race (a third writer already
     * re-claimed), the displaced writer's publish fence in
-    * [[manifestTxn]] aborts its commit rather than racing the new
+    * [[txn]] aborts its commit rather than racing the new
     * claimant. Tombstones a crashed breaker leaves behind are swept
     * by [[vacuum]]'s manifest-dir pass. */
   private def breakStaleLock(d: Path, staleMs: Long): Unit = {
@@ -2782,30 +2736,30 @@ class Lake(spark: SparkSession, val root: String) {
     v
   }
 
-  /** Probe seam: publish a synthetic manifest version under the commit
-    * lock — the exact lock-held serialize+write every real commit pays
-    * — without materializing data files. [[publishManifest]] and
+  /** Probe seam: publish a synthetic manifest version through [[txn]]
+    * — the exact lock-held serialize+write every real commit pays —
+    * without materializing data files. [[publishManifest]] and
     * [[stateAt]] operate on entry maps, so the million-file probe
     * ([[graft.ManifestProbe]]) sizes the metadata layer without
-    * synthesizing a million parquet files. A `delta` applies to the
-    * latest state (`entries` then only matters for a checkpoint). */
+    * synthesizing a million parquet files; the named files do not
+    * exist, so no stats warm-up runs. A `delta` applies to the latest
+    * state; without one (or on an empty log) the version is a
+    * checkpoint of exactly `entries`. */
   private[graft] def publishSynthetic(table: String,
       entries: Seq[(String, Long)],
       delta: Option[(Seq[(String, Long)], Set[String])] = None,
-      what: String = "synthetic"): Long =
-    withCommitLock(table) { _ =>
-      val log = logListing(table)
-      val base = log.latest.map(stateAt(table, log, _))
-      val next = (base, delta) match {
-        case (Some(b), Some((added, removed))) => b.entries -- removed ++ added
-        case _ => entries.toMap
-      }
-      publishManifest(table, log, base, next, delta, what)
+      what: String = "synthetic"): Unit =
+    txn(table, what, warm = false) { base =>
+      (delta.filter(_ => base.state.isDefined) match {
+        case Some((added, removed)) => Commit(added, removed)
+        case None =>
+          Commit(entries, base.entries.keySet -- entries.map(_._1))
+      }, ())
     }
 
-  /** Test/probe seam: runs after a write has staged its output but
-    * before it takes the commit lock — the window a concurrent writer
-    * races in. */
+  /** Test/probe seam: runs after a write has planned (and staged its
+    * output, if any) but before its [[txn]] takes the commit lock —
+    * the window a concurrent writer races in. */
   private[graft] var preCommitHook: () => Unit = () => ()
 
   /** Test seam firing after an upsert PLANS (touched set fixed) but
@@ -2822,134 +2776,107 @@ class Lake(spark: SparkSession, val root: String) {
     * maintenance-skip spec arms to make the loss deterministic. */
   private[graft] var preRewriteHook: () => Unit = () => ()
 
-  /** Test seam firing INSIDE [[manifestTxn]], after `land` and before
-    * the publish fence — the window where a store whose rename is not
-    * atomic can let a rival displace this writer's commit claim. The
-    * store-contract spec arms it to prove the fence still yields one
-    * winner (the displaced writer aborts loudly, publishing nothing). */
+  /** Test seam firing INSIDE [[txn]], after the body has landed its
+    * files and before the publish fence — the window where a store
+    * whose rename is not atomic can let a rival displace this writer's
+    * commit claim. The store-contract spec arms it to prove the fence
+    * still yields one winner (the displaced writer aborts loudly,
+    * publishing nothing). */
   private[graft] var preFenceHook: () => Unit = () => ()
 
-  /** One serialized manifest transaction: under the table's commit
-    * lock, (1) re-read the CURRENT manifest (or adopt via one final
-    * listing for a manifest-less table), (2) verify every file this
-    * write read is still live — [[Lake.ConcurrentWriteException]]
-    * otherwise, before anything lands — and, for keyed writes, hand
-    * any file a concurrent commit ADDED to the write's chains since
-    * it planned (`plannedChains` minus `plannedRel`) to
-    * `intruderGuard`, which throws if the addition may hold keys this
-    * write also carries (two racing inserts of the same new key touch
-    * no common file, so the removed-files check alone would let both
-    * commit a duplicate), (3) run `land` (the renames into the
-    * table), (4) publish current − removed + added. Returns the added
-    * entries. `land` throwing aborts the transaction with nothing
-    * published. */
-  /** `afterPublish` runs UNDER the commit lock after the manifest is
-    * published — the slot for replaced-file retirement and directory
-    * cleanup, which must not race [[vacuum]]'s lock-held orphan sweep
-    * (replaced originals sit unmanifested with OLD mtimes between
-    * publish and retire; unlocked, a concurrent sweep would destroy
-    * snapshot-pinned history mid-handoff). */
-  private def manifestTxn(table: String, what: String,
-                          removedAbs: Seq[String],
-                          plannedChains: Set[String] = Set.empty,
-                          plannedRel: Set[String] = Set.empty,
-                          intruderGuard: Seq[(String, String, Long)] => Unit =
-                            _ => (),
-                          afterPublish: () => Unit = () => (),
-                          // removed set computed from the FRESH base
-                          // manifest under the lock (rel paths) — the
-                          // variant for writes whose removal target is
-                          // a predicate over current state (dropChain),
-                          // not a pre-planned file list; such writes
-                          // can never lose the optimistic race
-                          removedFromBase:
-                            Option[Map[String, Long] => Seq[String]] = None,
-                          extraHeads: Seq[String] = Seq.empty,
-                          // deletion-vector transaction state: new or
-                          // replaced vectors (rel → ref), explicit
-                          // drops (restore), and the OPTIMISTIC check —
-                          // the vector each touched file carried when
-                          // this write PLANNED (None = none). A rival
-                          // commit that changed any of them since makes
-                          // this write's scan stale (it read through
-                          // the old vector), so it aborts with nothing
-                          // landed, exactly like the removed-file check.
-                          dvChanges: Map[String, Dv.Ref] = Map.empty,
-                          dvDrops: Set[String] = Set.empty,
-                          dvExpected: Map[String, Option[Dv.Ref]] = Map.empty)
-                         (land: => Seq[(String, Long)])
-      : Seq[(String, Long)] = {
-    val added = withCommitLock(table) { stillOurs =>
-      // ONE metadata listing decides the gate, the base entries and
-      // the dv state this transaction validates against
+  /** The state a [[txn]] body plans its commit against, read under the
+    * lock before the body lands anything: the latest folded
+    * [[LogState]], or for a table no Lake write has touched yet an
+    * adoption listing. Its checks are the optimistic-concurrency test
+    * of the published formats (Delta Lake, VLDB 2020): each throws
+    * [[Lake.ConcurrentWriteException]] before anything lands. */
+  private final class TxnBase(table: String, what: String,
+                              val state: Option[LogState]) {
+    val entries: Map[String, Long] = state.map(_.entries).getOrElse {
+      val adopted = listInventory(table).map(f => (relOf(table, f._2), f._3))
+      requireLakeLayout(table, adopted)
+      adopted.toMap
+    }
+
+    val dv: Map[String, Dv.Ref] = state.map(_.dv).getOrElse(Map.empty)
+
+    def conflict(files: Iterable[String], why: String): Unit =
+      if (files.nonEmpty) throw new Lake.ConcurrentWriteException(
+        s"$what of $table conflicts with a concurrent commit - " +
+          s"${files.size} file(s) $why: " + files.take(3).mkString(", "))
+
+    /** A rewrite's plan still holds: every file it removes and every
+      * file it gives a vector is live, and each carries the vector the
+      * write planned with (`planDv`) — a vector a rival added or
+      * changed since makes the write's scan stale. */
+    def requirePlanned(removed: Iterable[String], planDv: Map[String, Dv.Ref],
+                       dvChanges: Map[String, Dv.Ref] = Map.empty): Unit = {
+      conflict(removed.filterNot(entries.contains), "this write planned " +
+        "against were already retired by another writer (re-plan and retry)")
+      conflict(dvChanges.keys.filterNot(entries.contains), "this write " +
+        "planned deletion vectors for were already rewritten (re-plan and " +
+        "retry)")
+      requireVectors(removed ++ dvChanges.keys, planDv)
+    }
+
+    /** Every file in `rels` still carries the vector it had at plan
+      * time (`planDv`; absent = none). */
+    def requireVectors(rels: Iterable[String],
+                       planDv: Map[String, Dv.Ref]): Unit =
+      conflict(rels.filter(r => dv.get(r) != planDv.get(r)), "this write " +
+        "read gained or changed a deletion vector since it planned (its " +
+        "scan is stale; re-plan and retry)")
+
+    /** Files in `chains` a concurrent commit added since the write
+      * planned over `planned`, as (chain, rel, bytes). */
+    def addedSince(chains: Set[String], planned: Set[String])
+        : Seq[(String, String, Long)] =
+      entries.toSeq.collect {
+        case (rel, b) if chains(chainOfRel(rel)) && !planned(rel) =>
+          (chainOfRel(rel), rel, b)
+      }
+  }
+
+  /** THE commit path: every write to a table's commit log is one
+    * transaction (Delta Lake's optimistic transaction, VLDB 2020).
+    * After [[preCommitHook]], under the table's commit lock: (1) ONE
+    * log listing gates the writer protocol and folds the base
+    * ([[TxnBase]]); (2) `body` runs its conflict checks on the base,
+    * lands its files and returns the [[Commit]] plus its own result —
+    * a body that throws aborts with nothing published; (3) the publish
+    * fence: if our claim was broken as stale mid-transaction, another
+    * writer may already be inside its own, so abort (landed files stay
+    * invisible orphans) and let the caller retry; (4) publish base −
+    * removed + added with the commit's heads and vectors; (5) the
+    * commit's post-publish step, still under the lock, so replaced
+    * originals (unmanifested, with OLD mtimes) cannot race [[vacuum]]'s
+    * lock-held orphan sweep. Then, outside the lock, the stats warm-up
+    * for the landed files (`warm`): footer reads of our own immutable
+    * files must not stretch the critical section. */
+  private def txn[A](table: String, what: String, warm: Boolean = true)
+                    (body: TxnBase => (Commit, A)): A = {
+    preCommitHook()
+    val (c, result) = withCommitLock(table) { stillOurs =>
       val log = logListing(table)
       requireWritable(table, log)
-      val baseState = log.latest.map(stateAt(table, log, _))
-      val base: Map[String, Long] = baseState.map(_.entries).getOrElse {
-          val adopted =
-            listInventory(table).map(f => (relOf(table, f._2), f._3))
-          requireLakeLayout(table, adopted)
-          adopted.toMap
-        }
-      val removedRel = removedFromBase match {
-        case Some(f) => f(base)
-        case None => removedAbs.map(relOf(table, _))
-      }
-      val gone = removedRel.filterNot(base.contains)
-      if (gone.nonEmpty) throw new Lake.ConcurrentWriteException(
-        s"$what of $table conflicts with a concurrent commit - " +
-          s"${gone.size} file(s) this write planned against were " +
-          s"already retired by another writer (re-plan and retry): " +
-          gone.take(3).mkString(", "))
-      if (dvChanges.nonEmpty || dvExpected.nonEmpty || dvDrops.nonEmpty) {
-        val curDv = baseState.map(_.dv).getOrElse(Map.empty)
-        val dvGone = dvChanges.keys.filterNot(base.contains)
-        if (dvGone.nonEmpty) throw new Lake.ConcurrentWriteException(
-          s"$what of $table conflicts with a concurrent commit - " +
-            s"${dvGone.size} file(s) this write planned deletion " +
-            "vectors for were already rewritten (re-plan and retry): " +
-            dvGone.take(3).mkString(", "))
-        val dvStale = dvExpected.collect {
-          case (rel, exp) if curDv.get(rel) != exp => rel
-        }
-        if (dvStale.nonEmpty) throw new Lake.ConcurrentWriteException(
-          s"$what of $table conflicts with a concurrent commit - " +
-            s"${dvStale.size} file(s) this write read gained or " +
-            "changed a deletion vector since it planned (its scan is " +
-            "stale; re-plan and retry): " + dvStale.take(3).mkString(", "))
-      }
-      if (plannedChains.nonEmpty) {
-        val intruders = base.toSeq.collect {
-          case (rel, b) if plannedChains(chainOfRel(rel)) &&
-              !plannedRel(rel) => (chainOfRel(rel), rel, b)
-        }
-        if (intruders.nonEmpty) intruderGuard(intruders)
-      }
-      val added = land
-      preFenceHook()
-      // publish fence: if our claim was broken as stale mid-commit
-      // (we held it past staleLockMs, or a foreign sweep removed it),
-      // another writer may already be inside its own transaction —
-      // publishing now would race its manifest read. Abort instead:
-      // the landed files stay unmanifested orphans (invisible;
-      // vacuum-sweepable) and the caller retries.
-      if (!stillOurs()) throw new Lake.ConcurrentWriteException(
-        s"$what of $table lost its commit claim mid-transaction " +
-          "(broken as stale) - nothing published; retry")
-      val removedSet = removedRel.toSet
-      publishManifest(table, log, baseState, base -- removedSet ++ added,
-        delta = Some((added, removedSet)), what = what,
-        extraHeads = extraHeads, dvChanges = dvChanges,
-        dvDrops = dvDrops)
-      afterPublish()
-      added
+      val base = new TxnBase(table, what, log.latest.map(stateAt(table, log, _)))
+      val out = body(base)
+      val c = out._1
+      try {
+        preFenceHook()
+        if (!stillOurs()) throw new Lake.ConcurrentWriteException(
+          s"$what of $table lost its commit claim mid-transaction " +
+            "(broken as stale) - nothing published; retry")
+        publishManifest(table, log, base.state,
+          base.entries -- c.removed ++ c.added,
+          delta = Some((c.added, c.removed)), what = what,
+          extraHeads = c.heads, dvChanges = c.dvChanges, dvDrops = c.dvDrops)
+      } catch { case e: Throwable => c.undo(); throw e }
+      c.after()
+      out
     }
-    // data-skipping stats warm-up for the just-landed files — OUTSIDE
-    // the commit lock (the transaction is durable; footer reads of
-    // our own immutable files must not stretch the critical section
-    // other writers serialize on), O(commit files) per commit
-    collectStatsQuietly(table, added)
-    added
+    if (warm && c.added.nonEmpty) collectStatsQuietly(table, c.added)
+    result
   }
 
   /** The lake's physical contract: every data file lives under a
@@ -3061,87 +2988,93 @@ class Lake(spark: SparkSession, val root: String) {
   /** Discard a staging dir (abort path of an external staged write). */
   private[graft] def dropStaging(tmp: Path): Unit = trashOne(tmp)
 
-  /** Land an externally staged `chain_name=`-partitioned directory as
-    * a REPLACE: one manifest transaction that removes `removedAbs`
-    * (the files the paired row-level scan planned; a concurrent
-    * commit that retired any of them aborts this one with nothing
-    * published — [[Lake.ConcurrentWriteException]]) and adds the
-    * staged files. `retain = true` moves the replaced originals into
-    * the retention area, keeping pinned snapshots readable. The SQL
-    * `UPDATE`/`MERGE INTO` commit step
-    * ([[graft.sources.LakeRowLevelOperation]]). */
-  private[graft] def replaceStaged(table: String, tmp: Path,
-                                   removedAbs: Seq[String],
-                                   retain: Boolean): Unit = {
-    val chains = removedAbs.map(chainOfRel).distinct.sorted
-    // the row-level scan reads RAW files (its caller materializes any
-    // deletion vectors first), so every replaced file must still be
-    // vector-FREE at commit — a vector a rival added since makes this
-    // rewrite resurrect its deletes, refuse loudly instead
-    val dvExpectedR: Map[String, Option[Dv.Ref]] =
-      removedAbs.map(p => relAnywhere(p) ->
-        (None: Option[Dv.Ref])).toMap
-    try {
-      // UPDATE/MERGE rows staged through Spark's own writers never
-      // passed the inline guard — validate the replacement files
-      // BEFORE the manifest transaction (violation = loud abort,
-      // nothing published)
-      validateStagedConstraints(table, tmp)
-      landPartitioned(tmp, table, "replace", "rowLevelReplace",
-        removedAbs = removedAbs, dvExpected = dvExpectedR,
-        afterPublish = () => {
-          removeReplaced(table, "rowLevelReplace", removedAbs, retain)
-          chains.foreach { c =>
-            val p = new Path(s"${dir(table)}/chain_name=${escapeChain(c)}")
-            if (fs.exists(p) && !fs.listStatus(p).exists(s0 =>
-                s0.getPath.getName.endsWith(".parquet")))
-              fs.delete(p, true)
-          }
-        })
-      ()
-    } finally trashOne(tmp)
-  }
-
-  /** Rename every staged `.parquet` under `tmp` into `tgtDir` with
-    * stamped `prefix` names. All-or-nothing: on any rename failure the
-    * files landed so far are rolled back and None is returned (the
-    * staging dir is deleted either way). Returns landed (path, bytes)
-    * — the byte lengths feed the manifest commit, captured from the
-    * staging listing so landing costs no extra stat calls. */
-  private def landStaged(tmp: Path, tgtDir: Path,
-                         prefix: String): Option[Seq[(Path, Long)]] = {
-    fs.mkdirs(tgtDir)
-    val stamp = System.nanoTime()
-    var i = 0
-    val landed = scala.collection.mutable.ArrayBuffer.empty[(Path, Long)]
-    val allRenamed = fs.listStatus(tmp)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .forall { st =>
-        val dst = new Path(tgtDir, f"$prefix-$stamp-$i%05d.parquet")
-        i += 1
-        val ok = fs.rename(st.getPath, dst)
-        if (ok) landed += ((dst, st.getLen))
-        ok
-      }
-    if (!allRenamed) {
-      landed.foreach(p => fs.delete(p._1, false))
-      trashOne(tmp)
-      None
-    } else {
-      trashOne(tmp)
-      Some(landed.toSeq)
+  /** Stage `df` for [[landCommit]] under a fresh staging dir with the
+    * table's writer options: partitioned by `chain_name`, or — for a
+    * rewrite of one chain's files (compaction, clustering) — written
+    * straight into that chain's `chain_name=` subdirectory, so every
+    * staged dir has the same shape. */
+  private def stage(table: String, tag: String, df: DataFrame,
+                    chain: Option[String] = None): Path = {
+    val tmp = stagingDir(s"$tag-$table")
+    val w = df.write.mode("overwrite").options(writeOptions(table))
+    chain match {
+      case Some(c) => w.parquet(s"$tmp/chain_name=${escapeChain(c)}")
+      case None => w.partitionBy("chain_name").parquet(tmp.toString)
     }
+    tmp
   }
 
-  /** Remove replaced originals after the manifest commit, either by
-    * retention ([[retire]]) or by CHECKED delete. Manifest-backed
-    * readers already stopped seeing these files at commit (the new
-    * manifest doesn't name them), so an undeleted leftover is an
-    * invisible ORPHAN, not a visible duplicate — but orphans cost
-    * storage and would resurface through [[refreshManifest]], so
-    * failures still throw naming the leftovers. */
-  private def removeReplaced(table: String, what: String,
-                             paths: Seq[String], retain: Boolean): Unit =
+  /** The copy-on-write tail every staging writer shares: land the
+    * `chain_name=`-staged dir `tmp` and commit it as ONE [[txn]] that
+    * removes `removed` (absolute paths) and sets `dvChanges`. Under
+    * the lock the body checks the plan against the base
+    * ([[TxnBase.requirePlanned]] with the vector map the write planned
+    * against, then `guard`) and renames every staged file into its
+    * chain dir under a stamped `prefix` name — all-or-nothing: a
+    * failed rename rolls back every file landed so far and aborts with
+    * nothing published. After the publish it retires or deletes the
+    * replaced files ([[retireReplaced]]). The staging dir is trashed
+    * either way. Returns the landed entries. */
+  private def landCommit(table: String, what: String, prefix: String,
+                         tmp: Path, removed: Seq[String], retain: Boolean,
+                         planDv: Map[String, Dv.Ref],
+                         dvChanges: Map[String, Dv.Ref] = Map.empty,
+                         heads: Seq[String] = Seq.empty,
+                         guard: TxnBase => Unit = _ => ())
+      : Seq[(String, Long)] =
+    try {
+      val parts =
+        try fs.listStatus(tmp).filter(st => st.isDirectory &&
+          st.getPath.getName.startsWith("chain_name="))
+        catch {
+          case _: java.io.FileNotFoundException =>
+            Array.empty[org.apache.hadoop.fs.FileStatus]
+        }
+      val removedRels = removed.map(relOf(table, _))
+      txn(table, what) { base =>
+        base.requirePlanned(removedRels, planDv, dvChanges)
+        guard(base)
+        val stamp = System.nanoTime()
+        val landed = scala.collection.mutable.ArrayBuffer.empty[(Path, Long)]
+        try parts.foreach { part =>
+          // the staged dir name is already Hive-escaped by Spark's
+          // write - reuse it verbatim as the target dir name
+          val tgt = new Path(s"${dir(table)}/${part.getPath.getName}")
+          fs.mkdirs(tgt)
+          fs.listStatus(part.getPath)
+            .filter(_.getPath.getName.endsWith(".parquet"))
+            .zipWithIndex.foreach { case (st, i) =>
+              val dst = new Path(tgt, f"$prefix-$stamp-$i%05d.parquet")
+              if (!fs.rename(st.getPath, dst))
+                throw new java.io.IOException(
+                  s"$what of $table failed to land staged files - rolled back")
+              landed += ((dst, st.getLen))
+            }
+        } catch {
+          case e: Throwable =>
+            landed.foreach(p => fs.delete(p._1, false))
+            throw e
+        }
+        val added = landed.toSeq.map { case (p, b) =>
+          (relOf(table, p.toString), b) }
+        (Commit(added, removedRels.toSet, dvChanges, heads = heads,
+          after = () => retireReplaced(table, what, removed, retain,
+            added.map(a => chainOfRel(a._1)).toSet)), added)
+      }
+    } finally trashOne(tmp)
+
+  /** Remove the files a commit replaced, in its post-publish step:
+    * by retention ([[retire]]) or by CHECKED delete, then drop each
+    * chain dir the commit emptied (a chain it landed files into is not
+    * empty). Manifest-backed readers already stopped seeing the files
+    * at the publish, so an undeleted leftover is an invisible ORPHAN,
+    * not a visible duplicate — but orphans cost storage and would
+    * resurface through [[refreshManifest]], so failures still throw
+    * naming the leftovers. Under the lock, the emptied-dir check
+    * cannot race a writer landing a fresh file into the chain. */
+  private def retireReplaced(table: String, what: String,
+                             paths: Seq[String], retain: Boolean,
+                             landedChains: Set[String]): Unit = {
     if (retain) retire(table, paths)
     else {
       val undeleted = paths.filterNot(p => fs.delete(new Path(p), false))
@@ -3150,14 +3083,48 @@ class Lake(spark: SparkSession, val root: String) {
           s"file(s) could not be deleted - invisible to manifest " +
           s"readers but orphaned on disk: ${undeleted.take(3).mkString(", ")}")
     }
+    paths.map(chainOfRel).distinct.filterNot(landedChains).sorted
+      .foreach { c =>
+        val p = new Path(s"${dir(table)}/chain_name=${escapeChain(c)}")
+        if (fs.exists(p) && !fs.listStatus(p).exists(s0 =>
+            s0.getPath.getName.endsWith(".parquet")))
+          fs.delete(p, true)
+      }
+  }
+
+  /** Land an externally staged `chain_name=`-partitioned directory as
+    * a REPLACE: one transaction that removes `removedAbs` (the files
+    * the paired row-level scan planned; a concurrent commit that
+    * retired any of them aborts this one with nothing published —
+    * [[Lake.ConcurrentWriteException]]) and adds the staged files.
+    * `retain = true` moves the replaced originals into the retention
+    * area, keeping pinned snapshots readable. The SQL
+    * `UPDATE`/`MERGE INTO` commit step
+    * ([[graft.sources.LakeRowLevelOperation]]). */
+  private[graft] def replaceStaged(table: String, tmp: Path,
+                                   removedAbs: Seq[String],
+                                   retain: Boolean): Unit = {
+    // UPDATE/MERGE rows staged through Spark's own writers never
+    // passed the inline guard — validate the replacement files BEFORE
+    // the transaction (violation = loud abort, nothing published)
+    try validateStagedConstraints(table, tmp)
+    catch { case e: Throwable => trashOne(tmp); throw e }
+    // the row-level scan reads RAW files (its caller materializes any
+    // deletion vectors first), so every replaced file must still be
+    // vector-FREE at commit — a vector a rival added since makes this
+    // rewrite resurrect its deletes, refuse loudly instead
+    landCommit(table, "rowLevelReplace", "replace", tmp, removedAbs, retain,
+      planDv = Map.empty)
+    ()
+  }
 
   /** Execute a compaction plan for one table: rewrite each multi-file
     * bin into a single coalesced file set, preserving rows exactly
-    * (CompactionSpec proves bag equality). Single-file bins are left
-    * untouched — rewriting them would only churn data.
-    * `retain = true` moves the replaced originals into the retention
-    * area instead of deleting them (see [[upsert]]'s retain). */
-  /** `onlyChains` non-empty bounds the rewrite to the named chains —
+    * (CompactionSpec proves bag equality), one commit per bin. Single-
+    * file bins are left untouched — rewriting them would only churn
+    * data. `retain = true` moves the replaced originals into the
+    * retention area instead of deleting them (see [[upsert]]'s retain).
+    * `onlyChains` non-empty bounds the rewrite to the named chains —
     * what a maintenance hook passes so rewrite I/O tracks
     * FRAGMENTATION ([[fragmentedChains]]) instead of table size. */
   def compact(table: String, targetBytes: Long,
@@ -3176,38 +3143,19 @@ class Lake(spark: SparkSession, val root: String) {
         onlyChains.isEmpty || onlyChains.contains(chain) }
     if (multi.isEmpty) return 0
     preRewriteHook()
-    var rewritten = 0
     multi.toSeq.sortBy(_._1).foreach { case ((chain, _), files) =>
-      val paths = files.map(_._3)
-      val schema = effectiveSchema(table)
       // dv-aware rewrite scan: the output MATERIALIZES each input's
-      // vector (deleted rows dropped for good); the manifest publish
-      // drops the refs with the removed files
-      val merged = readEntries(table,
-          files.map(f => (f._1, f._3, f._4)), schema, dvAtPlan)
+      // vector (deleted rows dropped for good); the publish drops the
+      // refs with the removed files
+      val merged = readEntries(table, files.map(f => (f._1, f._3, f._4)),
+          effectiveSchema(table), dvAtPlan)
         .drop("chain_name")
         .coalesce(1)
-      val dvExpected: Map[String, Option[Dv.Ref]] = paths.map(p =>
-        relAnywhere(p) -> dvAtPlan.get(relAnywhere(p))).toMap
-      val tmp = stagingDir(s"compact-$table")
-      merged.write.mode("overwrite").options(writeOptions(table))
-        .parquet(tmp.toString)
-      val tgtDir =
-        new Path(s"${dir(table)}/chain_name=${escapeChain(chain)}")
-      manifestTxn(table, "compaction", paths, dvExpected = dvExpected,
-          afterPublish =
-          () => removeReplaced(table, "compaction", paths, retain)) {
-        landStaged(tmp, tgtDir, "compacted") match {
-          case None => throw new java.io.IOException(
-            s"compaction of $table failed to land staged files for " +
-              s"chain $chain - aborted with originals intact")
-          case Some(fl) =>
-            fl.map { case (p, b) => (relOf(table, p.toString), b) }
-        }
-      }
-      rewritten += 1
+      landCommit(table, "compaction", "compacted",
+        stage(table, "compact", merged, Some(chain)), files.map(_._3),
+        retain, dvAtPlan)
     }
-    rewritten
+    multi.size
   }
 
   /** KEY-CLUSTERED compaction — what makes the file-grain [[upsert]]
@@ -3224,16 +3172,17 @@ class Lake(spark: SparkSession, val root: String) {
     * ZORDER / sort-based clustering. Output file count per chain =
     * ⌈chain bytes ÷ targetBytes⌉ (clamped to 2²⁰ partitions); rewrite
     * is one distributed range-shuffle + sorted write per chain,
-    * landing via the same rename protocol as [[compact]]. `retain` as
-    * in [[upsert]]. Returns the number of chains rewritten. */
-  /** With `clusterBy` EMPTY the table's `write.layout` property
+    * committed like [[compact]], one commit per chain. `retain` as in
+    * [[upsert]]. Returns the number of chains rewritten.
+    *
+    * With `clusterBy` EMPTY the table's `write.layout` property
     * drives the rewrite instead: `zorder(x,y)` interleaves the two
     * quantized dimensions ([[graft.ops.Layout.zOrderLayout]]) and
     * clusters on the Morton value, so each output file is a 2-D tile
     * — footer [min,max] tight on BOTH x and y, and [[readRanges]]
-    * prunes files for a bound on EITHER. */
-  /** `onlyChains` as in [[compact]]: non-empty bounds the rewrite to
-    * the named chains so maintenance I/O tracks fragmentation. */
+    * prunes files for a bound on EITHER. `onlyChains` as in
+    * [[compact]]: non-empty bounds the rewrite to the named chains so
+    * maintenance I/O tracks fragmentation. */
   def clusterCompact(table: String, targetBytes: Long,
                      clusterBy: Seq[String] = Seq.empty,
                      retain: Boolean = false,
@@ -3261,55 +3210,37 @@ class Lake(spark: SparkSession, val root: String) {
         onlyChains.isEmpty || onlyChains.contains(chain) }
       .toSeq.sortBy(_._1)
     if (byChain.nonEmpty) preRewriteHook()
-    var rewritten = 0
-    byChain.foreach { case (chain, files) =>
-      val paths = files.map(_._2)
-      val bytes = files.map(_._3).sum
-      val nOut = math.min(1L << 20,
-        math.max(1L, (bytes + targetBytes - 1) / targetBytes)).toInt
-      // churn guard (compact's single-file-bin rule): a single-file
-      // chain that would rewrite into a single file again gains no
-      // pruning granularity — rewriting it only burns I/O and
-      // invalidates snapshots. EXCEPT a dv'd file: clustering is a
-      // materialization vehicle like compact.
-      if (files.size == 1 && nOut == 1 &&
-          !dvAtPlan.contains(relAnywhere(paths.head))) ()
-      else {
+    def nOut(files: Seq[(String, String, Long)]): Int =
+      math.min(1L << 20, math.max(1L,
+        (files.map(_._3).sum + targetBytes - 1) / targetBytes)).toInt
+    // churn guard (compact's single-file-bin rule): a single-file
+    // chain that would rewrite into a single file again gains no
+    // pruning granularity — rewriting it only burns I/O and
+    // invalidates snapshots. EXCEPT a dv'd file: clustering is a
+    // materialization vehicle like compact.
+    val todo = byChain.filterNot { case (_, files) =>
+      files.size == 1 && nOut(files) == 1 &&
+        !dvAtPlan.contains(relAnywhere(files.head._2))
+    }
+    todo.foreach { case (chain, files) =>
       val base = readEntries(table, files, schema, dvAtPlan)
         .drop("chain_name")
       val clustered = zorder match {
         case None => base
-          .repartitionByRange(nOut, clusterBy.map(col): _*)
+          .repartitionByRange(nOut(files), clusterBy.map(col): _*)
           .sortWithinPartitions(clusterBy.map(col): _*)
         case Some((x, y)) => graft.ops.Layout
           .zOrderLayout(base, col(x), col(y))
           .drop("xq", "yq", "file_id")
-          .repartitionByRange(nOut, col("z"))
+          .repartitionByRange(nOut(files), col("z"))
           .sortWithinPartitions(col("z"))
           .drop("z")
       }
-      val tmp = stagingDir(s"cluster-$table")
-      clustered.write.mode("overwrite").options(writeOptions(table))
-        .parquet(tmp.toString)
-      val tgtDir =
-        new Path(s"${dir(table)}/chain_name=${escapeChain(chain)}")
-      val dvExpected: Map[String, Option[Dv.Ref]] = paths.map(p =>
-        relAnywhere(p) -> dvAtPlan.get(relAnywhere(p))).toMap
-      manifestTxn(table, "clustering", paths, dvExpected = dvExpected,
-          afterPublish =
-          () => removeReplaced(table, "clustering", paths, retain)) {
-        landStaged(tmp, tgtDir, "clustered") match {
-          case None => throw new java.io.IOException(
-            s"clustering of $table failed to land staged files for " +
-              s"chain $chain - aborted with originals intact")
-          case Some(fl) =>
-            fl.map { case (p, b) => (relOf(table, p.toString), b) }
-        }
-      }
-      rewritten += 1
-      }
+      landCommit(table, "clustering", "clustered",
+        stage(table, "cluster", clustered, Some(chain)), files.map(_._2),
+        retain, dvAtPlan)
     }
-    rewritten
+    todo.size
   }
 
   /** Materialize deletion vectors: copy-on-write rewrite of exactly
@@ -3331,34 +3262,20 @@ class Lake(spark: SparkSession, val root: String) {
       dvAtPlan.contains(rel) && (onlyRels.isEmpty || onlyRels(rel))
     }
     if (targets.isEmpty) return 0
-    val schema = effectiveSchema(table)
-    val targetPaths = targets.map(_._2)
-    val dvExpected: Map[String, Option[Dv.Ref]] = targetPaths.map(p =>
-      relAnywhere(p) -> dvAtPlan.get(relAnywhere(p))).toMap
-    val chains = targets.map(_._1).distinct.sorted
-    val tmp = stagingDir(s"dvmat-$table")
-    readEntries(table, targets, schema, dvAtPlan)
-      .write.mode("overwrite").options(writeOptions(table))
-      .partitionBy("chain_name").parquet(tmp.toString)
-    try landPartitioned(tmp, table, "dvmat", "dv-materialize",
-      removedAbs = targetPaths, dvExpected = dvExpected,
-      afterPublish = () => {
-        // retained: pinned snapshots of the pre-materialize state
-        // stay readable (file + vector both survive until vacuum)
-        removeReplaced(table, "dv-materialize", targetPaths,
-          retain = true)
-        chains.foreach { c =>
-          val p = new Path(s"${dir(table)}/chain_name=${escapeChain(c)}")
-          if (fs.exists(p) && !fs.listStatus(p).exists(s0 =>
-              s0.getPath.getName.endsWith(".parquet")))
-            fs.delete(p, true)
-        }
-      })
-    finally trashOne(tmp)
+    val tmp = stage(table, "dvmat",
+      readEntries(table, targets, effectiveSchema(table), dvAtPlan))
+    // retained: pinned snapshots of the pre-materialize state stay
+    // readable (file + vector both survive until vacuum)
+    landCommit(table, "dv-materialize", "dvmat", tmp, targets.map(_._2),
+      retain = true, dvAtPlan)
     targets.size
   }
 
   // ── File-grain key-range pruning for upsert ────────────────────────
+
+  /** Footer opens performed by this Lake instance — the sidecar specs
+    * and scale probes assert a warm plan costs ZERO of these. */
+  val footerReads = new java.util.concurrent.atomic.AtomicLong
 
   /** Per-file [min, max] of `column` from the parquet FOOTER stats —
     * pure metadata, no data pages read. Returns None when any row
@@ -3370,10 +3287,6 @@ class Lake(spark: SparkSession, val root: String) {
     * manifest-sized (model-state rule), and at fleet scale this table
     * lives IN the snapshot manifest — the published formats persist
     * exactly these ranges so planning never re-opens footers. */
-  /** Footer opens performed by this Lake instance — the sidecar specs
-    * and scale probes assert a warm plan costs ZERO of these. */
-  val footerReads = new java.util.concurrent.atomic.AtomicLong
-
   private[v3] def footerRange(path: String, column: String)
       : Option[(Any, Any)] = {
     import scala.jdk.CollectionConverters._
@@ -4462,8 +4375,9 @@ class Lake(spark: SparkSession, val root: String) {
     * retry). Disjoint-file upserts commit in either order. A loser
     * whose staging scan raced the winner's post-commit delete can also
     * surface a file-not-found from the scan itself — equally loud,
-    * same remedy. */
-  /** `retain = true` moves the rewritten-away files into the retention
+    * same remedy.
+    *
+    * `retain = true` moves the rewritten-away files into the retention
     * area instead of deleting them, keeping pre-upsert snapshots
     * READABLE ([[readAt]]) until [[vacuum]] expires them. */
   def upsert(updates0: DataFrame, table: String, keys: Seq[String],
@@ -4738,8 +4652,6 @@ class Lake(spark: SparkSession, val root: String) {
           (changes, touched.filterNot(e => electKeys(pathKey(e._2))))
         }
       }
-    val dvExpected: Map[String, Option[Dv.Ref]] = touched.map(e =>
-      relAnywhere(e._2) -> dvAtPlan.get(relAnywhere(e._2))).toMap
 
     // ── merge: anti-join ONLY the copy-on-write touched files ──
     val touchedPaths = cowTouched.map(_._2)
@@ -4767,7 +4679,7 @@ class Lake(spark: SparkSession, val root: String) {
     val merged = survivors.select(cols: _*)
       .unionByName(inserts.select(insertCols: _*))
 
-    // ── land + commit: one manifest transaction ──
+    // ── land + commit: one transaction ──
     // Stage to a temp dir (unlocked — the expensive distributed write
     // happens outside the commit lock), then under the lock: verify
     // the touched files are still live (optimistic-concurrency check —
@@ -4785,9 +4697,11 @@ class Lake(spark: SparkSession, val root: String) {
     // against the racer's file. Disjoint-key concurrent batches (the
     // post-clustering common case) still both commit.
     val plannedRelSet = chainFiles.map(f => relOf(table, f._2)).toSet
-    val intruderGuard: Seq[(String, String, Long)] => Unit = intr => {
+    val intruderGuard: TxnBase => Unit = base => {
+      val intr = base.addedSince(chains.toSet, plannedRelSet)
       val conflicting =
-        if (dataKeys.isEmpty || !prunable) intr // no envelope: conservative
+        if (intr.isEmpty || dataKeys.isEmpty || !prunable)
+          intr.map(_._2) // no envelope: conservative
         else {
           val k1 = dataKeys.head
           val k1IsString = k1Type.contains(StringType)
@@ -4805,45 +4719,17 @@ class Lake(spark: SparkSession, val root: String) {
                 }
               case _ => true
             }
-          }
+          }.map(_._2)
         }
-      if (conflicting.nonEmpty) throw new Lake.ConcurrentWriteException(
-        s"upsert of $table conflicts with a concurrent commit - " +
-          s"${conflicting.size} file(s) were added to this batch's " +
-          "chain(s) after this merge planned, with key ranges the batch " +
-          "may also carry (re-plan and retry): " +
-          conflicting.take(3).map(_._2).mkString(", "))
+      base.conflict(conflicting, "were added to this batch's chain(s) " +
+        "after this merge planned, with key ranges the batch may also " +
+        "carry (re-plan and retry)")
     }
-    val tmp = stagingDir(s"upsert-$table")
     preStageHook() // test seam: the unlocked staging-scan race window
-    merged.write.mode("overwrite").options(writeOptions(table))
-      .partitionBy("chain_name")
-      .parquet(tmp.toString)
-    val added =
-      try landPartitioned(tmp, table, "upsert", "upsert",
-        removedAbs = touchedPaths,
-        plannedChains = chains.toSet,
-        plannedRel = plannedRelSet,
-        intruderGuard = intruderGuard,
-        extraHeads = txn.toSeq.map { case (a, b) => s"#txn=$a:$b" },
-        dvChanges = dvChanges, dvExpected = dvExpected,
-        // under the commit lock (see manifestTxn's afterPublish):
-        // retire/delete the replaced originals, then drop any chain
-        // directory the merge emptied. Both are lock-order-sensitive:
-        // unlocked, the retire races vacuum's orphan sweep (replaced
-        // files carry OLD mtimes) and the empty-dir check races a
-        // concurrent writer landing a fresh file into the "empty"
-        // chain between our listStatus and the recursive delete.
-        afterPublish = () => {
-          removeReplaced(table, "upsert", touchedPaths, retain)
-          chains.foreach { c =>
-            val p = new Path(s"${dir(table)}/chain_name=${escapeChain(c)}")
-            if (fs.exists(p) && !fs.listStatus(p).exists(s0 =>
-                s0.getPath.getName.endsWith(".parquet")))
-              fs.delete(p, true)
-          }
-        })
-      finally trashOne(tmp)
+    val added = landCommit(table, "upsert", "upsert",
+      stage(table, "upsert", merged), touchedPaths, retain, dvAtPlan,
+      dvChanges, txn.toSeq.map { case (a, b) => s"#txn=$a:$b" },
+      intruderGuard)
     // rewrittenBytes counts COPY-ON-WRITE bytes only: vector-elected
     // files are the bytes merge-on-read saved (ScaleProbe grades the
     // CoW cost; the dv sidecars are O(positions))
@@ -4869,8 +4755,9 @@ class Lake(spark: SparkSession, val root: String) {
     * contract the streaming sinks already require. Exhausting
     * `maxAttempts` rethrows the last conflict: persistent contention
     * on the same files is a topology problem (split the key space or
-    * serialize those writers), not one more retry away. */
-  /** `onConflict` observes each lost race before its backoff sleep —
+    * serialize those writers), not one more retry away.
+    *
+    * `onConflict` observes each lost race before its backoff sleep —
     * contention telemetry for probes and operators (attempt number
     * that failed, the conflict). Defaults to a no-op. */
   def upsertRetrying(updates: DataFrame, table: String, keys: Seq[String],
@@ -4882,13 +4769,23 @@ class Lake(spark: SparkSession, val root: String) {
                      backoffMs: Long = 50L,
                      onConflict: (Int, Throwable) => Unit = (_, _) => (),
                      txn: Option[(String, Long)] = None)
-      : UpsertStats = {
+      : UpsertStats =
+    retrying(maxAttempts, backoffMs, onConflict)(upsert(updates, table,
+      keys, deleteCol, checkUnique, maxKeyCollect, retain, txn))
+
+  /** The retry loop of [[upsertRetrying]] and [[deleteWhereRetrying]]:
+    * run `op` until it succeeds, rethrow anything that is not a lost
+    * race ([[Lake.isRetryableRace]]), and rethrow the last race once
+    * `maxAttempts` are spent; `onConflict` sees each lost race before
+    * its jittered linear backoff. */
+  private def retrying[A](maxAttempts: Int, backoffMs: Long,
+                          onConflict: (Int, Throwable) => Unit)
+                         (op: => A): A = {
     require(maxAttempts >= 1, "maxAttempts must be >= 1")
     require(backoffMs >= 0L, "backoffMs must be >= 0")
     var attempt = 1
     while (true) {
-      try return upsert(updates, table, keys, deleteCol, checkUnique,
-        maxKeyCollect, retain, txn)
+      try return op
       catch {
         case e: Throwable if Lake.isRetryableRace(e, root) =>
           onConflict(attempt, e)
@@ -4990,42 +4887,24 @@ class Lake(spark: SparkSession, val root: String) {
           (changes, touched.filterNot(e => electKeys(pathKey(e._2))))
         }
       }
-    val dvExpected: Map[String, Option[Dv.Ref]] = touched.map(e =>
-      relAnywhere(e._2) -> dvAtPlan.get(relAnywhere(e._2))).toMap
 
-    val touchedPaths = cowTouched.map(_._2)
     if (cowTouched.isEmpty) {
       // vector-only delete: one metadata transaction, ZERO data files
       // rewritten — the headline merge-on-read win
-      preCommitHook()
-      manifestTxn(table, "deleteWhere", Seq.empty,
-        dvChanges = dvChanges, dvExpected = dvExpected) { Seq.empty }
+      txn(table, "deleteWhere") { base =>
+        base.requirePlanned(Seq.empty, dvAtPlan, dvChanges)
+        (Commit(dvChanges = dvChanges), ())
+      }
       return UpsertStats(inv.size, touched.size, 0L, 0)
     }
-    val chains = cowTouched.map(_._1).distinct.sorted
     val survivors =
       readEntries(table, cowTouched, schema, dvAtPlan)
         .filter(!matchCond)
         .select(schema.fieldNames.toSeq.map(col): _*)
-    val tmp = stagingDir(s"delete-$table")
     preStageHook() // same unlocked staging-scan race window as upsert
-    survivors.write.mode("overwrite").options(writeOptions(table))
-      .partitionBy("chain_name")
-      .parquet(tmp.toString)
-    val added =
-      try landPartitioned(tmp, table, "delete", "deleteWhere",
-        removedAbs = touchedPaths,
-        dvChanges = dvChanges, dvExpected = dvExpected,
-        afterPublish = () => {
-          removeReplaced(table, "deleteWhere", touchedPaths, retain)
-          chains.foreach { c =>
-            val p = new Path(s"${dir(table)}/chain_name=${escapeChain(c)}")
-            if (fs.exists(p) && !fs.listStatus(p).exists(s0 =>
-                s0.getPath.getName.endsWith(".parquet")))
-              fs.delete(p, true)
-          }
-        })
-      finally trashOne(tmp)
+    val added = landCommit(table, "deleteWhere", "delete",
+      stage(table, "delete", survivors), cowTouched.map(_._2), retain,
+      dvAtPlan, dvChanges)
     UpsertStats(inv.size, touched.size,
       cowTouched.map(_._3).sum, added.size)
   }
@@ -5036,25 +4915,9 @@ class Lake(spark: SparkSession, val root: String) {
   def deleteWhereRetrying(table: String, predicate: Column,
                           retain: Boolean = false,
                           maxAttempts: Int = 5,
-                          backoffMs: Long = 50L): UpsertStats = {
-    require(maxAttempts >= 1, "maxAttempts must be >= 1")
-    require(backoffMs >= 0L, "backoffMs must be >= 0")
-    var attempt = 1
-    while (true) {
-      try return deleteWhere(table, predicate, retain)
-      catch {
-        case e: Throwable if Lake.isRetryableRace(e, root) =>
-          if (attempt >= maxAttempts) throw e
-          Thread.sleep(backoffMs * attempt +
-            (if (backoffMs > 0)
-              java.util.concurrent.ThreadLocalRandom.current()
-                .nextLong(backoffMs + 1)
-            else 0L))
-          attempt += 1
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+                          backoffMs: Long = 50L): UpsertStats =
+    retrying(maxAttempts, backoffMs, (_, _) => ())(
+      deleteWhere(table, predicate, retain))
 
   /** Remove every row — SQL `TRUNCATE`'s lake shape: one metadata-only
     * manifest transaction removing the complete file set (no scan, no
@@ -5065,28 +4928,12 @@ class Lake(spark: SparkSession, val root: String) {
     * serializes after it (and survives). */
   def truncateTable(table: String, retain: Boolean = false): Boolean = {
     if (fileInventory(table).isEmpty) return false
-    var removedAbs: Seq[String] = Seq.empty
-    preCommitHook()
-    manifestTxn(table, "truncate", Seq.empty,
-        afterPublish = () => {
-          removeReplaced(table, "truncate", removedAbs, retain)
-          // chain dirs are now empty shells - drop them (checked:
-          // a racing writer's fresh landing aborts the recursive
-          // delete at the fs layer, and the dir simply survives)
-          removedAbs.map(p => new Path(p).getParent).distinct
-            .foreach { d =>
-              if (fs.exists(d) && !fs.listStatus(d).exists(s0 =>
-                  s0.getPath.getName.endsWith(".parquet")))
-                fs.delete(d, true)
-            }
-        },
-        removedFromBase = Some { base =>
-          removedAbs = base.keys.map(rel => s"${dir(table)}/$rel").toSeq
-          base.keys.toSeq
-        }) {
-      Seq.empty
+    txn(table, "truncate") { base =>
+      val removed = base.entries.keySet
+      (Commit(removed = removed, after = () => retireReplaced(table,
+        "truncate", removed.toSeq.map(rel => s"${dir(table)}/$rel"), retain,
+        Set.empty)), removed.nonEmpty)
     }
-    removedAbs.nonEmpty
   }
 
   // ── Pruned reads: query-side file skipping ─────────────────────────
@@ -5670,31 +5517,9 @@ class Lake(spark: SparkSession, val root: String) {
     readEntries(table,
       entries.map(e => (chainOfRel(e._1), e._1, e._2)), schema, dv)
 
-  /** Retention GC: keep the newest `keepLast` snapshot manifests,
-    * delete the older ones, then delete every RETIRED file that no
-    * kept manifest references. Live table files are never touched —
-    * vacuum only ever shrinks history, not the table. After a vacuum,
-    * [[readAt]] on an expired version fails with "no snapshot"; on a
-    * kept version it still reproduces the corpus bit-for-bit. The
-    * walk is driver-side over the retention listing (manifest-sized —
-    * the model-state rule), exactly how the published formats' expire
-    * + remove-orphans maintenance runs. */
-  /** `staleCommitMs`: snapshot-commit leftovers (`.lock` claims and
-    * manifest temp files from crashed writers) older than this are
-    * also swept — age-based because a FRESH lock may belong to an
-    * in-flight commit. Crashed claims otherwise burn their version
-    * number forever and accumulate junk in the snapshot dir. */
-  /** `sweepOrphans = true` additionally deletes LIVE-directory data
-    * files the current manifest does not name and that are older than
-    * `staleCommitMs` — the leftovers of a writer that crashed between
-    * landing and publishing (invisible to every manifest reader, but
-    * they cost storage and would resurface via [[refreshManifest]]).
-    * Opt-in because on a table a FOREIGN writer appends to behind the
-    * manifest's back, this would delete that writer's data — call
-    * [[refreshManifest]] first on such tables. */
   /** RESTORE the CURRENT table state to a pinned snapshot — the
     * published formats' `RESTORE TABLE … VERSION AS OF`, as one
-    * manifest transaction whose resulting file set IS the snapshot's:
+    * transaction whose resulting file set IS the snapshot's:
     *
     *  - snapshot files that were rewritten away move BACK from the
     *    retention area into the table dir (paths are never reused, so
@@ -5709,9 +5534,9 @@ class Lake(spark: SparkSession, val root: String) {
     *
     * Loud when the snapshot is missing or invalidated (a needed file
     * vacuum-expired); optimistic-concurrency safe like every other
-    * transaction here (the removal set derives from the FRESH base
-    * under the commit lock, so a racing append simply lands on the
-    * removed side). Returns (files un-retired, files retired).
+    * transaction here (the removal set derives from the transaction's
+    * base, so a racing append simply lands on the removed side).
+    * Returns (files un-retired, files retired).
     * Reference context: the reference engine re-pulls history to
     * recover state (v3/helpers/data_update.py:29–59); the snapshot
     * registry makes recovery a metadata transaction instead. */
@@ -5727,32 +5552,18 @@ class Lake(spark: SparkSession, val root: String) {
     // operation that ever SHRINKS a file's vector), a pinned vector a
     // later rewrite dropped comes back with its file. Any concurrent
     // vector write between this plan and the commit is a loud
-    // retryable conflict (dvExpected covers every restored file).
+    // retryable conflict (the check covers every restored file).
     val pinnedDv = parseSnapshotDvMap(bodyR)
     val curDv = dvMapOf(table)
     val dvChangesR = pinnedDv.filter { case (rel, ref) =>
       !curDv.get(rel).contains(ref) }
     val dvDropsR = curDv.keySet.filter(r =>
       targetSet(r) && !pinnedDv.contains(r))
-    val dvExpectedR: Map[String, Option[Dv.Ref]] =
-      rels.map(r => r -> curDv.get(r)).toMap
     val retiredBase = fs.makeQualified(retiredDir(table)).toString
-    // stashed by the removal closure (runs first, under the lock) for
-    // the land + afterPublish stages of the SAME transaction
-    @volatile var baseRels: Set[String] = Set.empty
-    @volatile var removedRels: Seq[String] = Seq.empty
-    val added = manifestTxn(table, "restore",
-      removedAbs = Seq.empty,
-      removedFromBase = Some { base =>
-        baseRels = base.keySet
-        removedRels = base.keys.filterNot(targetSet).toSeq
-        removedRels
-      },
-      dvChanges = dvChangesR, dvDrops = dvDropsR,
-      dvExpected = dvExpectedR,
-      afterPublish = () => retire(table,
-        removedRels.map(r => s"${dir(table)}/$r"))) {
-      val toUnretire = rels.filterNot(baseRels)
+    txn(table, "restore") { base =>
+      base.requireVectors(rels, curDv)
+      val removed = base.entries.keySet -- targetSet
+      val toUnretire = rels.filterNot(base.entries.contains)
       toUnretire.foreach { rel =>
         val (abs, _) = byRel(rel)
         if (abs.startsWith(retiredBase)) {
@@ -5767,11 +5578,37 @@ class Lake(spark: SparkSession, val root: String) {
             s"restore of $table to v$version lost $rel mid-flight " +
               "(concurrent vacuum?) - nothing published")
       }
-      toUnretire.map(rel => (rel, byRel(rel)._2))
+      (Commit(toUnretire.map(rel => (rel, byRel(rel)._2)), removed,
+        dvChangesR, dvDropsR, after = () =>
+          retire(table, removed.toSeq.map(r => s"${dir(table)}/$r"))),
+        (toUnretire.size, removed.size))
     }
-    (added.size, removedRels.size)
   }
 
+  /** Retention GC: keep the newest `keepLast` snapshot manifests,
+    * delete the older ones, then delete every RETIRED file that no
+    * kept manifest references. Live table files are never touched —
+    * vacuum only ever shrinks history, not the table. After a vacuum,
+    * [[readAt]] on an expired version fails with "no snapshot"; on a
+    * kept version it still reproduces the corpus bit-for-bit. The
+    * walk is driver-side over the retention listing (manifest-sized —
+    * the model-state rule), exactly how the published formats' expire
+    * + remove-orphans maintenance runs.
+    *
+    * `staleCommitMs`: snapshot-commit leftovers (`.lock` claims and
+    * manifest temp files from crashed writers) older than this are
+    * also swept — age-based because a FRESH lock may belong to an
+    * in-flight commit. Crashed claims otherwise burn their version
+    * number forever and accumulate junk in the snapshot dir.
+    *
+    * `sweepOrphans = true` additionally deletes LIVE-directory data
+    * files the current manifest does not name and that are older than
+    * `staleCommitMs` — the leftovers of a writer that crashed between
+    * landing and publishing (invisible to every manifest reader, but
+    * they cost storage and would resurface via [[refreshManifest]]).
+    * Opt-in because on a table a FOREIGN writer appends to behind the
+    * manifest's back, this would delete that writer's data — call
+    * [[refreshManifest]] first on such tables. */
   def vacuum(table: String, keepLast: Int,
              staleCommitMs: Long = 3600000L,
              sweepOrphans: Boolean = false): VacuumStats = {
@@ -5819,32 +5656,49 @@ class Lake(spark: SparkSession, val root: String) {
     //     at which point the feed already refuses loudly BEFORE any
     //     file access (version-range check), so the old
     //     missing-file manifestation is unreachable for streams.
-    val keptRefs: Set[String] = {
-      val b = Set.newBuilder[String]
-      remaining.foreach(v => b ++= manifestFiles(table, v))
-      val log = logListing(table)
-      log.kinds.foreach { case (v, _) =>
-        // rewrite-only commits (compaction/clustering) are INVISIBLE
-        // to the change feeds — changePlanBetween skips them — so
-        // their swapped-out files need no replay pin; only
-        // DATA-CHANGING commits' sides do (the first commit's side is
-        // its full set: a from-0 replay needs every file it named).
-        // Header-less legacy commits read op "" and pin conservatively;
-        // a checkpoint whose BASE (v-1) has expired is unreplayable
-        // (changePlanBetween refuses the range) - no pin needed
-        val c = new CommitView(table, log, v)
-        try {
-          if (!rewriteOps(c.heads.op))
-            c.sides.foreach { case (a, r) => b ++= a; b ++= r }
-        } catch {
-          // a racing retention cut deleted this version mid-walk: its
-          // change is no longer replayable, so not pinning its files
-          // is correct (FNF only — any other IO failure aborts the
-          // vacuum rather than GC a replayable pin)
-          case _: java.io.FileNotFoundException => ()
-        }
+    // The same two sources pin deletion-vector files (the GC at the
+    // end): a vector stays while ANY retained commit's dv map or ANY
+    // surviving snapshot references it. ONE listing and ONE forward
+    // walk of the log collect both pin sets, each commit body read
+    // at most once.
+    val dvd = dvDir(table)
+    val dvGc = fs.exists(dvd)
+    val keptRefs = Set.newBuilder[String]
+    val pinnedDvNames = Set.newBuilder[String]
+    remaining.foreach { v =>
+      val body = snapshotBody(table, v)
+      keptRefs ++= body.filterNot(_.startsWith("#"))
+      parseSnapshotDvMap(body).values.foreach(r => pinnedDvNames += r.name)
+    }
+    val log = logListing(table)
+    // each retained commit's dv map, from the one before it (a racing
+    // retention cut's victim keeps the map)
+    var dvMap = Map.empty[String, Dv.Ref]
+    log.kinds.foreach { case (v, _) =>
+      val c = new CommitView(table, log, v)
+      // rewrite-only commits (compaction/clustering) are INVISIBLE
+      // to the change feeds — changePlanBetween skips them — so
+      // their swapped-out files need no replay pin; only
+      // DATA-CHANGING commits' sides do (the first commit's side is
+      // its full set: a from-0 replay needs every file it named).
+      // Header-less legacy commits read op "" and pin conservatively;
+      // a checkpoint whose BASE (v-1) has expired is unreplayable
+      // (changePlanBetween refuses the range) - no pin needed
+      try {
+        if (!rewriteOps(c.heads.op))
+          c.sides.foreach { case (a, r) => keptRefs ++= a; keptRefs ++= r }
+      } catch {
+        // a racing retention cut deleted this version mid-walk: its
+        // change is no longer replayable, so not pinning its files
+        // is correct (FNF only — any other IO failure aborts the
+        // vacuum rather than GC a replayable pin)
+        case _: java.io.FileNotFoundException => ()
       }
-      b.result()
+      if (dvGc) {
+        try dvMap = c.dvAfter(dvMap)
+        catch { case _: java.io.FileNotFoundException => () }
+        dvMap.values.foreach(r => pinnedDvNames += r.name)
+      }
     }
     // sweep crashed-commit leftovers: a lock whose version already
     // committed is unambiguously stale; any other lock/tmp is stale
@@ -5919,6 +5773,7 @@ class Lake(spark: SparkSession, val root: String) {
       }
     }
     val rdir = retiredDir(table)
+    val kept = keptRefs.result()
     if (fs.exists(rdir)) {
       val base = fs.makeQualified(rdir).toString
       val it = fs.listFiles(rdir, true)
@@ -5927,7 +5782,7 @@ class Lake(spark: SparkSession, val root: String) {
         val f = it.next()
         if (f.isFile) {
           val rel = f.getPath.toString.stripPrefix(base).stripPrefix("/")
-          if (!keptRefs.contains(rel)) {
+          if (!kept.contains(rel)) {
             bytes += f.getLen
             files += 1
             doomed += f.getPath
@@ -5942,33 +5797,15 @@ class Lake(spark: SparkSession, val root: String) {
         }
     }
     // ── deletion-vector GC ──
-    // A vector file stays while ANY retained commit's dv map still
-    // references it (CDC replays read historical vectors) or ANY
-    // surviving snapshot pinned it (VERSION AS OF applies it); an
-    // unreferenced vector older than `staleCommitMs` sweeps — the age
-    // gate protects vectors staged by an in-flight write that hasn't
-    // published yet (they're unreferenced until their commit lands).
-    val dvd = dvDir(table)
-    if (fs.exists(dvd)) {
-      val log = logListing(table)
-      val pinnedDvNames: Set[String] = {
-        val b = Set.newBuilder[String]
-        // one forward walk: each retained commit's map from the one
-        // before it (a racing retention cut's victim keeps the map)
-        var dv = Map.empty[String, Dv.Ref]
-        log.kinds.foreach { case (v, _) =>
-          try dv = new CommitView(table, log, v).dvAfter(dv)
-          catch { case _: java.io.FileNotFoundException => () }
-          dv.values.foreach(r => b += r.name)
-        }
-        remaining.foreach(v =>
-          parseSnapshotDvMap(snapshotBody(table, v))
-            .values.foreach(r => b += r.name))
-        b.result()
-      }
+    // an unreferenced vector older than `staleCommitMs` sweeps — the
+    // age gate protects vectors staged by an in-flight write that
+    // hasn't published yet (they're unreferenced until their commit
+    // lands)
+    if (dvGc) {
+      val pinned = pinnedDvNames.result()
       val now = System.currentTimeMillis()
       fs.listStatus(dvd).foreach { st =>
-        if (st.isFile && !pinnedDvNames(st.getPath.getName) &&
+        if (st.isFile && !pinned(st.getPath.getName) &&
             now - st.getModificationTime > staleCommitMs &&
             fs.delete(st.getPath, false)) {
           files += 1

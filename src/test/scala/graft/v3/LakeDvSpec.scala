@@ -329,6 +329,24 @@ class LakeDvSpec extends SparkSpec {
       tc.head.getAs[Long]("block_number") == 1007L, tc.mkString("; "))
   }
 
+  test("restore brings back a pinned vector whose file a later rewrite retired") {
+    val (lake, _) = freshLake("dv-restore-rewritten")
+    dvOn(lake)
+    lake.append(rows(0 until 30).coalesce(1), Schemas.Nfp)
+    assert(lake.deleteWhere(Schemas.Nfp,
+      col("block_number") < 1003L, retain = true).landedFiles == 0)
+    val pin = lake.snapshot(Schemas.Nfp) // the file AND its vector
+    // the rewrite retires the pinned file and drops its vector
+    assert(lake.materializeDvs(Schemas.Nfp) == 1)
+    assert(lake.dvMapOf(Schemas.Nfp).isEmpty)
+    // the restore moves the file back and re-attaches the pinned
+    // vector: its deleted rows stay deleted
+    assert(lake.restoreTable(Schemas.Nfp, pin) == ((1, 1)))
+    assert(lake.read(Schemas.Nfp).count() == 27L)
+    assert(lake.dvMapOf(Schemas.Nfp).values.map(_.cardinality).toSeq ==
+      Seq(3L))
+  }
+
   test("writer gate: a table stamped #minWriter above this build refuses every write loudly; reader gate twin at #minReader") {
     val (lake, root) = freshLake("dv-gate")
     // two files in one chain so compact has a real multi-file bin

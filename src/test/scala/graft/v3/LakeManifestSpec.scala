@@ -131,22 +131,50 @@ class LakeManifestSpec extends SparkSpec {
   test("manifest read sees exactly the committed state after every write kind") {
     val lake = new Lake(spark,
       Files.createTempDirectory("lake-man2").toString)
-    lake.append(rows(0 until 10), Schemas.Nfp)
-    lake.append(rows(10 until 20), Schemas.Nfp)
-    lake.upsert(rows(3 until 6).withColumn("__del", lit(true)),
+    // every call publishes exactly `n` commits of kind `op`: one per
+    // call, one per bin or chain for the rewrites
+    def commits[A](op: String, n: Int)(write: => A): A = {
+      val before = lake.commitHistory(Schemas.Nfp).lastOption.map(_._1)
+        .getOrElse(0L)
+      val r = write
+      val published = lake.commitHistory(Schemas.Nfp).filter(_._1 > before)
+      assert(published.map(_._3) == Seq.fill(n)(op),
+        s"$op published ${published.map(c => (c._1, c._3))}")
+      r
+    }
+    commits("append", 1)(lake.append(rows(0 until 10), Schemas.Nfp))
+    commits("append", 1)(lake.append(rows(10 until 20), Schemas.Nfp))
+    commits("append", 1)(lake.append(
+      rows(60 until 65, chain = "polygon").coalesce(1), Schemas.Nfp))
+    commits("append", 1)(lake.append(
+      rows(65 until 70, chain = "polygon").coalesce(1), Schemas.Nfp))
+    commits("upsert", 1)(lake.upsert(
+      rows(3 until 6).withColumn("__del", lit(true)),
       Schemas.Nfp, Seq("chain_name", "transaction_hash"),
-      deleteCol = Some("__del"))
-    lake.clusterCompact(Schemas.Nfp, targetBytes = 1L << 16,
-      clusterBy = Seq("transaction_hash"))
-    val got = lake.read(Schemas.Nfp)
-      .select("transaction_hash").collect().map(_.getString(0)).sorted
+      deleteCol = Some("__del")))
+    assert(commits("clustering", 2)(lake.clusterCompact(Schemas.Nfp,
+      targetBytes = 1L << 16, clusterBy = Seq("transaction_hash"))) == 2)
+    def hashes(chain: String) = lake.read(Schemas.Nfp)
+      .filter(col("chain_name") === chain)
+      .select("transaction_hash").collect().map(_.getString(0)).sorted.toSeq
     val want = ((0 until 3) ++ (6 until 20)).map(i => f"0xtx$i%05d")
-    assert(got.toSeq == want, s"rows diverged: ${got.toSeq}")
+    assert(hashes("ethereum") == want, s"rows diverged: ${hashes("ethereum")}")
+    commits("append", 1)(lake.append(rows(20 until 25).coalesce(1),
+      Schemas.Nfp))
+    commits("append", 1)(lake.append(
+      rows(70 until 72, chain = "polygon").coalesce(1), Schemas.Nfp))
+    assert(commits("compaction", 2)(
+      lake.compact(Schemas.Nfp, targetBytes = 1L << 26)) == 2)
+    commits("deleteWhere", 1)(lake.deleteWhere(Schemas.Nfp,
+      col("transaction_hash") === "0xtx00001"))
+    assert(hashes("ethereum") ==
+      ((0 until 1) ++ (2 until 3) ++ (6 until 25)).map(i => f"0xtx$i%05d"))
+    assert(hashes("polygon") == (60 until 72).map(i => f"0xtx$i%05d"))
     // dropChain commits too: the manifest-backed read reflects it
-    lake.append(rows(50 until 55, chain = "base"), Schemas.Nfp)
-    assert(lake.dropChain(Schemas.Nfp, "base"))
-    assert(lake.read(Schemas.Nfp)
-      .filter(col("chain_name") === "base").count() == 0L)
+    commits("append", 1)(lake.append(rows(50 until 55, chain = "base"),
+      Schemas.Nfp))
+    assert(commits("dropChain", 1)(lake.dropChain(Schemas.Nfp, "base")))
+    assert(hashes("base").isEmpty)
     // and the manifest matches what is physically on disk
     val inv = lake.fileInventory(Schemas.Nfp)
     val listed = lake.listInventory(Schemas.Nfp)
@@ -613,6 +641,96 @@ class LakeManifestSpec extends SparkSpec {
     assert(dropper.read(Schemas.Nfp).count() == 0L)
     assert(dropper.fileInventory(Schemas.Nfp) ==
       dropper.listInventory(Schemas.Nfp))
+  }
+
+  test("a rival commit between plan and commit: rewrites abort, base-derived removals absorb it") {
+    // two single-file appends to one chain, vectors enabled: file A
+    // holds rows 0-9, file B rows 10-19
+    def fixture(tag: String): (Lake, Lake, String) = {
+      val root = Files.createTempDirectory(s"lake-race-$tag").toString
+      val lake = new Lake(spark, root)
+      lake.setTableProperties(Schemas.Nfp, Map("dv.maxFraction" -> "0.5"))
+      lake.append(rows(0 until 10).coalesce(1), Schemas.Nfp)
+      val fileA = lake.fileInventory(Schemas.Nfp).map(_._2)
+      lake.append(rows(10 until 20).coalesce(1), Schemas.Nfp)
+      val fileB = lake.fileInventory(Schemas.Nfp).map(_._2).diff(fileA)
+      (lake, new Lake(spark, root), fileB.head)
+    }
+    def state(lake: Lake) = (lake.latestCommitVersion(Schemas.Nfp),
+      lake.read(Schemas.Nfp).select("transaction_hash", "amount").collect()
+        .map(r => r.getString(0) -> r.getString(1)).sorted.toSeq,
+      lake.fileInventory(Schemas.Nfp))
+    // the rival fires in the writer's window between planning and its
+    // transaction taking the lock; returns the table state it left
+    def race(lake: Lake, rival: => Unit): () => Option[(Option[Long],
+        Seq[(String, String)], Seq[(String, String, Long)])] = {
+      @volatile var after: Option[(Option[Long], Seq[(String, String)],
+        Seq[(String, String, Long)])] = None
+      lake.preCommitHook = () => {
+        lake.preCommitHook = () => ()
+        rival
+        after = Some(state(lake))
+      }
+      () => after
+    }
+    // a rewrite whose planned file a rival compaction retired must
+    // lose: nothing published, same rows, no new visible file
+    val rewrites: Seq[(String, Lake => Unit, (Lake, String) => Unit)] = Seq(
+      ("deleteWhere copy-on-write", _ => (),
+        (l, _) => l.deleteWhere(Schemas.Nfp, col("block_number") >= 1012L)),
+      ("deleteWhere vector-only", _ => (),
+        (l, _) => l.deleteWhere(Schemas.Nfp, col("block_number") === 1015L)),
+      ("compact", _ => (),
+        (l, _) => l.compact(Schemas.Nfp, targetBytes = 1L << 26)),
+      ("clusterCompact", _ => (),
+        (l, _) => l.clusterCompact(Schemas.Nfp, targetBytes = 1L << 26,
+          clusterBy = Seq("transaction_hash"))),
+      ("materializeDvs",
+        l => assert(l.deleteWhere(Schemas.Nfp,
+          col("block_number") === 1011L).landedFiles == 0),
+        (l, _) => l.materializeDvs(Schemas.Nfp)),
+      ("replaceStaged", _ => (), (l, fileB) => {
+        val tmp = l.stagingPath(s"replace-${Schemas.Nfp}")
+        rows(10 until 20, amt = i => s"r$i").write.partitionBy("chain_name")
+          .parquet(tmp.toString)
+        l.replaceStaged(Schemas.Nfp, tmp, Seq(fileB), retain = true)
+      }))
+    rewrites.foreach { case (name, setup, op) =>
+      val (lake, rival, fileB) = fixture(name.replace(' ', '-'))
+      setup(lake)
+      val after = race(lake,
+        assert(rival.compact(Schemas.Nfp, targetBytes = 1L << 26) == 1))
+      withClue(s"$name: ")(
+        intercept[Lake.ConcurrentWriteException](op(lake, fileB)))
+      assert(after().isDefined, s"$name: the race never armed")
+      assert(state(lake) == after().get,
+        s"$name: the losing write changed the table")
+      assert(lake.fileInventory(Schemas.Nfp) ==
+        lake.listInventory(Schemas.Nfp), s"$name: a landed file is visible")
+    }
+    // removals derived from the transaction's base absorb a racing
+    // append: it is removed with the rest
+    val absorbing: Seq[(String, Lake => Any, Int)] = Seq(
+      ("dropChains", l => assert(l.dropChains(Schemas.Nfp, Seq("ethereum"))),
+        0),
+      ("truncateTable", l => assert(l.truncateTable(Schemas.Nfp)), 0),
+      ("restoreTable", l => {
+        val pin = l.snapshot(Schemas.Nfp)
+        assert(l.restoreTable(Schemas.Nfp, pin) == ((0, 1)))
+      }, 20))
+    absorbing.foreach { case (name, op, left) =>
+      val (lake, rival, _) = fixture(name)
+      val after = race(lake,
+        rival.append(rows(100 until 105).coalesce(1), Schemas.Nfp))
+      op(lake)
+      assert(after().isDefined, s"$name: the race never armed")
+      assert(lake.latestCommitVersion(Schemas.Nfp) ==
+        after().get._1.map(_ + 1), s"$name: expected one commit on the racer")
+      assert(lake.read(Schemas.Nfp).count() == left.toLong,
+        s"$name: the racing append survived")
+      assert(lake.fileInventory(Schemas.Nfp) ==
+        lake.listInventory(Schemas.Nfp), s"$name: manifest diverged from disk")
+    }
   }
 
   test("isRetryableRace: a file-not-found counts ONLY under the lake root") {
