@@ -923,7 +923,7 @@ object Dedup {
                        k: Int = 5, maxDf: Int = 5,
                        minContainment: Double = 0.9): DataFrame = {
     val shD = shinglesFromToks(tokenize(df, text, id), id, k, dedup = false)
-      .repartition(col("shingle")).dropDuplicates("shingle", id)
+      .dropDuplicates("shingle", id)
       .localCheckpoint()
     val sizes = shD.groupBy(col(id)).agg(count(lit(1)).as("n"))
     val dfreq = shD.groupBy(col("shingle")).agg(count(lit(1)).as("df"))

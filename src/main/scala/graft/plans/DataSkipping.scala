@@ -38,9 +38,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * to KEEP; NaN-bearing FILES carry no parquet min/max — the writer
   * omits them — so they surface as unknown and are kept; -0.0
   * normalizes to 0.0 on both sides, matching IEEE equality) —
-  * exactly what [[graft.v3.Lake]]'s footer extraction persists, so
-  * both pruning paths (key-range upsert planning and this one) share
-  * one cache.
+  * exactly what [[graft.v3.Lake]]'s one footer reader extracts and its
+  * one stats fill caches, so this skip test, the upsert planner and
+  * the pruned reads read the same per-file stats and order them with
+  * the same [[cmp]].
   */
 object DataSkipping {
 
@@ -61,10 +62,11 @@ object DataSkipping {
               column: String): Option[(Long, Long)] = None
   }
 
-  /** Unsigned-lexicographic bytes / numeric long comparison — the
-    * order parquet footer stats are written in for UTF8 / integral
-    * columns. -2 = incomparable (schema drift between the persisted
-    * stats and the literal: caller must KEEP). */
+  /** THE stats order: unsigned-lexicographic bytes, numeric longs,
+    * IEEE doubles, signed BigIntegers — the order parquet footer stats
+    * are written in for each domain. Int.MinValue = incomparable
+    * (schema drift between the persisted stats and the literal or key:
+    * the caller must KEEP the file). */
   def cmp(a: Any, b: Any): Int = (a, b) match {
     case (x: Array[Byte], y: Array[Byte]) =>
       var i = 0
@@ -93,7 +95,7 @@ object DataSkipping {
     case _ => Int.MinValue
   }
 
-  private def comparable(a: Any, b: Any): Boolean =
+  private[graft] def comparable(a: Any, b: Any): Boolean =
     (a.isInstanceOf[Array[Byte]] && b.isInstanceOf[Array[Byte]]) ||
       (a.isInstanceOf[java.lang.Long] && b.isInstanceOf[java.lang.Long]) ||
       (a.isInstanceOf[java.lang.Double] && b.isInstanceOf[java.lang.Double]) ||
@@ -140,10 +142,11 @@ object DataSkipping {
       // (Lake.statsExtractable), closing the foreign-writer hole.
       case dt: DecimalType if dt.precision <= 18 =>
         Some(Long.box(v.asInstanceOf[Decimal].toUnscaledLong))
-      // wider decimals are FIXED_LEN_BYTE_ARRAY: footer stats decode
-      // to the SIGNED unscaled BigInteger (Lake.footerRangesMulti's
-      // "B" arm) — compare the literal's unscaled value in the same
-      // domain. Same scale-match reasoning as above.
+      // wider decimals are FIXED_LEN_BYTE_ARRAY: the lake's footer
+      // reader decodes their stats to the SIGNED unscaled BigInteger
+      // (persisted as sidecar "B" lines) — compare the literal's
+      // unscaled value in the same domain. Same scale-match reasoning
+      // as above.
       case _: DecimalType =>
         Some(v.asInstanceOf[Decimal].toJavaBigDecimal.unscaledValue())
       case _ => None
@@ -229,9 +232,22 @@ object DataSkipping {
       }
   }
 
-  /** IN over literals: sorted cmp-domain values, binary-searched for
-    * one inside [mn, mx] — O(log n) per file like the upsert planner's
-    * key envelope. */
+  /** Does `sorted` (ascending under [[cmp]], comparable with mn and
+    * mx) hold a value inside [mn, mx]? Binary search for the first
+    * value >= mn — O(log n) per file. The one sorted-key test: IN
+    * pruning here, and the lake's upsert planner and point reads. */
+  def anyInRange(sorted: Array[Any], mn: Any, mx: Any): Boolean = {
+    var lo = 0
+    var hi = sorted.length
+    while (lo < hi) {
+      val mid = (lo + hi) >>> 1
+      if (cmp(sorted(mid), mn) < 0) lo = mid + 1 else hi = mid
+    }
+    lo < sorted.length && cmp(sorted(lo), mx) <= 0
+  }
+
+  /** IN over literals: sorted cmp-domain values, [[anyInRange]]-tested
+    * against each file's [mn, mx]. */
   private final case class InT(col: String, sorted: Array[Any])
       extends Test {
     def mayMatch(rangeOf: String => Option[(Any, Any)],
@@ -239,13 +255,7 @@ object DataSkipping {
       rangeOf(col) match {
         case Some((mn, mx)) if sorted.forall(v =>
             comparable(mn, v) && comparable(mx, v)) =>
-          var lo = 0
-          var hi = sorted.length
-          while (lo < hi) {
-            val mid = (lo + hi) >>> 1
-            if (cmp(sorted(mid), mn) < 0) lo = mid + 1 else hi = mid
-          }
-          lo < sorted.length && cmp(sorted(lo), mx) <= 0
+          anyInRange(sorted, mn, mx)
         case _ => true
       }
   }

@@ -4,6 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
+import graft.plans.DataSkipping
 
 /** The event lake: one directory per table, parquet inside, partitioned
   * by `chain_name`.
@@ -3271,74 +3272,39 @@ class Lake(spark: SparkSession, val root: String) {
     targets.size
   }
 
-  // ── File-grain key-range pruning for upsert ────────────────────────
+  // ── Per-file stats: one footer reader, one fill ───────────────────
 
   /** Footer opens performed by this Lake instance — the sidecar specs
     * and scale probes assert a warm plan costs ZERO of these. */
   val footerReads = new java.util.concurrent.atomic.AtomicLong
 
-  /** Per-file [min, max] of `column` from the parquet FOOTER stats —
-    * pure metadata, no data pages read. Returns None when any row
-    * group lacks usable stats for the column (the caller must then
-    * treat the file as touched — conservative, never wrong). String
-    * stats compare with parquet's unsigned-lexicographic byte order
-    * (what Spark-written UTF8 min/max are ordered by); integral stats
-    * as longs. Driver-side reads over a thread pool: the file list is
-    * manifest-sized (model-state rule), and at fleet scale this table
-    * lives IN the snapshot manifest — the published formats persist
-    * exactly these ranges so planning never re-opens footers. */
-  private[v3] def footerRange(path: String, column: String)
-      : Option[(Any, Any)] = {
-    import scala.jdk.CollectionConverters._
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    footerReads.incrementAndGet()
-    val in = HadoopInputFile.fromPath(new Path(path),
-      spark.sparkContext.hadoopConfiguration)
-    val reader = ParquetFileReader.open(in)
-    try {
-      val blocks = reader.getFooter.getBlocks.asScala
-      if (blocks.isEmpty) return None
-      var mn: Any = null
-      var mx: Any = null
-      for (b <- blocks) {
-        val cc = b.getColumns.asScala
-          .find(_.getPath.toDotString == column).orNull
-        if (cc == null) return None
-        val st = cc.getStatistics
-        if (st == null || st.isEmpty || !st.hasNonNullValue) return None
-        val (lo, hi) = (st.genericGetMin, st.genericGetMax) match {
-          case (a: org.apache.parquet.io.api.Binary,
-                b2: org.apache.parquet.io.api.Binary) =>
-            (a.getBytes, b2.getBytes)
-          case (a: java.lang.Long, b2: java.lang.Long) =>
-            (a.longValue(), b2.longValue())
-          case (a: java.lang.Integer, b2: java.lang.Integer) =>
-            (a.longValue(), b2.longValue())
-          case _ => return None // float/boolean stats: not a key type
-        }
-        mn = if (mn == null || keyCmp(lo, mn) < 0) lo else mn
-        mx = if (mx == null || keyCmp(hi, mx) > 0) hi else mx
-      }
-      Some((mn, mx))
-    } finally reader.close()
-  }
-
-  /** Driver-side footer-range cache keyed by (path, length, column):
-    * repeated CDC batches against the same table re-plan without
-    * re-opening unchanged files' footers — the in-process stand-in
-    * for the key-range column a persistent manifest carries at fleet
-    * scale (what the published formats do). Rewrites always mint new
-    * file names here, so a stale range can never serve a changed
-    * file. Bounded by the model-state rule (cleared past 100k). */
-  private val rangeCache = new java.util.concurrent.ConcurrentHashMap[
+  /** Per-file stats keyed by (path, length, column): the column's
+    * [min, max] from the parquet footer, and its (null count, row
+    * count) under the `column#nulls` pseudo-column. The upsert
+    * planner, the pruned reads, SQL data skipping ([[statsProvider]])
+    * and the metadata aggregates all read it; [[fillStats]] and the
+    * sidecar fold ([[loadStats]]) are its only writers. Rewrites
+    * always mint new file names, so a stale entry can never serve a
+    * changed file. */
+  private[v3] val rangeCache = new java.util.concurrent.ConcurrentHashMap[
     String, Option[(Any, Any)]]()
 
-  /** The driver-heap stop-loss on [[rangeCache]], enforced on BOTH
-    * fill paths (per-footer compute AND the sidecar fold — a sidecar
-    * bigger than the bound must not fold past the documented
-    * envelope). Test seam: specs shrink it to drive the overflow
-    * paths without 4M real entries. */
+  /** The driver-heap stop-loss on [[rangeCache]], enforced by both of
+    * its writers: the sidecar fold stops AT the bound, and
+    * [[fillStats]] clears the cache once it has grown 64k entries past
+    * it. Sized for (files × stats columns × 2) entries — each column's
+    * [min,max] AND its `#nulls` pseudo-entry — so 4M ≈ a 250k-file
+    * table at the 8-column default, or 10⁶ files with stats.columns
+    * pinned to the two that matter (~1.6 GB worst case, the
+    * snapshot-state budget the published formats' drivers carry at
+    * this scale). On a clear the sidecar-folded marker resets too, so
+    * the next plan re-folds the persisted stats instead of silently
+    * never pruning again. The SLACK above the fold's stop line: a
+    * capped fold leaves the cache AT the bound, and clearing at the
+    * same threshold would wipe the just-folded entries on the very next
+    * fill — then refold, cap, clear again: a thrash loop that destroys
+    * every table's stats per plan. Test seam: specs shrink it to drive
+    * the overflow paths without 4M real entries. */
   private[graft] var rangeCacheBound: Int = 4000000
 
   /** Scheme-insensitive cache key: inventory paths are fully qualified
@@ -3347,45 +3313,12 @@ class Lake(spark: SparkSession, val root: String) {
   private def rangeKey(path: String, bytes: Long, column: String): String =
     s"${new Path(path).toUri.getPath}:$bytes:$column"
 
-  private def footerRangeCached(path: String, bytes: Long,
-                                column: String): Option[(Any, Any)] = {
-    // path + size from the already-held inventory listing — NO extra
-    // getFileStatus round-trip per file per batch. Safe because this
-    // lake never rewrites a file in place: every landing mints a
-    // stamped or UUID name, so a path never carries different bytes.
-    // Bound sized for the data-skipping era: (files × stats columns
-    // × 2) entries — each column carries its [min,max] AND its
-    // `#nulls` pseudo-entry (r17) — so 4M ≈ a 250k-file table at the
-    // 8-column default, or 10⁶ files with stats.columns pinned to
-    // the two that matter (~1.6 GB worst case, the snapshot-state
-    // budget the published formats' drivers carry at this scale; the
-    // pseudo-entries are boxed-long pairs, cheaper than the byte
-    // ranges). On overflow the sidecar-loaded marker resets too, so
-    // the next plan re-folds the persisted stats instead of silently
-    // never pruning again; a fold that would EXCEED the bound stops
-    // at it (un-folded files simply skip pruning).
-    // SLACK above the fold's stop line: a capped fold leaves the
-    // cache sitting AT the bound, and clearing at the same threshold
-    // would wipe the just-folded entries on the very next per-footer
-    // compute — then refold, cap, clear again: a thrash loop that
-    // destroys every table's stats per upsert. The clear fires only
-    // once per-footer computes have ADDED 64k entries past the
-    // bound, so a capped fold stays useful and clears stay rare
-    // (amortized over 64k footer reads).
-    if (rangeCache.size > rangeCacheBound + 65536) {
-      rangeCache.clear()
-      statsFoldedShards.clear()
-    }
-    rangeCache.computeIfAbsent(rangeKey(path, bytes, column),
-      _ => footerRange(path, column))
-  }
-
   // ── Persisted file-stats sidecar ───────────────────────────────────
   //
   // The in-process rangeCache dies with the driver; a fleet restarting
   // a CDC stream would re-open every footer on its first batch. The
-  // sidecar persists each computed (file, key column) → [min, max]
-  // under $root/_filestats/$table as append-only shards — the
+  // sidecar persists each footer-read (file, column) → [min, max] and
+  // null count under $root/_filestats/$table as append-only shards — the
   // key-range column a real manifest carries, at its smallest. Entries
   // are keyed by (relative path, byte length): rewrites mint new file
   // names, so a stale entry can never describe live bytes — it just
@@ -3478,59 +3411,79 @@ class Lake(spark: SparkSession, val root: String) {
       .stripPrefix(base).stripPrefix("/")
   }
 
-  private def readShardEntries(ps: Seq[Path])
-      : Seq[(String, Long, String, Option[(Any, Any)])] =
-    ps.flatMap { p =>
-      // a rival compactor can delete a listed shard mid-read: its
-      // entries live on in the rival's merged shard (folded at the
-      // next refresh), so skipping is correct - pruning just stays
-      // conservative for the window
+  /** The table's sidecar shard names: one listing, a missing
+    * directory reading as no shards. */
+  private def statsShards(table: String): Set[String] =
+    try fs.listStatus(statsDir(table)).map(_.getPath.getName)
+      .filter(_.startsWith("stats-")).toSet
+    catch { case _: java.io.FileNotFoundException => Set.empty }
+
+  /** Parse every entry of shard `p` into `f` — in parallel chunks when
+    * the shard is big (a compacted sidecar is one multi-million-line
+    * shard, and the serial parse — base64 decodes + cache inserts — was
+    * the dominant cold-plan cost at 10⁶ files in ManifestProbe's stats
+    * mode), so `f` must be thread-safe. A rival compactor can delete a
+    * listed shard mid-read: its entries live on in the rival's merged
+    * shard (folded at the next refresh), so it is skipped — pruning
+    * just stays conservative for the window. */
+  private def readShardEntries(p: Path)(
+      f: ((String, Long, String, Option[(Any, Any)])) => Unit): Unit = {
+    val lines =
       try {
         val in = fs.open(p)
-        val body = try new String(
-          org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
+        try new String(org.apache.commons.io.IOUtils.toByteArray(in),
+          "UTF-8").split('\n')
         finally in.close()
-        body.split("\n").filter(_.nonEmpty).flatMap(parseStatsLine)
       } catch {
-        case _: java.io.FileNotFoundException =>
-          Seq.empty[(String, Long, String, Option[(Any, Any)])]
+        case _: java.io.FileNotFoundException => Array.empty[String]
       }
+    def parseRange(from: Int, until: Int): Unit =
+      (from until until).foreach { i =>
+        if (lines(i).nonEmpty) parseStatsLine(lines(i)).foreach(f)
+      }
+    val threads = math.min(8, Runtime.getRuntime.availableProcessors)
+    if (lines.length < 65536 || threads < 2) parseRange(0, lines.length)
+    else {
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+      try {
+        implicit val ec: scala.concurrent.ExecutionContext =
+          scala.concurrent.ExecutionContext.fromExecutor(pool)
+        val step = (lines.length + threads - 1) / threads
+        scala.concurrent.Await.result(
+          scala.concurrent.Future.sequence((0 until threads).map { t =>
+            scala.concurrent.Future(parseRange(t * step,
+              math.min(lines.length, (t + 1) * step)))
+          }), scala.concurrent.duration.Duration.Inf)
+      } finally pool.shutdown()
     }
+  }
 
   /** Fold the table's persisted stats shards into the rangeCache,
     * INCREMENTALLY: one listStatus decides which shards are new since
     * the last fold, and only those are read — a refresh after one
-    * commit costs O(that commit's shard), never a re-read of the
-    * whole sidecar; a no-change refresh costs the listing alone.
-    * Compacts the shard set when it fragments, dropping entries for
-    * files no longer in the live inventory. Freshness points: each
-    * provider/relation creation (per manifest version), upsert
-    * planning, commit-time collection. */
+    * commit costs O(that commit's shard), never a re-read of the whole
+    * sidecar; a no-change refresh costs the listing alone. Compacts
+    * the shard set when it fragments, dropping entries for files no
+    * longer in the live inventory. Freshness points: each
+    * provider/relation creation (per manifest version) and every
+    * [[fillStats]] (upsert planning, pruned reads, commit-time
+    * collection). */
   private def loadStats(table: String): Unit = {
     val d = statsDir(table)
-    val names: Set[String] =
-      if (!fs.exists(d)) Set.empty
-      else fs.listStatus(d).map(_.getPath.getName)
-        .filter(_.startsWith("stats-")).toSet
+    val names = statsShards(table)
     val folded = statsFoldedShards.getOrDefault(table, Set.empty)
     if (names == folded) return
-    val fresh = (names -- folded).toSeq.sorted.map(new Path(d, _))
-    // parse + fold in PARALLEL chunks: a compacted sidecar is one
-    // multi-million-line shard, and the serial parse (base64 decodes
-    // + CHM inserts) was the dominant cold-plan cost at 10⁶ files
-    // (ManifestProbe stats mode) — concurrent putIfAbsent into the
-    // shared cache is safe, entries are independent facts
     val tablePrefix = dir(table)
-    // the 4M driver-heap bound footerRangeCached enforces applies HERE
-    // too: a sidecar bigger than the cap (10⁶ files × the 8-column
-    // default) must not fold unboundedly past the documented envelope.
-    // Folding stops at the cap — shards not folded stay OUT of
-    // statsFoldedShards, so a later fold (after the overflow clear)
-    // can still pick them up; un-folded stats are conservatively
-    // correct (files with unknown stats are never pruned).
+    // the rangeCache bound applies HERE too: a sidecar bigger than the
+    // cap (10⁶ files × the 8-column default) must not fold unboundedly
+    // past the documented envelope. Folding stops at the cap — shards
+    // not folded stay OUT of statsFoldedShards, so a later fold (after
+    // the overflow clear) can still pick them up; un-folded stats are
+    // conservatively correct (files with unknown stats are never
+    // pruned).
     val foldedNow = scala.collection.mutable.Set.empty[String]
     var capped = false
-    fresh.foreach { p =>
+    (names -- folded).toSeq.sorted.foreach { name =>
       if (!capped && rangeCache.size > rangeCacheBound) {
         capped = true
         org.slf4j.LoggerFactory.getLogger(classOf[Lake]).warn(
@@ -3539,46 +3492,11 @@ class Lake(spark: SparkSession, val root: String) {
             "overflow clear; un-folded files simply skip pruning")
       }
       if (!capped) {
-      foldedNow += p.getName
-      // FNF = a rival's compaction removed the shard between our
-      // listing and this open; its entries fold from the merged
-      // shard at the next refresh (see readShardEntries)
-      val bodyOpt =
-        try {
-          val in = fs.open(p)
-          try Some(new String(
-            org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8"))
-          finally in.close()
-        } catch { case _: java.io.FileNotFoundException => None }
-      val lines = bodyOpt.map(_.split('\n')).getOrElse(Array.empty[String])
-      def foldRange(from: Int, until: Int): Unit = {
-        var i = from
-        while (i < until) {
-          val line = lines(i)
-          if (line.nonEmpty) parseStatsLine(line).foreach {
-            case (rel, bytes, column, r) =>
-              rangeCache.putIfAbsent(
-                rangeKey(s"$tablePrefix/$rel", bytes, column), r)
-          }
-          i += 1
+        foldedNow += name
+        // concurrent putIfAbsent is safe: entries are independent facts
+        readShardEntries(new Path(d, name)) { case (rel, bytes, c, r) =>
+          rangeCache.putIfAbsent(rangeKey(s"$tablePrefix/$rel", bytes, c), r)
         }
-      }
-      val threads = math.min(8, Runtime.getRuntime.availableProcessors)
-      if (lines.length < 65536 || threads < 2) foldRange(0, lines.length)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
-        try {
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutor(pool)
-          val step = (lines.length + threads - 1) / threads
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence((0 until threads).map { t =>
-              scala.concurrent.Future(foldRange(t * step,
-                math.min(lines.length, (t + 1) * step)))
-            }), scala.concurrent.duration.Duration.Inf)
-          ()
-        } finally pool.shutdown()
-      }
       }
     }
     statsFoldedShards.put(table,
@@ -3587,10 +3505,14 @@ class Lake(spark: SparkSession, val root: String) {
       val shards = names.toSeq.sorted.map(new Path(d, _))
       val live = fileInventory(table)
         .map(f => (relOf(table, f._2), f._3)).toSet
-      val kept = readShardEntries(shards).filter(e => live((e._1, e._2)))
+      val kept = new java.util.concurrent.ConcurrentLinkedQueue[
+        (String, Long, String, Option[(Any, Any)])]()
+      shards.foreach(readShardEntries(_)(e =>
+        if (live((e._1, e._2))) kept.add(e)))
+      import scala.jdk.CollectionConverters._
+      writeStatsShard(table, kept.asScala.toSeq
         .distinctBy(e => (e._1, e._2, e._3))
-      writeStatsShard(table,
-        kept.map(e => statsLine(e._1, e._2, e._3, e._4)))
+        .map(e => statsLine(e._1, e._2, e._3, e._4)))
       // CONCURRENT compactions are legal (multi-writer commits all
       // refresh; two may cross the >32 threshold together): each
       // writes its own merged shard (duplicate entries are the same
@@ -3606,10 +3528,7 @@ class Lake(spark: SparkSession, val root: String) {
           s"stale shard(s): ${undeleted.take(3).mkString(", ")}")
       // the merged shard folds at the next refresh (all entries are
       // already cached); record the post-compaction set as folded
-      statsFoldedShards.put(table,
-        if (!fs.exists(d)) Set.empty
-        else fs.listStatus(d).map(_.getPath.getName)
-          .filter(_.startsWith("stats-")).toSet)
+      statsFoldedShards.put(table, statsShards(table))
     }
   }
 
@@ -3623,65 +3542,23 @@ class Lake(spark: SparkSession, val root: String) {
     finally out.close()
   }
 
-  /** Key ranges for a set of inventory files, sidecar-backed: serves
-    * from the loaded sidecar/cache, footer-reads only the files it has
-    * never seen (thread-pooled), and persists what it computed as a
-    * new shard. This is THE planning primitive — [[upsert]] and the
-    * pruned reads both go through it, so any of them warms the others
-    * across driver restarts. */
-  private[v3] def fileRanges(table: String,
-                             files: Seq[(String, String, Long)],
-                             column: String)
-      : Map[String, Option[(Any, Any)]] = {
-    loadStats(table)
-    val (hit, miss) = files.partition(f =>
-      rangeCache.containsKey(rangeKey(f._2, f._3, column)))
-    val fresh: Seq[(String, String, Long, Option[(Any, Any)])] =
-      if (miss.isEmpty) Seq.empty
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(16, miss.size))
-        try {
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutor(pool)
-          scala.concurrent.Await.result(
-            scala.concurrent.Future.sequence(miss.map {
-              case (chain, path, bytes) => scala.concurrent.Future {
-                (chain, path, bytes, footerRangeCached(path, bytes, column))
-              }
-            }),
-            scala.concurrent.duration.Duration.Inf)
-        } finally pool.shutdown()
-      }
-    if (fresh.nonEmpty)
-      writeStatsShard(table, fresh.map(f =>
-        statsLine(relOf(table, f._2), f._3, column, f._4)))
-    // a hit's value can vanish between the partition above and this
-    // read (footerRangeCached clears the cache past its bound, possibly
-    // on a concurrent planning thread) — re-read the footer on null
-    // instead of surfacing a MatchError to the planner
-    (hit.map(f => f._2 ->
-        Option(rangeCache.get(rangeKey(f._2, f._3, column)))
-          .getOrElse(footerRangeCached(f._2, f._3, column))) ++
-      fresh.map(f => f._2 -> f._4)).toMap
-  }
-
-  // ── Data-skipping stats: per-file [min, max] for ALL prunable
-  //    data columns ─────────────────────────────────────────────────
+  // ── The footer reader and the fill ─────────────────────────────────
   //
-  // The sidecar above was born carrying KEY-column ranges for upsert
-  // planning; data skipping generalizes it to every prunable data
-  // column so an arbitrary pushed SQL predicate prunes FILES at plan
-  // time (graft.plans.DataSkipping — Delta's stats column / Iceberg's
-  // manifest bounds, at their smallest). Collection is O(commit):
-  // each manifest transaction footer-reads ONLY its own just-landed
-  // files (one open per file, all columns extracted together) and
-  // persists one shard; plan time serves from the folded cache and
-  // NEVER opens a footer. Driver memory envelope: (live files ×
-  // stats columns) cache entries — the default caps columns at 8;
-  // million-file tables should pin `stats.columns` to the few that
-  // queries actually filter on (the published formats make the same
-  // tradeoff with their indexed-columns knobs).
+  // One footer reader ([[footerRangesMulti]]) extracts every requested
+  // column's [min, max] and null count in one open; one fill
+  // ([[fillStats]]) caches and persists what it reads. Its callers are
+  // the commit warm-up (the table's stats columns over the commit's
+  // own files), [[analyzeTable]], the upsert planner and the pruned
+  // reads (their key column over the files they plan), so SQL data
+  // skipping (graft.plans.DataSkipping — Delta's stats column /
+  // Iceberg's manifest bounds, at their smallest) and key planning
+  // warm each other. Collection is O(commit); SQL plan time serves
+  // from the folded cache and NEVER opens a footer. Driver memory
+  // envelope: (live files × stats columns × 2) cache entries — the
+  // default caps columns at 8; million-file tables should pin
+  // `stats.columns` to the few that queries actually filter on (the
+  // published formats make the same tradeoff with their
+  // indexed-columns knobs).
 
   /** Parquet physical types whose footer stats map losslessly into
     * the cmp domain: BINARY+UTF8 → bytes under unsigned order,
@@ -3748,9 +3625,11 @@ class Lake(spark: SparkSession, val root: String) {
   }
 
   /** One footer open, every requested column's [min, max] extracted —
-    * the multi-column twin of [[footerRange]] (identical values for
-    * the overlapping string/integral cases, so both pruning paths
-    * share one cache). Missing columns, guarded-out physical types
+    * the only code that opens a footer for min/max stats. Values are
+    * in the [[graft.plans.DataSkipping.cmp]] domain: UTF8 bytes under
+    * unsigned order, integrals as longs, floats as doubles, wide
+    * decimals as BigIntegers. Each column also yields its
+    * `column#nulls` entry. Missing columns, guarded-out physical types
     * and stat-less footers yield None ("known unusable" — persisted
     * too, so the file is never re-opened for them). `expected` is the
     * table schema's type per column (the decimal scale gate in
@@ -3833,8 +3712,8 @@ class Lake(spark: SparkSession, val root: String) {
                   if (b2.floatValue() == 0.0f) 0.0d else b2.doubleValue())
               case _ => return None
             }
-            mn = if (mn == null || keyCmp(lo, mn) < 0) lo else mn
-            mx = if (mx == null || keyCmp(hi, mx) > 0) hi else mx
+            mn = if (mn == null || keyOrder(lo, mn) < 0) lo else mn
+            mx = if (mx == null || keyOrder(hi, mx) > 0) hi else mx
           }
           Some((mn, mx))
         }
@@ -3917,33 +3796,39 @@ class Lake(spark: SparkSession, val root: String) {
   private[graft] val statsCollectFailures =
     new java.util.concurrent.atomic.AtomicLong
 
-  /** Commit-time stats warm-up: footer-read THIS commit's just-landed
-    * files (only columns/files the cache doesn't know), persist one
-    * shard. Runs OUTSIDE the commit lock — the transaction is already
-    * durable; cost is O(commit files), never O(table). */
-  private def collectStatsFor(table: String,
-                              added: Seq[(String, Long)]): Unit = {
-    val cols = statsColumns(table)
-    if (cols.isEmpty || added.isEmpty) return
+  /** THE stats fill, shared by every planner and the commit warm-up:
+    * fold the sidecar ([[loadStats]]), footer-read on one pool the
+    * files that lack a range or a `#nulls` entry for any of `columns`
+    * (one open per file, its missing columns together), put what it
+    * read into [[rangeCache]] under the bound, persist it as one shard,
+    * and return the (path, column) ranges of every requested pair —
+    * hits are taken when looked up, so a bound clear on a concurrent
+    * fill never takes a value from under the caller. Also returns the
+    * number of files read. Paths may be qualified (`file:/…`) or built
+    * on the raw root ([[rangeKey]] maps both to one entry); the
+    * returned map is keyed by the path as given. */
+  private def fillStats(table: String, files: Seq[(String, Long)],
+                        columns: Seq[String])
+      : (Int, Map[(String, String), Option[(Any, Any)]]) = {
+    if (files.isEmpty || columns.isEmpty) return (0, Map.empty)
+    loadStats(table)
+    val hits = Map.newBuilder[(String, String), Option[(Any, Any)]]
+    val work = files.flatMap { case (path, bytes) =>
+      val missing = columns.filter { c =>
+        val r = rangeCache.get(rangeKey(path, bytes, c))
+        val hit = r != null &&
+          rangeCache.containsKey(rangeKey(path, bytes, s"$c#nulls"))
+        if (hit) hits += (((path, c), r))
+        !hit
+      }
+      if (missing.isEmpty) None else Some((path, bytes, missing))
+    }
+    if (work.isEmpty) return (0, hits.result())
     // schema types feed the extraction's decimal scale/precision gate
-    // (statsExtractable): resolved once per collection, not per file
+    // (statsExtractable): resolved once per fill, not per file
     val schemaTypes = effectiveSchema(table).fields
       .map(f => f.name -> f.dataType).toMap
-    loadStats(table)
-    val work = added.flatMap { case (rel, bytes) =>
-      val abs = s"${dir(table)}/$rel"
-      // a column is complete only with BOTH its range entry and its
-      // #nulls pseudo-entry: a range warmed by the upsert planner's
-      // range-only shard (or a pre-null-counts build's) must still
-      // collect the null counts here, or IsNull pruning silently
-      // never engages for the file
-      val missing = cols.filterNot(c =>
-        rangeCache.containsKey(rangeKey(abs, bytes, c)) &&
-          rangeCache.containsKey(rangeKey(abs, bytes, s"$c#nulls")))
-      if (missing.isEmpty) None else Some((rel, abs, bytes, missing))
-    }
-    if (work.isEmpty) return
-    val fresh: Seq[(String, Long, String, Option[(Any, Any)])] = {
+    val fresh: Seq[(String, Long, Map[String, Option[(Any, Any)]])] = {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(16, work.size))
       try {
@@ -3951,18 +3836,26 @@ class Lake(spark: SparkSession, val root: String) {
           scala.concurrent.ExecutionContext.fromExecutor(pool)
         scala.concurrent.Await.result(
           scala.concurrent.Future.sequence(work.map {
-            case (rel, abs, bytes, missing) => scala.concurrent.Future {
-              footerRangesMulti(abs, missing, schemaTypes.get)
-                .toSeq.map { case (c, r) =>
-                  rangeCache.put(rangeKey(abs, bytes, c), r)
-                  (rel, bytes, c, r)
-                }
+            case (path, bytes, missing) => scala.concurrent.Future {
+              val read = footerRangesMulti(path, missing, schemaTypes.get)
+              if (rangeCache.size > rangeCacheBound + 65536) {
+                rangeCache.clear()
+                statsFoldedShards.clear()
+              }
+              read.foreach { case (c, r) =>
+                rangeCache.put(rangeKey(path, bytes, c), r) }
+              (path, bytes, read)
             }
-          }), scala.concurrent.duration.Duration.Inf).flatten
+          }), scala.concurrent.duration.Duration.Inf)
       } finally pool.shutdown()
     }
-    writeStatsShard(table,
-      fresh.map { case (rel, bytes, c, r) => statsLine(rel, bytes, c, r) })
+    writeStatsShard(table, fresh.flatMap { case (path, bytes, read) =>
+      val rel = relOf(table, path)
+      read.map { case (c, r) => statsLine(rel, bytes, c, r) }
+    })
+    fresh.foreach { case (path, _, read) =>
+      read.foreach { case (c, r) => hits += (((path, c), r)) } }
+    (work.size, hits.result())
   }
 
   /** Tables whose commit-time stats collection is SUSPENDED by an
@@ -4004,16 +3897,20 @@ class Lake(spark: SparkSession, val root: String) {
     }
   }
 
-  /** [[collectStatsFor]] with the derived-cache failure contract:
-    * a commit whose stats warm-up dies must still report success (the
-    * manifest is published; pruning just stays conservative for those
-    * files until [[analyzeTable]]) — but never silently: counted
-    * ([[statsCollectFailures]]) and logged. Skipped wholesale inside
-    * a [[deferStats]] scope. */
+  /** The commit-time stats warm-up: [[fillStats]] of the table's
+    * stats columns over THIS commit's just-landed files. Runs OUTSIDE
+    * the commit lock, so its cost is O(commit files), never O(table).
+    * Derived-cache failure contract: a commit whose warm-up dies must
+    * still report success (the manifest is published; pruning just
+    * stays conservative for those files until [[analyzeTable]]) — but
+    * never silently: counted ([[statsCollectFailures]]) and logged.
+    * Skipped wholesale inside a [[deferStats]] scope. */
   private def collectStatsQuietly(table: String,
                                   added: Seq[(String, Long)]): Unit = {
     if (statsDeferred.contains(table)) return
-    try collectStatsFor(table, added)
+    try fillStats(table,
+      added.map { case (rel, bytes) => (s"${dir(table)}/$rel", bytes) },
+      statsColumns(table))
     catch {
       case scala.util.control.NonFatal(e) =>
         statsCollectFailures.incrementAndGet()
@@ -4026,26 +3923,15 @@ class Lake(spark: SparkSession, val root: String) {
 
   /** Backfill data-skipping stats for EVERY live file missing them —
     * the adoption/upgrade path (files committed before stats existed,
-    * or before a `stats.columns` change) and the graft_analyze TVF's
-    * engine. Returns the number of files footer-read. Explicitly
-    * invoked and O(missing files) — the plan path itself never does
-    * this. */
+    * or before a `stats.columns` change, or whose sidecar predates
+    * null-count persistence) and the graft_analyze TVF's engine.
+    * Returns the number of files footer-read. Explicitly invoked and
+    * O(missing files) — the plan path itself never does this. */
   def analyzeTable(table: String): Long = {
     val cols = statsColumns(table)
-    if (cols.isEmpty) return 0L
-    loadStats(table)
-    val inv = fileInventory(table)
-    val work = inv.flatMap { case (_, abs, bytes) =>
-      // the nulls pseudo-columns count as missing too: tables whose
-      // sidecar predates null-count persistence backfill here
-      if (cols.forall(c =>
-          rangeCache.containsKey(rangeKey(abs, bytes, c)) &&
-          rangeCache.containsKey(rangeKey(abs, bytes, s"$c#nulls"))))
-        None
-      else Some((relOf(table, abs), bytes))
-    }
-    collectStatsFor(table, work)
-    work.size.toLong
+    if (cols.isEmpty) 0L
+    else fillStats(table, fileInventory(table).map(f => (f._2, f._3)),
+      cols)._1.toLong
   }
 
   // ── Streaming-sink idempotence registry ────────────────────────────
@@ -4224,8 +4110,8 @@ class Lake(spark: SparkSession, val root: String) {
       val r = rangeCache.get(rangeKey(abs, bytes, column))
       if (r != null && r.isDefined) {
         val (lo, hi) = r.get
-        mn = if (mn == null || keyCmp(lo, mn) < 0) lo else mn
-        mx = if (mx == null || keyCmp(hi, mx) > 0) hi else mx
+        mn = if (mn == null || keyOrder(lo, mn) < 0) lo else mn
+        mx = if (mx == null || keyOrder(hi, mx) > 0) hi else mx
       } else {
         // no usable bounds: only a provably EMPTY or ALL-NULL file
         // contributes nothing to min/max; anything else unproves
@@ -4269,50 +4155,57 @@ class Lake(spark: SparkSession, val root: String) {
     }
   }
 
-  /** Normalize a driver-side key value into the domain [[keyCmp]]
-    * compares (UTF-8 bytes for strings, widened long for integrals) —
-    * the same domain [[footerRange]] returns stats in. */
+  /** Normalize a driver-side key value into the
+    * [[graft.plans.DataSkipping.cmp]] domain (UTF-8 bytes for strings,
+    * widened long for integrals) — the domain [[footerRangesMulti]]
+    * returns key stats in. */
   private def asCmp(v: Any): Any = v match {
     case s: String => s.getBytes("UTF-8")
     case n: java.lang.Number => n.longValue()
     case other => other
   }
 
-  /** Unsigned-lexicographic bytes / numeric long comparison — the
-    * order parquet footer stats are written in for UTF8 / integral
-    * columns. */
-  private def keyCmp(a: Any, b: Any): Int = (a, b) match {
-    case (x: Array[Byte], y: Array[Byte]) =>
-      var i = 0
-      val n = math.min(x.length, y.length)
-      while (i < n) {
-        val d = (x(i) & 0xff) - (y(i) & 0xff)
-        if (d != 0) return d
-        i += 1
-      }
-      x.length - y.length
-    case (x: Long, y: Long) => java.lang.Long.compare(x, y)
-    // doubles/BigIntegers reach here only from the data-skipping
-    // extraction's block fold (upsert key pruning guards them out via
-    // prunableType); NaN is guarded out before the fold
-    case (x: Double, y: Double) => java.lang.Double.compare(x, y)
-    case (x: java.math.BigInteger, y: java.math.BigInteger) =>
-      x.compareTo(y)
-    case _ => throw new IllegalStateException(
+  /** [[graft.plans.DataSkipping.cmp]] for values that must share a
+    * domain (a sort, a bound check, a stats fold): two values it cannot
+    * compare throw. */
+  private def keyOrder(a: Any, b: Any): Int = {
+    val c = DataSkipping.cmp(a, b)
+    if (c == Int.MinValue) throw new IllegalStateException(
       s"incomparable key stats: ${a.getClass} vs ${b.getClass}")
+    c
   }
 
-  /** Does the sorted batch-key array contain a value inside
-    * [min, max]? Binary search for the first value ≥ min. */
-  private def anyKeyInRange(sorted: Array[Any], mn: Any, mx: Any): Boolean = {
-    var lo = 0
-    var hi = sorted.length
-    while (lo < hi) {
-      val mid = (lo + hi) >>> 1
-      if (keyCmp(sorted(mid), mn) < 0) lo = mid + 1 else hi = mid
+  /** The key types whose footer order the upsert planner and the
+    * pruned reads trust: string and integral. Any other key type keeps
+    * every file (upsert) or is refused (pruned reads). */
+  private def prunableKeyType(dt: org.apache.spark.sql.types.DataType)
+      : Boolean = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case StringType | LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
     }
-    lo < sorted.length && keyCmp(sorted(lo), mx) <= 0
   }
+
+  /** May a file whose key stats are `r` hold a key in [lo, hi]? Unknown
+    * stats, or stats in another domain than the keys (schema drift),
+    * keep the file. */
+  private def mayHold(r: Option[(Any, Any)], lo: Any, hi: Any): Boolean =
+    r match {
+      case Some((mn, mx)) if DataSkipping.comparable(mn, lo) =>
+        DataSkipping.cmp(mn, hi) <= 0 && DataSkipping.cmp(lo, mx) <= 0
+      case _ => true
+    }
+
+  /** May a file whose key stats are `r` hold one of the `sorted` keys
+    * (non-empty, one domain)? Same keep rule as [[mayHold]]. */
+  private def mayHoldAny(r: Option[(Any, Any)], sorted: Array[Any]): Boolean =
+    r match {
+      case Some((mn, mx))
+          if DataSkipping.comparable(mn, sorted(0)) =>
+        DataSkipping.anyInRange(sorted, mn, mx)
+      case _ => true
+    }
 
   /** Keyed UPSERT — the CDC-apply operator (MERGE INTO's
     * insert/update/delete semantics) for the parquet lake: incoming
@@ -4411,22 +4304,15 @@ class Lake(spark: SparkSession, val root: String) {
         s"upsert batch has multiple rows per key ${keys.mkString(",")} - " +
           "compact the change stream to latest-per-key first (Ops.lastPerKey)")
     }
-    import org.apache.spark.sql.types.{ByteType, DataType, IntegerType, LongType, ShortType, StringType}
     val dataKeys = keys.filterNot(_ == "chain_name")
-    // pruning only trusts string / integral footer orders; any other
-    // key type keeps every chain file touched (correct, un-pruned)
-    def prunableType(dt: DataType): Boolean = dt match {
-      case StringType | LongType | IntegerType | ShortType | ByteType => true
-      case _ => false
-    }
-    val k1Type = dataKeys.headOption.map(schema(_).dataType)
-    val prunable = k1Type.exists(prunableType)
+    val prunable =
+      dataKeys.headOption.exists(k => prunableKeyType(schema(k).dataType))
     // SECOND data-key envelope: composite-key tables (NFP's tx hash +
     // amounts) whose first key cannot exclude a file still prune on
     // the second column's [min, max] — cheap insurance the sidecar
     // already has room for (it is keyed per column)
     val k2Opt = dataKeys.drop(1).headOption
-      .filter(k => prunableType(schema(k).dataType))
+      .filter(k => prunableKeyType(schema(k).dataType))
     // a null in ANY key column never equi-joins, so the row can never
     // be replaced or deleted, only duplicated batch after batch — the
     // guard covers every key, prunable-typed or not
@@ -4438,7 +4324,7 @@ class Lake(spark: SparkSession, val root: String) {
     // key envelopes (a per-batch Spark job: streamed CDC pays it every
     // micro-batch, so chains + stats must not be two jobs)
     var nullDataKeys = 0L
-    // per chain: (≈distinct k1, min/max k1, min/max k2) in keyCmp domain
+    // per chain: (≈distinct k1, min/max k1, min/max k2) in cmp domain
     val prof: Map[String, (Long, Any, Any, Any, Any)] =
       if (prunable) {
         val aggs = Seq(
@@ -4502,7 +4388,6 @@ class Lake(spark: SparkSession, val root: String) {
       chainFiles // key IS the partition: whole named chains are touched
     } else {
       val k1 = dataKeys.head // pruning on one key col is conservative
-      val k1IsString = k1Type.contains(StringType)
       val totalKeys = prof.values.map(_._1).sum
       // exact-key pruning pays a driver collect of the batch's distinct
       // keys; it only beats the free [min,max] envelope when the batch's
@@ -4530,7 +4415,7 @@ class Lake(spark: SparkSession, val root: String) {
         else Seq.empty
       val exactKeys: Map[String, Array[Any]] =
         collected.groupBy(_._1).map { case (c, rows) =>
-          c -> rows.map(r => asCmp(r._2)).toArray.sortWith(keyCmp(_, _) < 0)
+          c -> rows.map(r => asCmp(r._2)).toArray.sortWith(keyOrder(_, _) < 0)
         }
       // original-typed values per chain, for bloom hashing
       val rawKeys: Map[String, Seq[Any]] =
@@ -4542,24 +4427,17 @@ class Lake(spark: SparkSession, val root: String) {
         // one sidecar-backed range lookup for the whole plan: cache
         // hits are free, misses are thread-pooled footer reads that
         // land in the persisted sidecar for the NEXT driver
-        val ranges = fileRanges(table, chainFiles, k1)
+        val ranges = fillStats(table,
+          chainFiles.map(f => (f._2, f._3)), Seq(k1))._2
         val surv1 = chainFiles.filter { case (chain, path, _) =>
           prof.get(chain) match {
             case None => false // chain named but batch has no rows
             case Some((_, bMn, bMx, _, _)) if bMn == null || bMx == null =>
               false // all batch keys null in this chain: no match
             case Some((_, bMn, bMx, _, _)) =>
-              ranges(path) match {
-                case None => true // no usable stats: conservative
-                case Some((fMn, fMx)) =>
-                  // stats type must line up with the batch values
-                  // (bytes vs bytes, long vs long) — else keep safe
-                  if (k1IsString != fMn.isInstanceOf[Array[Byte]]) true
-                  else exactKeys.get(chain) match {
-                    case Some(ks) => anyKeyInRange(ks, fMn, fMx)
-                    case None =>
-                      keyCmp(fMn, bMx) <= 0 && keyCmp(bMn, fMx) <= 0
-                  }
+              exactKeys.get(chain) match {
+                case Some(ks) => mayHoldAny(ranges((path, k1)), ks)
+                case None => mayHold(ranges((path, k1)), bMn, bMx)
               }
           }
         }
@@ -4569,18 +4447,13 @@ class Lake(spark: SparkSession, val root: String) {
         val surv2 = k2Opt match {
           case None => surv1
           case Some(k2) =>
-            val r2 = fileRanges(table, surv1, k2)
-            val k2IsString = schema(k2).dataType == StringType
+            val r2 = fillStats(table,
+              surv1.map(f => (f._2, f._3)), Seq(k2))._2
             surv1.filter { case (chain, path, _) =>
               prof.get(chain) match {
                 case Some((_, _, _, bMn2, bMx2))
                     if bMn2 != null && bMx2 != null =>
-                  r2(path) match {
-                    case None => true
-                    case Some((fMn, fMx)) =>
-                      if (k2IsString != fMn.isInstanceOf[Array[Byte]]) true
-                      else keyCmp(fMn, bMx2) <= 0 && keyCmp(bMn2, fMx) <= 0
-                  }
+                  mayHold(r2((path, k2)), bMn2, bMx2)
                 case _ => true // no k2 envelope: conservative
               }
             }
@@ -4704,19 +4577,14 @@ class Lake(spark: SparkSession, val root: String) {
           intr.map(_._2) // no envelope: conservative
         else {
           val k1 = dataKeys.head
-          val k1IsString = k1Type.contains(StringType)
           val files = intr.map { case (c, rel, b) =>
             (c, s"${dir(table)}/$rel", b) }
-          val rngs = fileRanges(table, files, k1)
+          val rngs = fillStats(table, files.map(f => (f._2, f._3)),
+            Seq(k1))._2
           files.filter { case (chain, path, _) =>
             prof.get(chain) match {
               case Some((_, bMn, bMx, _, _)) if bMn != null && bMx != null =>
-                rngs(path) match {
-                  case Some((fMn, fMx))
-                      if k1IsString == fMn.isInstanceOf[Array[Byte]] =>
-                    keyCmp(fMn, bMx) <= 0 && keyCmp(bMn, fMx) <= 0
-                  case _ => true // no usable stats: conservative conflict
-                }
+                mayHold(rngs((path, k1)), bMn, bMx) // unknown: conflict
               case _ => true
             }
           }.map(_._2)
@@ -5016,42 +4884,40 @@ class Lake(spark: SparkSession, val root: String) {
         })
     }
 
-  private def prunedRead(table: String, key: String, residual: Column,
-                         keep: Option[(Any, Any)] => Boolean,
-                         fileKeep: (String, Long) => Boolean = (_, _) => true)
+  /** The pruned-read loop of [[readRanges]] and [[readKeys]]: each
+    * `(column, keep)` test prunes the previous column's SURVIVORS from
+    * their filled stats (progressively narrower lookups), `fileKeep`
+    * tests the files left (the bloom step), and the survivors' scan is
+    * filtered by `residual` — so the result is exactly
+    * `read(table).filter(residual)`. */
+  private def prunedScan(table: String, schema: StructType,
+      residual: Column, tests: Seq[(String, Option[(Any, Any)] => Boolean)],
+      fileKeep: (String, Long) => Boolean = (_, _) => true)
       : (DataFrame, ScanStats) = {
-    val schema = effectiveSchema(table)
-    require(schema.fieldNames.contains(key),
-      s"no column $key in table $table")
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
-    val keyIsString = schema(key).dataType == StringType
-    schema(key).dataType match {
-      case StringType | LongType | IntegerType | ShortType | ByteType => ()
-      case other => throw new IllegalArgumentException(
-        s"pruned reads need a string or integral key column - $key is " +
-          s"$other; use read($table).filter(...) instead")
-    }
     val files = fileInventory(table)
     if (files.isEmpty)
       return (spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
         .filter(residual), ScanStats(0, 0, 0L, 0L))
-    val ranges = fileRanges(table, files, key)
-    val scanned = files.filter { case (_, path, bytes) =>
-      (ranges(path) match {
-        case None => true // no usable stats: conservative
-        case Some((fMn, _))
-          if keyIsString != fMn.isInstanceOf[Array[Byte]] => true
-        case r => keep(r)
-      }) && fileKeep(path, bytes) // bloom test only on range survivors
-    }
+    val scanned = tests.foldLeft(files) { case (survivors, (key, keep)) =>
+      val ranges = fillStats(table,
+        survivors.map(f => (f._2, f._3)), Seq(key))._2
+      survivors.filter(f => keep(ranges((f._2, key))))
+    }.filter(f => fileKeep(f._2, f._3))
     // the scanned subset reads through the manifest index too: the
     // driver already knows (chain, path, bytes) for every survivor, so
     // Spark plans the scan without touching the filesystem
-    val df = readEntries(table, scanned, schema, dvMapOf(table))
-    (df.filter(residual),
+    (readEntries(table, scanned, schema, dvMapOf(table)).filter(residual),
       ScanStats(files.size, scanned.size, scanned.map(_._3).sum,
         files.map(_._3).sum))
+  }
+
+  private def requireKeyType(table: String, schema: StructType,
+                             key: String): Unit = {
+    val dt = schema(key).dataType
+    if (!prunableKeyType(dt)) throw new IllegalArgumentException(
+      s"pruned reads need a string or integral key column - $key is " +
+        s"$dt; use read($table).filter(...) instead")
   }
 
   /** Key-range read: rows with `lo <= key <= hi`, scheduling only the
@@ -5073,48 +4939,23 @@ class Lake(spark: SparkSession, val root: String) {
       : (DataFrame, ScanStats) = {
     require(bounds.nonEmpty, "readRanges needs at least one bound")
     val schema = effectiveSchema(table)
-    import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StringType}
     bounds.foreach { case (key, lo, hi) =>
       require(schema.fieldNames.contains(key),
         s"no column $key in table $table")
       require(lo != null && hi != null,
         s"readRanges bounds must be non-null ($key)")
-      require(keyCmp(asCmp(lo), asCmp(hi)) <= 0,
+      require(keyOrder(asCmp(lo), asCmp(hi)) <= 0,
         s"readRanges lo > hi on $key: $lo > $hi")
-      schema(key).dataType match {
-        case StringType | LongType | IntegerType | ShortType | ByteType => ()
-        case other => throw new IllegalArgumentException(
-          s"pruned reads need a string or integral key column - $key " +
-            s"is $other; use read($table).filter(...) instead")
-      }
+      requireKeyType(table, schema, key)
     }
     val residual = bounds.map { case (key, lo, hi) =>
       val kt = schema(key).dataType
       col(key) >= lit(lo).cast(kt) && col(key) <= lit(hi).cast(kt)
     }.reduce(_ && _)
-    val files = fileInventory(table)
-    if (files.isEmpty)
-      return (spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .filter(residual), ScanStats(0, 0, 0L, 0L))
-    val scanned = bounds.foldLeft(files) {
-      case (survivors, (key, lo, hi)) =>
-        val (bLo, bHi) = (asCmp(lo), asCmp(hi))
-        val keyIsString = schema(key).dataType == StringType
-        val ranges = fileRanges(table, survivors, key)
-        survivors.filter { case (_, path, _) =>
-          ranges(path) match {
-            case None => true // no usable stats: conservative
-            case Some((fMn, _))
-              if keyIsString != fMn.isInstanceOf[Array[Byte]] => true
-            case Some((fMn, fMx)) =>
-              keyCmp(fMn, bHi) <= 0 && keyCmp(bLo, fMx) <= 0
-          }
-        }
-    }
-    (readEntries(table, scanned, schema, dvMapOf(table)).filter(residual),
-      ScanStats(files.size, scanned.size, scanned.map(_._3).sum,
-        files.map(_._3).sum))
+    prunedScan(table, schema, residual, bounds.map { case (key, lo, hi) =>
+      val (bLo, bHi) = (asCmp(lo), asCmp(hi))
+      key -> ((r: Option[(Any, Any)]) => mayHold(r, bLo, bHi))
+    })
   }
 
   /** Point-set read: rows whose `key` is one of `values`, scheduling
@@ -5132,13 +4973,14 @@ class Lake(spark: SparkSession, val root: String) {
       s"readKeys is the point-lookup path (got ${values.size} keys) - " +
         "join against read(table) for bulk key sets")
     require(!values.contains(null), "readKeys values must be non-null")
-    val sorted = values.map(asCmp).toArray.sortWith(keyCmp(_, _) < 0)
-    val kt = effectiveSchema(table)(key).dataType
+    val sorted = values.map(asCmp).toArray.sortWith(keyOrder(_, _) < 0)
+    val schema = effectiveSchema(table)
+    val kt = schema(key).dataType
+    requireKeyType(table, schema, key)
     val bloomable = bloomColumns(table).contains(key)
-    prunedRead(table, key,
+    prunedScan(table, schema,
       col(key).isin(values.map(v => lit(v).cast(kt)): _*),
-      { case Some((fMn, fMx)) => anyKeyInRange(sorted, fMn, fMx)
-        case None => true },
+      Seq(key -> ((r: Option[(Any, Any)]) => mayHoldAny(r, sorted))),
       fileKeep =
         if (!bloomable) (_, _) => true
         else (p, b) => bloomMayContain(p, b, key, values))

@@ -1,7 +1,9 @@
 package graft.v3
 
 import java.nio.file.Files
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.SparkSpec
 
 /** Query-side file skipping: [[Lake.readRange]]/[[Lake.readKeys]] must
@@ -113,6 +115,71 @@ class LakePrunedReadSpec extends SparkSpec {
       Seq("0xtx000010", "0xtx000399", "0xtz999999"))
     assert(st4.scanned == 2 && multi.count() == 2L,
       s"two live keys in two files: $st4")
+  }
+
+  // one key column per planner-accepted type; row n holds key(n) in
+  // every column, and file j of 8 holds n in [10j, 10j + 9]
+  private val keyCols: Seq[(String, DataType, Int => Any)] = Seq(
+    ("ks", StringType, n => f"k$n%03d"),
+    ("kl", LongType, n => 1000L + n),
+    ("ki", IntegerType, n => 2000 + n),
+    ("kh", ShortType, n => (100 + n).toShort),
+    ("kb", ByteType, n => (n - 40).toByte))
+
+  private val ktSchema = StructType(
+    StructField("chain_name", StringType) +:
+      keyCols.map { case (c, dt, _) => StructField(c, dt) } :+
+      StructField("v", StringType))
+
+  private def ktRows(ns: Seq[Int], v: String): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(ns.map(n =>
+      Row.fromSeq(("ethereum" +: keyCols.map(_._3(n))) :+ v))), ktSchema)
+
+  private def sameRows(a: DataFrame, b: DataFrame): Unit = {
+    val (x, y) = (a.collect().map(_.toString).sorted.toSeq,
+      b.collect().map(_.toString).sorted.toSeq)
+    assert(x == y, s"pruned result diverged from read+filter: $x vs $y")
+  }
+
+  keyCols.foreach { case (key, dt, value) =>
+    test(s"readRanges, readKeys and upsert prune on a ${dt.simpleString} key from the planners' own footer reads") {
+      val root = Files.createTempDirectory(s"lake-kt-$key").toString
+      val t = "kt"
+      val lake = new Lake(spark, root)
+      lake.createTable(t, ktSchema)
+      // no commit warm-up: every stat the planners use they read
+      lake.setTableProperties(t, Map("stats.collect" -> "false"))
+      (0 until 8).foreach(j =>
+        lake.append(ktRows(10 * j until 10 * j + 10, "v0").coalesce(1), t))
+      assert(lake.footerReads.get() == 0)
+      val (lo, hi) = (value(25), value(45))
+      val keys = Seq(value(30), value(70))
+      def plan(l: Lake) =
+        (l.readRanges(t, Seq((key, lo, hi))), l.readKeys(t, key, keys))
+      val ((rdf, rst), (kdf, kst)) = plan(lake)
+      assert(lake.footerReads.get() == 8,
+        s"expected one footer open per file, got ${lake.footerReads.get()}")
+      assert(rst.files == 8 && rst.scanned == 3, s"readRanges: $rst")
+      assert(kst.files == 8 && kst.scanned == 2, s"readKeys: $kst")
+      sameRows(rdf, lake.read(t).filter(col(key).between(lo, hi)))
+      sameRows(kdf, lake.read(t).filter(col(key).isin(keys: _*)))
+      assert(rdf.count() == 21L && kdf.count() == 2L)
+
+      // a fresh driver plans the same calls from the sidecar alone
+      val lake2 = new Lake(spark, root)
+      val ((_, rst2), (_, kst2)) = plan(lake2)
+      assert(rst2 == rst && kst2 == kst)
+      val ust = lake2.upsert(ktRows(Seq(5, 65), "bumped"), t,
+        Seq("chain_name", key))
+      assert(lake2.footerReads.get() == 0,
+        s"warm plans read ${lake2.footerReads.get()} footers")
+      assert(ust.chainFiles == 8 && ust.touchedFiles == 2,
+        s"upsert should touch the 2 files holding its keys: $ust")
+      val after = lake2.read(t)
+      assert(after.count() == 80L)
+      sameRows(after.filter(col("v") === "bumped"),
+        after.filter(col(key).isin(value(5), value(65))))
+    }
   }
 
   test("non-prunable key types and bad bounds fail loudly") {

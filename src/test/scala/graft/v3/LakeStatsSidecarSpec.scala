@@ -133,6 +133,65 @@ class LakeStatsSidecarSpec extends SparkSpec {
       .filter(col("block_number") === 1005L).count() == 1L)
   }
 
+  test("every stats fill enforces the rangeCache bound: a commit warm-up past it clears the cache") {
+    // regression: the commit warm-up (and analyzeTable) put footer
+    // stats into the rangeCache without the bound check the planners'
+    // fill applied, so a driver that only appends and runs SQL grew
+    // the cache past its stop-loss
+    val root = Files.createTempDirectory("lake-sidecar-bound").toString
+    val lake = new Lake(spark, root)
+    lake.rangeCacheBound = 16
+    (0 to 16 + 65536).foreach(i => lake.rangeCache.put(s"dummy:$i", None))
+    lake.append(rows(0 until 10).coalesce(1), Schemas.Nfp)
+    assert(!lake.rangeCache.containsKey("dummy:0"),
+      s"the warm-up left the over-bound cache in place " +
+        s"(${lake.rangeCache.size} entries)")
+    assert(lake.rangeCache.size <= 16 + 65536,
+      s"cache still past its bound: ${lake.rangeCache.size}")
+    // the warm-up still cached the new file's stats after the clear
+    assert(lake.read(Schemas.Nfp)
+      .filter(col("block_number") === 1005L).count() == 1L)
+  }
+
+  test("a legacy shard with a key range but no #nulls entry costs one footer re-read per file, once") {
+    val root = Files.createTempDirectory("lake-sidecar-legacy").toString
+    val lake = new Lake(spark, root)
+    lake.setTableProperties(Schemas.Nfp, Map("stats.collect" -> "false"))
+    (0 until 3).foreach(j =>
+      lake.append(rows(j * 100 until (j + 1) * 100).coalesce(1), Schemas.Nfp))
+    // what a range-only planner wrote: one S line per file, no #nulls
+    def b64(s: String) =
+      java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
+    val files = lake.fileInventory(Schemas.Nfp).sortBy(_._2)
+    assert(files.size == 3)
+    val lines = files.map { case (_, path, bytes) =>
+      val rel = path.split(s"/${Schemas.Nfp}/").last
+      val j = spark.read.parquet(path)
+        .agg(min("transaction_hash"), max("transaction_hash")).head()
+      s"${b64(rel)}\t$bytes\t${b64("transaction_hash")}\tS\t" +
+        s"${b64(j.getString(0))}\t${b64(j.getString(1))}"
+    }
+    val fs = new Path(root).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    val out = fs.create(new Path(
+      s"$root/_filestats/${Schemas.Nfp}/stats-legacy.txt"), false)
+    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    finally out.close()
+    val lake2 = new Lake(spark, root)
+    val (df2, st2) = lake2.readRange(Schemas.Nfp, "transaction_hash",
+      "0xtx000110", "0xtx000190")
+    assert(st2.files == 3 && st2.scanned == 1, s"pruning lost: $st2")
+    assert(df2.count() == 81L)
+    assert(lake2.footerReads.get() == 3,
+      s"expected one re-read per legacy file, got ${lake2.footerReads.get()}")
+    val lake3 = new Lake(spark, root)
+    val (_, st3) = lake3.readRange(Schemas.Nfp, "transaction_hash",
+      "0xtx000110", "0xtx000190")
+    assert(st3 == st2)
+    assert(lake3.footerReads.get() == 0,
+      "the re-read stats (with null counts) were not re-persisted")
+  }
+
   test("per-commit cache eviction is scoped to the inserting table") {
     // regression: eviction removed EVERY table's versions below
     // v - 1024, so one high-version table continually purged a
