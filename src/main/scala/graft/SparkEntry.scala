@@ -24,6 +24,18 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { case (n, q, _) => n -> q }.toMap
 
+  /** The rows an entry point runs, in sorted name order: all of them,
+    * or exactly the `only` names. A name outside the registry throws,
+    * naming every unknown one, so a typo cannot pass as an empty run. */
+  def select(only: Option[Set[String]])
+      : Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val all = queries
+    val unknown = only.fold(Set.empty[String])(_ -- all.keySet)
+    require(unknown.isEmpty,
+      s"unknown registry rows: ${unknown.toSeq.sorted.mkString(", ")}")
+    all.toSeq.filter { case (n, _) => only.forall(_.contains(n)) }.sortBy(_._1)
+  }
+
   def oracleSql: Map[String, String] =
     registry.collect { case (n, _, Some(sql)) => n -> sql }.toMap
 }

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,38 +8,17 @@ object Verify {
     val outDir = args(1)
     // dev convenience: optional comma-separated name filter (the driver
     // always passes exactly two args, so the gate runs everything)
-    val only: Option[Set[String]] =
-      if (args.length > 2) Some(args(2).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.fs.FastLocalFs.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val rows = SparkEntry.select(args.lift(2).map(_.split(",").toSet))
+    val spark = graft.fs.FastLocalFs.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
+    rows.foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    }
     // File-reading oracles (s8_jsonl_source) scope their fixture path
     // by scale factor so a bench run at another SF cannot clobber the
     // fixture between this dump and the driver's DuckDB pass; the
@@ -48,7 +26,7 @@ object Verify {
     val sfBase = new java.io.File(sfDir).getName
     val json = SparkEntry.oracleSql
       .map { case (k, v) =>
-        s"${q(k)}: ${q(v.replace("__GRAFT_SF__", sfBase))}" }
+        s"${Bench.jsonStr(k)}: ${Bench.jsonStr(v.replace("__GRAFT_SF__", sfBase))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

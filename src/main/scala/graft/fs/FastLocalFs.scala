@@ -7,6 +7,7 @@ import java.nio.file.attribute.PosixFilePermission._
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.spark.sql.SparkSession
 
 /** Local `file:` filesystem with process-fork-free permission handling.
   *
@@ -138,10 +139,23 @@ object FastLocalFs {
     "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
       classOf[FastLocalFs].getName)
 
-  /** Apply [[sparkConfs]] to a session builder (all runMain entry
-    * points route through this; measured −40% wall on the s34 lake
-    * lifecycle at sf0.1/local[32], BenchOne min-of-4). */
-  def configure(b: org.apache.spark.sql.SparkSession.Builder)
-      : org.apache.spark.sql.SparkSession.Builder =
+  /** Apply [[sparkConfs]] to a session builder (every session built
+    * by [[session]] routes through this; measured −40% wall on the s34
+    * lake lifecycle at sf0.1/local[32], BenchOne min-of-4). */
+  def configure(b: SparkSession.Builder): SparkSession.Builder =
     sparkConfs.foldLeft(b)((x, kv) => x.config(kv._1, kv._2))
+
+  /** The one local session every entry point, probe and spec builds:
+    * this file system, `local[cpus]` with as many shuffle partitions,
+    * UTC session time and no UI; logs at WARN. */
+  def session(cpus: String): SparkSession = {
+    val spark = FastLocalFs.configure(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
 }

@@ -194,7 +194,7 @@ object Curation {
                       shards: Int = 8, k: Int = 5, maxDf: Int = 5,
                       minJaccard: Double = 0.5,
                       pairSource: PairSource = null): DataFrame = {
-    // phase labels (guide §1.5) are what lets BenchProfile attribute
+    // phase labels (guide §1.5) are what lets a job listener attribute
     // the EAGER stages; the caller's own description comes back after
     val sc = df.sparkSession.sparkContext
     def phase[T](p: String)(f: => T): T = {

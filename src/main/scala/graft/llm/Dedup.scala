@@ -541,8 +541,8 @@ object Dedup {
 
   /** The driver-pairs bound, conf-overridable
     * (`spark.graft.rerank.driverPairs.max`; set ≤0 to force the fully
-    * distributed path) — the deployment-level scale lever, and the
-    * OptProbe channel for same-JVM A/Bs of the two shapes. */
+    * distributed path) — the deployment-level scale lever, and
+    * LlmSpec's switch for the distributed path. */
   private def maxDriverPairs(spark: org.apache.spark.sql.SparkSession): Int =
     spark.conf.getOption("spark.graft.rerank.driverPairs.max")
       .map(_.toInt).getOrElse(MaxDriverPairs)

@@ -3,18 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite (lazy). Runs under
-  * the same fork-free local FS as every runMain entry point
-  * ([[graft.fs.FastLocalFs]]), so the full suite validates the
-  * filesystem the bench and verify paths actually use. */
+/** Shared local session for specs — one per suite (lazy). Built by
+  * the same [[graft.fs.FastLocalFs.session]] as every runMain entry
+  * point, so the full suite validates the filesystem the bench and
+  * verify paths actually use. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = graft.fs.FastLocalFs.configure(
-    SparkSession.builder())
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = graft.fs.FastLocalFs.session("4")
 
   def relClose(got: Double, exp: Double, tol: Double = 1e-9): Boolean =
     if (exp == 0.0) math.abs(got) < tol

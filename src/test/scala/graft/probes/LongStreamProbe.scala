@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Long-stream manifest probe (r12 verdict task 6): drive 100+
@@ -18,7 +17,7 @@ import org.apache.spark.sql.functions._
   *  - `listCalls` == 0 throughout (planning never falls back to
   *    directory listings).
   *
-  * Usage: runMain graft.LongStreamProbe [nBatches]
+  * Usage: Test/runMain graft.LongStreamProbe [nBatches]
   * [upsert|cdc|cdcvacuum|cdcenriched|cdcenrichedvacuum]
   * (default 100 upsert). Emits one JSON line per decade + a final
   * summary line.
@@ -75,14 +74,8 @@ object LongStreamProbe {
     val n = args.headOption.map(_.toInt).getOrElse(100)
     val mode = args.lift(1).getOrElse("upsert")
     val dvMode = args.lift(2).contains("dv")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.fs.FastLocalFs.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.fs.FastLocalFs.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
     import spark.implicits._
 
     val vacuumMode = mode == "cdcvacuum" || mode == "cdcenrichedvacuum"

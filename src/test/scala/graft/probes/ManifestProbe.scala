@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Manifest metadata-layer probe: does the commit-log fold/checkpoint
@@ -23,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    of [[HeapReps]] held/dropped readings, each reading printed too
   *
   * Emits one JSON line per (probe, n). Usage:
-  * runMain graft.ManifestProbe [n,n,…] (default 10000,100000,1000000)
+  * Test/runMain graft.ManifestProbe [n,n,…] (default 10000,100000,1000000)
   */
 object ManifestProbe {
   /** Held/dropped heap readings per size; the median is reported. */
@@ -46,14 +45,8 @@ object ManifestProbe {
     // walk, zero footer opens). Its own mode: at 10⁶ the sections
     // cross-contaminate GC like v1/dsv2 do.
     val runStats = mode == "stats"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.fs.FastLocalFs.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.fs.FastLocalFs.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
 
     def timed[A](body: => A): (A, Double) = {
       val t0 = System.nanoTime()

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Scale probe: replicate the sf-dir inputs `K`× with disjoint keys and
   * time the heavy pipelines, looking for super-linear cliffs the
   * per-round bench (fixed SF) cannot see. Emits one JSON line per
-  * probe. Usage: runMain graft.ScaleProbe [sfDir] [K] [probe,probe,…]
+  * probe. Usage: Test/runMain graft.ScaleProbe [sfDir] [K] [probe,probe,…]
   * (the optional third arg runs only the named probes — for isolating
   * one stage's variance without paying for the whole suite).
   */
@@ -16,14 +16,8 @@ object ScaleProbe {
     val k = args.lift(1).map(_.toInt).getOrElse(20)
     val only: Option[Set[String]] =
       args.lift(2).map(_.split(",").map(_.trim).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = graft.fs.FastLocalFs.configure(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.fs.FastLocalFs.session(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
 
     // replicate with disjoint ids: copy c shifts every key by c * 10^9
     def rep(df: DataFrame, idCols: Seq[String]): DataFrame = {

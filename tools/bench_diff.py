@@ -6,7 +6,10 @@ Usage: bench_diff.py bench_rows_rA.json bench_rows_rB.json [threshold]
 Prints a markdown fragment for BASELINE.md: the top-10 rows of the
 newer run, every mover beyond `threshold`x (default 2.0, both
 directions, ignoring rows under 0.3 s in both rounds — the documented
-VM-noise band swamps sub-second deltas), and rows added/removed.
+VM-noise band swamps sub-second deltas), and rows added/removed. When
+both files carry the recorder's layer fields, each mover also shows the
+change in jobs, task_ms, plan_ms and driver_ms, so the layer that moved
+is read from the files, not from a rerun.
 Replaces prose archaeology: the judge asked for this table to be
 generated, not reconstructed (VERDICT r10 task 7).
 """
@@ -14,6 +17,7 @@ import json
 import statistics
 import sys
 
+LAYERS = ("jobs", "task_ms", "plan_ms", "driver_ms")
 
 def load(path):
     with open(path) as f:
@@ -24,13 +28,13 @@ def load(path):
     # same query timed every ~25 rows across the run) - medians shrug
     # off the one-off GC/contention spikes the mean would absorb
     sentinel = statistics.median(secs) if secs else None
-    return body["round"], {k: v["sec"] for k, v in body["rows"].items()
-                           if "err" not in v}, sentinel
+    rows = {k: v for k, v in body["rows"].items() if "err" not in v}
+    return body["round"], {k: v["sec"] for k, v in rows.items()}, sentinel, rows
 
 
 def main():
-    ra, rows_a, sent_a = load(sys.argv[1])
-    rb, rows_b, sent_b = load(sys.argv[2])
+    ra, rows_a, sent_a, full_a = load(sys.argv[1])
+    rb, rows_b, sent_b, full_b = load(sys.argv[2])
     thr = float(sys.argv[3]) if len(sys.argv) > 3 else 2.0
     # box-speed normalization: two driver runs land on differently
     # loaded VMs; dividing each per-row ratio by the sentinel ratio
@@ -76,10 +80,17 @@ def main():
         print(f">{thr}x NORMALIZED movers (either direction, both rounds "
               ">= 0.3 s):")
         print()
-        print("| row | r%s | r%s | raw | normalized |" % (ra, rb))
-        print("|---|---|---|---|---|")
+        def layered(k):
+            return all(f in full_a[k] and f in full_b[k] for f in LAYERS)
+        extra = any(layered(m[0]) for m in movers)
+        cols = "".join(f" Δ{f} |" for f in LAYERS) if extra else ""
+        print("| row | r%s | r%s | raw | normalized |%s" % (ra, rb, cols))
+        print("|---|---|---|---|---|" + "---|" * (len(LAYERS) if extra else 0))
         for k, a, b, r, n in movers:
-            print(f"| {k} | {a:.2f} s | {b:.2f} s | {r:.2f}x | {n:.2f}x |")
+            deltas = "".join(
+                f" {full_b[k][f] - full_a[k][f]:+} |" if layered(k) else " - |"
+                for f in LAYERS) if extra else ""
+            print(f"| {k} | {a:.2f} s | {b:.2f} s | {r:.2f}x | {n:.2f}x |{deltas}")
     else:
         print(f"No >{thr}x normalized movers (either direction) among "
               "rows >= 0.3 s.")
