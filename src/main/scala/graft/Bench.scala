@@ -5,6 +5,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.QueryExecution
@@ -15,12 +16,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
 /** One bench row's layer breakdown, from [[Recorder.record]]. Times in
   * ms; `driverMs` is wall time outside every Spark job, `shuffleBytes`
   * the shuffle bytes written, `streamMs` the streamed row's
-  * micro-batch `durationMs` summed by phase. */
+  * micro-batch `durationMs` summed by phase, `codegenCompiles` the
+  * classes Spark's code generator compiled (codegen cache misses). */
 private[graft] final case class Layers(jobs: Int, tasks: Long, taskMs: Long, planMs: Long,
                         driverMs: Long, shuffleBytes: Long, spillBytes: Long,
-                        streamMs: Map[String, Long]) {
+                        streamMs: Map[String, Long], codegenCompiles: Long) {
   def json: String =
-    s""""jobs": $jobs, "tasks": $tasks, "task_ms": $taskMs, "plan_ms": $planMs, "driver_ms": $driverMs, "shuffle_bytes": $shuffleBytes, "spill_bytes": $spillBytes""" +
+    s""""jobs": $jobs, "tasks": $tasks, "task_ms": $taskMs, "plan_ms": $planMs, "driver_ms": $driverMs, "shuffle_bytes": $shuffleBytes, "spill_bytes": $spillBytes, "codegen_compiles": $codegenCompiles""" +
       (if (streamMs.isEmpty) "" else streamMs.toSeq.sorted
         .map { case (k, v) => s"${Bench.jsonStr(k)}: $v" }
         .mkString(""", "stream_ms": {""", ", ", "}"))
@@ -30,13 +32,15 @@ private[graft] final case class Layers(jobs: Int, tasks: Long, taskMs: Long, pla
   * StreamingQueryListener, registered once per session. Rows run one at
   * a time, so [[record]] charges every event between two listener-bus
   * drains to the row it wraps, with no job tagging; that also catches
-  * the jobs a stream starts on its own thread. */
+  * the jobs a stream starts on its own thread. Compiles are read from
+  * Spark's JVM-wide codegen counter, which no listener carries. */
 private[graft] final class Recorder(spark: SparkSession) extends AutoCloseable {
   private val sc = spark.sparkContext
   @volatile private var on = false
   private val spans = new ConcurrentHashMap[Int, Array[Long]]()
   private val tasks, taskMs, planMs, shuffle, spill = new AtomicLong
   private val phases = new ConcurrentHashMap[String, AtomicLong]()
+  private val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
 
   private val jobListener = new SparkListener {
     override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -76,23 +80,24 @@ private[graft] final class Recorder(spark: SparkSession) extends AutoCloseable {
     spans.clear(); phases.clear()
     Seq(tasks, taskMs, planMs, shuffle, spill).foreach(_.set(0L))
     on = true
+    val compiles0 = compiles.getCount
     val t0 = System.nanoTime()
     try {
       val a = body
       val wallMs = (System.nanoTime() - t0) / 1000000L
       org.apache.spark.GraftBus.drain(sc)
-      (a, layers(wallMs))
+      (a, layers(wallMs, compiles.getCount - compiles0))
     } finally on = false
   }
 
-  private def layers(wallMs: Long): Layers = {
+  private def layers(wallMs: Long, codegenCompiles: Long): Layers = {
     var jobMs, hi = 0L
     spans.values.asScala.filter(_(1) >= 0).toSeq.sortBy(_(0)).foreach { s =>
       if (s(1) > hi) { jobMs += s(1) - math.max(s(0), hi); hi = s(1) }
     }
     Layers(spans.size, tasks.get, taskMs.get, planMs.get,
       math.min(wallMs, math.max(0L, wallMs - jobMs)), shuffle.get, spill.get,
-      phases.asScala.map { case (k, v) => k -> v.get }.toMap)
+      phases.asScala.map { case (k, v) => k -> v.get }.toMap, codegenCompiles)
   }
 
   def close(): Unit = {

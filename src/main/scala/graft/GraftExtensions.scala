@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{AdcScore, BandKeysExpr, BloomMightContainExpr, DotProduct, HllAgg, Log2FixedExpr, Md5Hash64Expr, Md5LanesExpr, NfcNormalizeExpr, PqCodesExpr, PqFunctions, PqLutsExpr, SearchSortedExpr, SimhashAgg}
+import graft.functions.{AdcScore, BandKeysExpr, BloomMightContainExpr, DotProduct, HllAgg, Log2FixedExpr, Md5Hash64Expr, Md5LanesExpr, NfcNormalizeExpr, Param, PqCodesExpr, PqFunctions, PqLutsExpr, SearchSortedExpr, SimhashAgg}
 
 /** Cluster-wide deployment surface for the graft custom expressions.
   *
@@ -52,6 +52,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       exprs => PqCodesExpr(exprs(0), exprs(1))))
     ext.injectFunction(fn(PqFunctions.LutsName,
       exprs => PqLutsExpr(exprs(0), exprs(1), exprs(2))))
+    ext.injectFunction(fn(Param.Name, Param.fromExprs))
     // the lake's SQL maintenance + history TVFs (table_history,
     // graft_snapshot, graft_compact, graft_vacuum) and the strategy
     // that defers their side effects to execution

@@ -3,6 +3,7 @@ package graft.v3
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.Param
 import graft.ops.Ops
 
 /** The reference's signature relational pipeline: point-in-time
@@ -24,9 +25,13 @@ object Liquidity {
     * `mb` needs columns: tick_lower/tick_upper (long), amount (double),
     * type_of_event (double), as_of (double) — see Pool.mintBurns.
     * Output: (tick, liquidity) where liquidity is the running depth.
+    * The bound is a [[Param]]: `mb` is a materialized frame, so every
+    * call reuses one compiled plan instead of inlining `asOf`.
     */
-  def createLiq(mb: DataFrame, asOf: Double): DataFrame =
-    createLiqBy(mb.filter(col("as_of") < asOf), Seq.empty)
+  def createLiq(mb: DataFrame, asOf: Double): DataFrame = {
+    Param.register(mb.sparkSession)
+    createLiqBy(mb.filter(col("as_of") < Param.of(asOf)), Seq.empty)
+  }
 
   /** Fleet-scale variant: same pipeline, partitioned by `keys`
     * (e.g. chain_name, address). Caller applies the as_of filter. */

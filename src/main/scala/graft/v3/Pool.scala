@@ -4,6 +4,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
+import graft.functions.Param
 
 /** Per-pool facade — the Spark-native `v3Pool` (reference
   * v3/state.py:8–331). Holds the (pool, chain) scope, caches the
@@ -74,12 +75,17 @@ class Pool(val spark: SparkSession, val lake: Lake,
 
   /** Latest value of `column` strictly before `asOf`
     * (state.py:197–214). Ties inside one `as_of` resolve by
-    * log_index (the reference relies on stable file order). */
-  def getPropertyAt(asOf: Double, column: String): Option[String] = {
-    val rows = swaps.filter(col("as_of") < asOf)
+    * log_index (the reference relies on stable file order). The bound
+    * is a [[Param]], so every call reuses one compiled plan. */
+  def getPropertyAt(asOf: Double, column: String): Option[String] =
+    propertyAt(asOf, column).collect().headOption.map(_.getString(0))
+
+  /** The at-most-one-row frame [[getPropertyAt]] collects. */
+  private[v3] def propertyAt(asOf: Double, column: String): DataFrame = {
+    Param.register(spark)
+    swaps.filter(col("as_of") < Param.of(asOf))
       .orderBy(col("as_of").desc, col("log_index").desc)
-      .select(col(column)).limit(1).collect()
-    rows.headOption.map(_.getString(0))
+      .select(col(column)).limit(1)
   }
 
   /** sqrtPriceX96 before `asOf` as exact BigInt (state.py:231–244). */

@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.Trigger
 
 /** The bench harness: row selection, the JSON escaper, the contended
@@ -60,6 +60,22 @@ class BenchSpec extends SparkSpec {
 
     rec.close()
     val (_, after) = rec.record { shuffled(); streamed("b") }
-    assert(after == Layers(0, 0, 0, 0, after.driverMs, 0, 0, Map.empty), after)
+    assert(after == Layers(0, 0, 0, 0, after.driverMs, 0, 0, Map.empty,
+      after.codegenCompiles), after)
+  }
+
+  test("Recorder: codegen_compiles counts a fresh numeric literal, not an exact repeat") {
+    val rec = new Recorder(spark)
+    try {
+      val fresh = System.nanoTime()
+      def query(): Unit = spark.range(0, 1000, 1, 2)
+        .filter(col("id") * 3 + lit(fresh) > lit(fresh + 7))
+        .write.format("noop").mode("overwrite").save()
+      val (_, first) = rec.record(query())
+      assert(first.codegenCompiles >= 1, first)
+      assert(first.json.contains(s""""codegen_compiles": ${first.codegenCompiles}"""))
+      val (_, repeat) = rec.record(query())
+      assert(repeat.codegenCompiles == 0, repeat)
+    } finally rec.close()
   }
 }

@@ -112,6 +112,12 @@ class ExtensionsSpec extends SparkSpec {
           |  10.0D) AS l
           |""".stripMargin).head().getSeq[Seq[Long]](0)
       assert(pql == Seq(Seq(20L, 0L)))
+      // param: a bound constant, used like the literal it wraps
+      val par = s2.sql(
+        "SELECT graft_param(5.5D) + 1 AS p, graft_param(DATE'2024-02-29') AS d")
+        .head()
+      assert(par.getDouble(0) == 6.5)
+      assert(par.getDate(1) == java.sql.Date.valueOf("2024-02-29"))
       // the lake maintenance/history TVFs ride the same injection
       // (injectTableFunction): a conf-deployed session resolves them
       // without any programmatic register call

@@ -1,16 +1,20 @@
 package graft
 
+import java.sql.{Date, Timestamp}
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
-import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{BandKeysExpr, Md5Hash64Expr, NfcNormalizeExpr, SearchSortedExpr}
+import graft.functions.{BandKeysExpr, Md5Hash64Expr, NfcNormalizeExpr, Param, SearchSortedExpr}
 
 /** Property tests for the native expressions' scalar kernels against
-  * independent straight-line references — no Spark session needed
-  * (the kernels are what both eval and codegen call). */
-class FunctionsSpec extends AnyFunSuite {
+  * independent straight-line references (the kernels are what both
+  * eval and codegen call), and [[Param]] against `lit` in a session. */
+class FunctionsSpec extends SparkSpec {
 
   /** Deterministic sampling from a Gen (no scalatest-scalacheck bridge
     * in the offline cache; fixed seed keeps runs reproducible). */
@@ -315,5 +319,70 @@ class FunctionsSpec extends AnyFunSuite {
     // out-of-range code -> NULL
     assert(adc(Array(1, 3), luts) == null)
     assert(adc(Array(-1, 0), luts) == null)
+  }
+
+  /** Per type: a column of values, and constants to bind against it. */
+  private def paramCases: Seq[(String, DataFrame, Seq[Any])] = {
+    import spark.implicits._
+    val doubles = Seq(Double.NaN, -0.0, 0.0, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1.5, -2.25, Double.MinPositiveValue)
+    val dates = Seq("1970-01-01", "2024-02-29", "1899-12-31").map(Date.valueOf)
+    val stamps = Seq("1970-01-01 00:00:00", "2024-02-29 12:34:56.789",
+      "1899-12-31 23:59:59.000001").map(Timestamp.valueOf)
+    Seq(
+      ("int", Seq(Int.MinValue, -1, 0, 7, Int.MaxValue).toDF("x"), Seq(Int.MinValue, 0, 7, Int.MaxValue)),
+      ("long", Seq(Long.MinValue, -1L, 0L, 7L, Long.MaxValue).toDF("x"), Seq(Long.MinValue, 0L, 7L, Long.MaxValue)),
+      ("double", doubles.toDF("x"), doubles),
+      ("date", dates.toDF("x"), dates),
+      ("timestamp", stamps.toDF("x"), stamps))
+  }
+
+  /** Rows with doubles by their bits, so -0.0 and 0.0 differ. */
+  private def bits(rows: Array[Row]): Seq[String] = rows.toSeq.map(_.toSeq.map {
+    case d: Double => s"d${java.lang.Double.doubleToLongBits(d)}"
+    case v => String.valueOf(v)
+  }.mkString("|")).sorted
+
+  private def paramQueries(df: DataFrame, c: Column): Seq[DataFrame] = Seq(
+    df.filter(col("x") < c),
+    df.filter(col("x") === c || col("x") > c),
+    df.select(col("x"), c.as("p"), (col("x") <=> c).as("eq")))
+
+  test("Param: filters and projections equal lit for Int, Long, Double, Date, Timestamp, with and without whole-stage codegen") {
+    Param.register(spark)
+    val key = "spark.sql.codegen.wholeStage"
+    val prev = spark.conf.getOption(key)
+    try Seq("true", "false").foreach { wholeStage =>
+      spark.conf.set(key, wholeStage)
+      for ((name, df, values) <- paramCases; v <- values) {
+        paramQueries(df, Param.of(v)).zip(paramQueries(df, lit(v))).foreach { case (p, l) =>
+          assert(bits(p.collect()) == bits(l.collect()), s"$name $v wholeStage=$wholeStage")
+        }
+      }
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("Param survives optimization and two values share one generated body") {
+    Param.register(spark)
+    def plan(v: Double) = spark.range(0, 100, 1, 2).toDF("x")
+      .filter(col("x") * 2 < Param.of(v) + 1)
+    val optimized = plan(3.0).queryExecution.optimizedPlan
+    // ConstantFolding would have folded `3.0 + 1` to a literal
+    assert(optimized.exists(_.expressions.exists(_.exists {
+      case p: Param => p.value == 3.0; case _ => false })), optimized)
+    def bodies(v: Double) = plan(v).queryExecution.executedPlan.collect {
+      case w: WholeStageCodegenExec => w.doCodeGen()._2.body
+    }
+    assert(bodies(3.0).nonEmpty && bodies(3.0) == bodies(41.5))
+    assert(plan(41.5).count() == 22L) // 2x < 42.5 for x in 0..21
+  }
+
+  test("Param refuses null: Param.of and graft_param(NULL) both throw") {
+    Param.register(spark)
+    assert(intercept[IllegalArgumentException](Param.of(null)).getMessage
+      .contains(Param.NullRefused))
+    val e = intercept[Exception](spark.sql("SELECT graft_param(NULL) AS p").collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains(Param.NullRefused)), e)
   }
 }

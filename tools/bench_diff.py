@@ -9,7 +9,9 @@ directions, ignoring rows under 0.3 s in both rounds — the documented
 VM-noise band swamps sub-second deltas), and rows added/removed. When
 both files carry the recorder's layer fields, each mover also shows the
 change in jobs, task_ms, plan_ms and driver_ms, so the layer that moved
-is read from the files, not from a rerun.
+is read from the files, not from a rerun. A layer field that no
+mover carries in both files (`codegen_compiles` before it was
+recorded) gets no column.
 Replaces prose archaeology: the judge asked for this table to be
 generated, not reconstructed (VERDICT r10 task 7).
 """
@@ -17,7 +19,7 @@ import json
 import statistics
 import sys
 
-LAYERS = ("jobs", "task_ms", "plan_ms", "driver_ms")
+LAYERS = ("jobs", "task_ms", "plan_ms", "driver_ms", "codegen_compiles")
 
 def load(path):
     with open(path) as f:
@@ -80,16 +82,18 @@ def main():
         print(f">{thr}x NORMALIZED movers (either direction, both rounds "
               ">= 0.3 s):")
         print()
+        fields = [f for f in LAYERS if any(
+            f in full_a[m[0]] and f in full_b[m[0]] for m in movers)]
         def layered(k):
-            return all(f in full_a[k] and f in full_b[k] for f in LAYERS)
+            return all(f in full_a[k] and f in full_b[k] for f in fields)
         extra = any(layered(m[0]) for m in movers)
-        cols = "".join(f" Δ{f} |" for f in LAYERS) if extra else ""
+        cols = "".join(f" Δ{f} |" for f in fields) if extra else ""
         print("| row | r%s | r%s | raw | normalized |%s" % (ra, rb, cols))
-        print("|---|---|---|---|---|" + "---|" * (len(LAYERS) if extra else 0))
+        print("|---|---|---|---|---|" + "---|" * (len(fields) if extra else 0))
         for k, a, b, r, n in movers:
             deltas = "".join(
                 f" {full_b[k][f] - full_a[k][f]:+} |" if layered(k) else " - |"
-                for f in LAYERS) if extra else ""
+                for f in fields) if extra else ""
             print(f"| {k} | {a:.2f} s | {b:.2f} s | {r:.2f}x | {n:.2f}x |{deltas}")
     else:
         print(f"No >{thr}x normalized movers (either direction) among "
