@@ -74,8 +74,10 @@ class BenchSpec extends SparkSpec {
       val (_, first) = rec.record(query())
       assert(first.codegenCompiles >= 1, first)
       assert(first.json.contains(s""""codegen_compiles": ${first.codegenCompiles}"""))
-      val (_, repeat) = rec.record(query())
-      assert(repeat.codegenCompiles == 0, repeat)
+      // the counter is JVM-wide: the least of three repeats keeps a
+      // compile on another thread from failing the check
+      val repeats = (1 to 3).map(_ => rec.record(query())._2.codegenCompiles)
+      assert(repeats.min == 0L, repeats)
     } finally rec.close()
   }
 }
