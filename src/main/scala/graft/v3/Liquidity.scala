@@ -34,7 +34,9 @@ object Liquidity {
   }
 
   /** Fleet-scale variant: same pipeline, partitioned by `keys`
-    * (e.g. chain_name, address). Caller applies the as_of filter. */
+    * (e.g. chain_name, address). Caller applies the as_of filter.
+    * `Pool.MintBurnIndex.liquidity` repeats its float operation order
+    * on the driver: a change here changes it too. */
   def createLiqBy(mb: DataFrame, keys: Seq[String]): DataFrame = {
     val kc = keys.map(col)
     val tl = mb
@@ -70,7 +72,9 @@ object Liquidity {
     * every shuffle) partitions by `keys` (e.g. chain_name, address), so
     * the per-tick precompute parallelizes over pools instead of
     * collapsing onto one task — the same contract as [[createLiqBy]].
-    * Key columns are carried through the output. */
+    * Key columns are carried through the output.
+    * `Pool.swapTicks` repeats its float operation order on the driver:
+    * a change here changes it too. */
   def swapDFBy(liq: DataFrame, tickSpacing: Long, keys: Seq[String]): DataFrame = {
     val lastBoundary = Math.floorDiv(SwapMath.MaxTick, tickSpacing) * tickSpacing
     val kc = keys.map(col)

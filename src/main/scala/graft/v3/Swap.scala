@@ -4,11 +4,16 @@ package graft.v3
   *
   * Execution model preserved from the reference (swap.py:125–133):
   * Solidity loops tick-by-tick; here every tick's reserves are
-  * precomputed *distributed* (Liquidity.swapDF — embarrassingly
-  * parallel over pools), then the tiny per-pool tick table (bounded by
-  * 2·MAX_TICK/tickSpacing rows) is collected once per `as_of` and the
-  * branchy final math runs on driver-side scalars. Repeated swaps at
-  * one `as_of` reuse the collected precompute (v3/state.py:176–195).
+  * precomputed once per `as_of` (Pool.calcSwapDF) and the branchy
+  * final math runs on driver-side scalars. A pool whose mint/burns are
+  * at or below Pool.MaxDriverRows builds its tick table on the driver
+  * from the pool's driver index, with no Spark job; above that bound
+  * the reserves are precomputed distributed (Liquidity.swapDF —
+  * embarrassingly parallel over pools) and the tiny per-pool tick
+  * table (bounded by 2·MAX_TICK/tickSpacing rows) is collected. Both
+  * give the same doubles where Spark's liquidity sums merge in map
+  * order, as in local mode. Repeated swaps at one `as_of` reuse the
+  * precompute (v3/state.py:176–195).
   *
   * Divergence from the reference, intentional (SURVEY.md §3.2): the
   * reference's `findMax` flag is dead code — swap.py:99–102 overwrites

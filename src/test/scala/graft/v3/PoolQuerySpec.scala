@@ -5,9 +5,11 @@ import java.sql.Timestamp
 
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
+import scala.util.Try
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions.{col, lit}
@@ -16,7 +18,10 @@ import graft.SparkSpec
 
 /** The pool query API over a small seeded pool written into a temp
   * lake: the as-of getters, `createLiq` and `calcSwapDF` against
-  * plain-Scala models at event points and just after them, and the
+  * plain-Scala models at event points, just after them and at
+  * non-finite as-of values, on both paths — the driver index (the
+  * default bound) and the Spark plans (bound 0) — and against each
+  * other; the driver path's zero Spark jobs; and the Spark path's
   * as-of bound's reuse of one compiled plan across values. */
 class PoolQuerySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
@@ -92,17 +97,23 @@ class PoolQuerySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     new Pool(spark, lake, Addr, Chain)
   }
 
+  /** The same pool at driver-rows bound 0: every query on the Spark path. */
+  private lazy val sparkPool = new Pool(spark, pool.lake, Addr, Chain, driverRows = 0L)
+
+  /** `a < q` as Spark compares doubles: NaN above every number. */
+  private def before(a: Double, q: Double): Boolean = if (q.isNaN) !a.isNaN else a < q
+
   /** The latest swap strictly before `q`, ties inside one `as_of` to
     * the higher log index. */
   private def lastSwapBefore(q: Double): Option[SwapEv] =
-    swapEvs.filter(_.ev.asOf < q).maxByOption(s => (s.ev.asOf, s.ev.log))
+    swapEvs.filter(s => before(s.ev.asOf, q)).maxByOption(s => (s.ev.asOf, s.ev.log))
 
   /** Per tick with a non-zero lower or upper net delta before `q`, the
     * running sum of those deltas. */
   private def liquidity(q: Double): Seq[(Long, Double)] = {
     val lower = mutable.Map.empty[Long, Long].withDefaultValue(0L)
     val upper = mutable.Map.empty[Long, Long].withDefaultValue(0L)
-    mbEvs.filter(_.ev.asOf < q).foreach { m =>
+    mbEvs.filter(m => before(m.ev.asOf, q)).foreach { m =>
       lower(m.lower) += m.amount * m.typ
       upper(m.upper) -= m.amount * m.typ
     }
@@ -124,24 +135,44 @@ class PoolQuerySpec extends SparkSpec with AdaptiveSparkPlanHelper {
     qs
   }
 
+  /** As-of values Spark orders specially: `as_of < NaN` holds for every
+    * event, and -0.0 equals 0.0. */
+  private val SpecialAsOfs = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0)
+
+  private lazy val paths = Seq("driver" -> pool, "spark" -> sparkPool)
+
+  /** Doubles as their raw bits, so equality is bit-identity. */
+  private def bits(p: Product): Seq[Any] = p.productIterator.map {
+    case d: Double => java.lang.Double.doubleToRawLongBits(d)
+    case x => x
+  }.toSeq
+
   test("getPriceAt and getTickAt equal the latest swap strictly before as_of") {
-    asOfs.foreach { q =>
+    (asOfs ++ SpecialAsOfs).foreach { q =>
       val want = lastSwapBefore(q)
-      assert(pool.getPriceAt(q) == want.map(_.sqrtPriceX96), s"getPriceAt($q)")
-      assert(pool.getTickAt(q) == want.map(_.tick), s"getTickAt($q)")
+      for ((path, p) <- paths) {
+        assert(p.getPriceAt(q) == want.map(_.sqrtPriceX96), s"$path getPriceAt($q)")
+        assert(p.getTickAt(q) == want.map(_.tick), s"$path getTickAt($q)")
+      }
     }
   }
 
   test("createLiq equals the plain-Scala liquidity fold") {
-    asOfs.foreach { q =>
-      val got = pool.createLiq(q).collect().map(r => (r.getLong(0), r.getDouble(1)))
-        .toSeq.sortBy(_._1)
-      assert(got == liquidity(q), s"createLiq($q)")
+    assert(pool.createLiq(asOfs(3)).queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(!sparkPool.createLiq(asOfs(3)).queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    (asOfs ++ SpecialAsOfs).foreach { q =>
+      val Seq(d, s) = paths.map { case (path, p) =>
+        val df = p.createLiq(q)
+        val got = df.collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq.sortBy(_._1)
+        assert(got == liquidity(q), s"$path createLiq($q)")
+        (df.schema, got.map(bits))
+      }
+      assert(d == s, s"createLiq($q): the paths' schemas or bits differ")
     }
   }
 
   test("calcSwapDF returns the ticks of the same pipeline built with lit(as_of)") {
-    val qs = asOfs.filter(q => lastSwapBefore(q).isDefined)
+    val qs = (asOfs ++ SpecialAsOfs).filter(q => lastSwapBefore(q).isDefined)
     assert(qs.size >= 40)
     qs.foreach { q =>
       val inlined = Liquidity.swapDF(
@@ -152,8 +183,104 @@ class PoolQuerySpec extends SparkSpec with AdaptiveSparkPlanHelper {
         .orderBy(col("tick_a")).collect().toSeq
         .map(r => Swap.SwapTick(r.getDouble(0), r.getLong(1), r.getLong(2),
           r.getDouble(3), r.getDouble(4), r.getDouble(5), r.getDouble(6)))
-      assert(pool.calcSwapDF(q)._1 == inlined, s"calcSwapDF($q)")
+      val Seq((dt, dr), (st, sr)) = paths.map(_._2.calcSwapDF(q))
+      assert(dt.map(bits) == inlined.map(bits) && st.map(bits) == inlined.map(bits),
+        s"calcSwapDF($q) ticks")
+      assert(bits(dr) == bits(sr), s"calcSwapDF($q) in-range values")
     }
+    (asOfs ++ SpecialAsOfs).filter(q => lastSwapBefore(q).isEmpty).foreach { q =>
+      val Seq(d, s) = paths.map(p => Try(p._2.calcSwapDF(q)).failed.get.getMessage)
+      assert(d == "Pool not initialized" && d == s, s"calcSwapDF($q)")
+    }
+  }
+
+  test("warm driver-path calls start no Spark job; the Spark path starts one or more") {
+    val token0 = "0x00000000000000000000000000000000000000a0"
+    // fresh as-of values: the swap memo holds none of them
+    val Seq(q, qCold, qSwap) = Seq(asOfs(20), asOfs(21) + 0.00002, asOfs(22) + 0.00002)
+    for ((path, p) <- paths) {
+      // reads the factory row and builds the driver indexes
+      p.fee; p.getPriceAt(q); p.createLiq(q).collect()
+      val calls = Seq[(String, () => Any)](
+        "getPriceAt" -> (() => p.getPriceAt(q)),
+        "getTickAt" -> (() => p.getTickAt(q)),
+        "createLiq(q).collect()" -> (() => p.createLiq(q).collect()),
+        "cold calcSwapDF" -> (() => p.calcSwapDF(qCold)),
+        "cold swapIn" -> (() => p.swapIn(Swap.Calldata(qSwap, token0, 1000.0), warn = false)))
+      calls.foreach { case (what, call) =>
+        val jobs = jobsStarted(call())
+        if (path == "driver") assert(jobs == 0, s"$path $what started $jobs jobs")
+        else assert(jobs >= 1, s"$path $what started no job")
+      }
+    }
+  }
+
+  test("the driver fold adds each partition's partial sums in Spark's order") {
+    // amounts across 18 decimal orders on five ticks, so the sums round
+    // and their order shows in the bits
+    val rnd = new scala.util.Random(7L)
+    val ticks = Seq(-120L, -60L, 0L, 60L, 120L)
+    val rows = (0 until 600).map { i =>
+      val lo = ticks(rnd.nextInt(4))
+      Row(1000.0 + i / 10 + (i % 10) / 1e4, lo, lo + 60L * (1 + rnd.nextInt(2)),
+        rnd.nextDouble() * math.pow(10, rnd.nextInt(18)), if (rnd.nextBoolean()) 1.0 else -1.0,
+        1000L + i / 10)
+    }
+    val schema = new org.apache.spark.sql.types.StructType().add("as_of", "double")
+      .add("tick_lower", "long").add("tick_upper", "long").add("amount", "double")
+      .add("type_of_event", "double").add("block_number", "long")
+    val mb = spark.createDataFrame(rows.asJava, schema).repartition(3).cache()
+    assert(mb.rdd.getNumPartitions == 3 && mb.count() == 600L)
+    val ix = Pool.MintBurnIndex(mb).get
+    val oneFold = Pool.MintBurnIndex(mb.coalesce(1)).get
+    val qs = Seq(1010.0, 1030.00035, 1059.0, 2000.0)
+    val sums = qs.map { q =>
+      val want = Liquidity.createLiq(mb, q).collect()
+        .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
+      val (t, l) = ix.liquidity(q)
+      assert(t.zip(l).toSeq.map(bits) == want.map(bits), s"liquidity($q)")
+      val (t1, l1) = oneFold.liquidity(q)
+      t1.zip(l1).toSeq.map(bits) == want.map(bits)
+    }
+    // one running sum over all rows would not give Spark's bits
+    assert(sums.contains(false))
+    mb.unpersist()
+  }
+
+  test("maxSupported from the driver indexes equals the Spark aggregate; -1 when empty") {
+    val want = math.min(swapEvs.map(_.ev.block).max, mbEvs.map(_.ev.block).max)
+    val fresh = new Pool(spark, pool.lake, Addr, Chain)
+    fresh.getPriceAt(asOfs(1)); fresh.createLiq(asOfs(1))
+    assert(jobsStarted(assert(fresh.maxSupported == want)) == 0)
+    assert(sparkPool.maxSupported == want)
+    val none = "0x00000000000000000000000000000000000000bb"
+    assert(new Pool(spark, pool.lake, none, Chain).maxSupported == -1L)
+    assert(new Pool(spark, pool.lake, none, Chain, driverRows = 0L).maxSupported == -1L)
+  }
+
+  test("a frame of exactly driverRows rows takes the driver path, one more row the Spark path") {
+    val (nSwaps, nMbs) = (swapEvs.size.toLong, mbEvs.size.toLong)
+    val q = asOfs(12)
+    val atSwaps = new Pool(spark, pool.lake, Addr, Chain, driverRows = nSwaps)
+    val overSwaps = new Pool(spark, pool.lake, Addr, Chain, driverRows = nSwaps - 1)
+    atSwaps.getPriceAt(q); overSwaps.getPriceAt(q)
+    assert(jobsStarted(atSwaps.getPriceAt(q)) == 0)
+    assert(jobsStarted(overSwaps.getPriceAt(q)) >= 1)
+    def local(p: Pool) = p.createLiq(q).queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+    assert(local(new Pool(spark, pool.lake, Addr, Chain, driverRows = nMbs)))
+    assert(!local(new Pool(spark, pool.lake, Addr, Chain, driverRows = nMbs - 1)))
+  }
+
+  test("a handle answers the same before and after unpersistCaches") {
+    val h = new Pool(spark, pool.lake, Addr, Chain)
+    val qs = Seq(asOfs(7), asOfs(25), 2000.0)
+    def answers() = qs.map(q =>
+      (h.getPriceAt(q), h.createLiq(q).collect().toSeq, h.calcSwapDF(q)))
+    val first = answers()
+    h.unpersistCaches()
+    // the indexes went with the frames: the next query rebuilds one
+    assert(jobsStarted(h.getTickAt(qs.head)) >= 1)
+    assert(answers() == first)
   }
 
   private def codegenBodies(df: DataFrame): Seq[String] = {
@@ -165,8 +292,8 @@ class PoolQuerySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("two as-of values generate byte-identical whole-stage code") {
     val Seq(q1, q2) = Seq(asOfs(10), asOfs(30))
-    for (df <- Seq[Double => DataFrame](q => pool.propertyAt(q, "tick"),
-                                        q => pool.createLiq(q))) {
+    for (df <- Seq[Double => DataFrame](q => sparkPool.propertyAt(q, "tick"),
+                                        q => Liquidity.createLiq(pool.mintBurns, q))) {
       val (a, b) = (codegenBodies(df(q1)), codegenBodies(df(q2)))
       assert(a.nonEmpty && a == b)
     }
@@ -174,12 +301,12 @@ class PoolQuerySpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   test("a getPriceAt at a new as-of value compiles no code") {
     val compiles = CodegenMetrics.METRIC_COMPILATION_TIME
-    pool.getPriceAt(asOfs(5))
+    sparkPool.getPriceAt(asOfs(5))
     // the counter is JVM-wide: the least of three fresh values keeps a
     // compile on another thread from failing the check
     val added = asOfs.slice(6, 9).map { q =>
       val before = compiles.getCount
-      pool.getPriceAt(q)
+      sparkPool.getPriceAt(q)
       compiles.getCount - before
     }
     assert(added.min == 0L, added)
